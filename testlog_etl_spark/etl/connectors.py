@@ -209,18 +209,17 @@ def write_elasticsearch(
     ConnectorUnavailable with the public coordinate when the
     elasticsearch-spark JAR is absent (this sandbox), pointing at the
     parquet analog with identical id/dedup semantics."""
-    from testlog_etl_spark.etl.lineage import deterministic_id
+    from testlog_etl_spark.etl.sink import dedupe_with_id
 
-    spark = df.sparkSession
     _require_class(
-        spark,
+        df.sparkSession,
         "org.elasticsearch.spark.sql.DefaultSource",
         "org.elasticsearch:elasticsearch-spark-30_2.13:<es-version>",
         "testlog_etl_spark.etl.sink.write_idempotent",
     )
-    out = df.withColumn("_id", deterministic_id(*id_cols)).dropDuplicates(["_id"])
     (
-        out.write.format("org.elasticsearch.spark.sql")
+        dedupe_with_id(df, id_cols)
+        .write.format("org.elasticsearch.spark.sql")
         .options(**elasticsearch_sink_options(index, es_nodes, "_id"))
         .mode("append")
         .save()

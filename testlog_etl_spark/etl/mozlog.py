@@ -10,8 +10,10 @@ the duration.
 Spark realization: the "state machine" is order-insensitive once lines
 carry their own action + timestamp, so it is ONE hash aggregate
 (groupBy test) with conditional aggregates -- no Python boundary, full
-codegen, and the same plan serves a 100 TB log corpus: the only shuffle
-is on (suite_key, test), which is high-cardinality and unskewed.
+codegen, and the same plan serves a 100 TB log corpus. `test_results`
+shuffles once, on (suite_key, test), which is high-cardinality and
+unskewed; `suite_summaries` adds a second shuffle, on suite_key. A sink
+deduping on the same keys (etl/sink.py::dedupe_with_id) adds none.
 
 Input line schema (mozlog public format): action, time (epoch seconds,
 double), test, subtest, status, expected, message, plus a `suite_key`
@@ -23,36 +25,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# mozlog: a missing `expected` on a status/end line means the status
+# itself was expected; unexpected iff expected is present and differs
+_UNEXPECTED = "status <> coalesce(expected, status)"
+_RESULT_AGGS = [
+    "min(CASE WHEN action = 'test_start' THEN `time` END) AS start_time",
+    "max(CASE WHEN action = 'test_end' THEN `time` END) AS end_time",
+    "first(CASE WHEN action = 'test_end' THEN status END, true) AS status",
+    "first(CASE WHEN action = 'test_end' THEN coalesce(expected, status) END, true) AS expected",
+    "sum(CAST(action = 'test_status' AS BIGINT)) AS subtest_count",
+    f"sum(CAST(action = 'test_status' AND NOT ({_UNEXPECTED}) AS BIGINT)) AS subtest_pass",
+    f"sum(CAST(action = 'test_status' AND ({_UNEXPECTED}) AS BIGINT)) AS subtest_fail",
+    f"max(CASE WHEN action = 'test_end' THEN {_UNEXPECTED} END) AS end_unexpected",
+]
+_RESULT_COLS = [
+    "suite_key", "test", "start_time", "end_time", "status", "expected",
+    "subtest_count", "subtest_pass", "subtest_fail",
+    "end_time - start_time AS duration",
+    # a test is ok iff its end status was expected and no subtest was
+    # unexpected (reference: `ok` flag on the test doc)
+    "NOT coalesce(end_unexpected, false) AND subtest_fail = 0 AS ok",
+]
 def test_results(lines: DataFrame) -> DataFrame:
-    """Per-test result docs from raw mozlog lines."""
-    a = F.col("action")
-    is_status = a == "test_status"
-    # mozlog: a missing `expected` on a status/end line means the status
-    # itself was expected; unexpected iff expected is present and differs
-    unexpected = F.col("status") != F.coalesce(F.col("expected"), F.col("status"))
+    """Per-test result docs from raw mozlog lines: one filter, one
+    aggregate, one projection."""
     return (
-        lines.filter(a.isin("test_start", "test_status", "test_end"))
+        lines.filter("action IN ('test_start', 'test_status', 'test_end')")
         .groupBy("suite_key", "test")
-        .agg(
-            F.min(F.when(a == "test_start", F.col("time"))).alias("start_time"),
-            F.max(F.when(a == "test_end", F.col("time"))).alias("end_time"),
-            F.first(F.when(a == "test_end", F.col("status")), ignorenulls=True).alias("status"),
-            F.first(F.when(a == "test_end", F.coalesce(F.col("expected"), F.col("status"))), ignorenulls=True).alias(
-                "expected"
-            ),
-            F.sum(is_status.cast("long")).alias("subtest_count"),
-            F.sum((is_status & ~unexpected).cast("long")).alias("subtest_pass"),
-            F.sum((is_status & unexpected).cast("long")).alias("subtest_fail"),
-            F.max(F.when(a == "test_end", unexpected)).alias("end_unexpected"),
-        )
-        .withColumn("duration", F.col("end_time") - F.col("start_time"))
-        .withColumn(
-            "ok",
-            # a test is ok iff its end status was expected and no subtest
-            # was unexpected (reference: `ok` flag on the test doc)
-            (~F.coalesce(F.col("end_unexpected"), F.lit(False))) & (F.col("subtest_fail") == 0),
-        )
-        .drop("end_unexpected")
+        .agg(*map(F.expr, _RESULT_AGGS))
+        .selectExpr(*_RESULT_COLS)
     )
 
 

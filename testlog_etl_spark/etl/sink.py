@@ -5,20 +5,35 @@ deterministic `_id` (the etl key chain), so at-least-once redelivery
 plus overwrite-by-id yields exactly-once EFFECT; S3 JSONL blocks are the
 inter-stage bus (activedata_etl/sinks/).
 
-Spark realization: deterministic `_id` (lineage.deterministic_id) +
-`dropDuplicates(_id)` + dynamic-partition-overwrite parquet. Re-running
-a batch rewrites exactly the partitions it touches -- the
-`foreachBatch` form of this is the streaming exactly-once story (SS2.9).
+Spark realization: `dropDuplicates(natural key)`, then the deterministic
+`_id` (lineage.deterministic_id) derived from that key, then
+dynamic-partition-overwrite parquet. Re-running a batch rewrites exactly
+the partitions it touches -- the `foreachBatch` form of this is the
+streaming exactly-once story (SS2.9).
+
+Deduping on the key columns rather than on their hash lets the dedupe
+reuse the hash partitioning of an upstream aggregate grouped by the same
+key: a mozlog tests frame plans 1 shuffle (its aggregate's), a suites
+frame 2 and a text steps frame 1. A frame with no such aggregate (the
+Perfherder docs) still pays 1 shuffle for the dedupe itself. The one
+difference from hash-dedupe: two distinct keys whose `_id`s collide stay
+two rows (xxhash64 skips nulls, so `(NULL,'a')` and `('a',NULL)` share an
+`_id`); an id-keyed sink such as Elasticsearch then keeps the last one.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from testlog_etl_spark.util import persist_once
 
 from testlog_etl_spark.etl.lineage import deterministic_id
+
+
+def dedupe_with_id(df: DataFrame, id_cols: list[str]) -> DataFrame:
+    """One row per natural key, stamped with its deterministic `_id`: the
+    frame every idempotent sink writes (at-least-once -> effectively-once)."""
+    return df.dropDuplicates(id_cols).withColumn("_id", deterministic_id(*id_cols))
 
 
 def write_idempotent(
@@ -28,19 +43,14 @@ def write_idempotent(
     partition_by: list[str] | None = None,
     fmt: str = "parquet",
 ) -> None:
-    """Write with a deterministic `_id`; duplicate ids within the batch
-    are dropped (at-least-once -> effectively-once)."""
-    spark = df.sparkSession
-    out = df.withColumn("_id", deterministic_id(*id_cols)).dropDuplicates(["_id"])
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        w = out.write.mode("overwrite").format(fmt)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    """Write ``dedupe_with_id(df, id_cols)``, overwriting only the
+    partitions the batch touches (a writer option, so the session's
+    overwrite mode is left alone)."""
+    w = dedupe_with_id(df, id_cols).write.mode("overwrite").format(fmt)
+    w = w.option("partitionOverwriteMode", "dynamic")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.save(path)
 
 
 def split_sink(df: DataFrame, writers: list) -> None:

@@ -16,10 +16,64 @@ from testlog_etl_spark.etl.sink import split_sink, write_idempotent
 from testlog_etl_spark.etl.text_log import parse_steps
 
 
+# edge lines appended to the fixture: a test with no test_end, status
+# lines with a null expected, a line delivered twice, and a FAIL that was
+# expected to fail
+_MOZLOG_EDGES = [
+    ("suite9", "test_start", 100.0, "no_end", None, None, None),
+    ("suite9", "test_status", 101.0, "no_end", "a", "PASS", None),
+    ("suite9", "test_status", 102.0, "no_end", "b", "FAIL", None),
+    ("suite9", "test_start", 200.0, "twice", None, None, None),
+    ("suite9", "test_status", 201.0, "twice", "a", "FAIL", "PASS"),
+    ("suite9", "test_status", 201.0, "twice", "a", "FAIL", "PASS"),
+    ("suite9", "test_end", 209.0, "twice", None, "OK", None),
+    ("suite9", "test_end", 209.0, "twice", None, "OK", None),
+    ("suite9", "test_start", 300.0, "known_fail", None, None, None),
+    ("suite9", "test_status", 301.0, "known_fail", "a", "FAIL", "FAIL"),
+    ("suite9", "test_end", 304.0, "known_fail", None, "FAIL", "FAIL"),
+]
+
+
+def _replay_mozlog(rows):
+    """Pure-Python twin of mozlog.test_results: the reference's per-test
+    state machine, replayed line by line (statuses are never null here)."""
+    docs = {}
+    for suite_key, action, t, test, _subtest, status, expected in rows:
+        d = docs.setdefault(
+            (suite_key, test),
+            dict(suite_key=suite_key, test=test, start_time=None, end_time=None, status=None, expected=None,
+                 subtest_count=0, subtest_pass=0, subtest_fail=0, end_unexpected=False),
+        )
+        unexpected = expected is not None and status != expected
+        if action == "test_start":
+            d["start_time"] = t if d["start_time"] is None else min(d["start_time"], t)
+        elif action == "test_status":
+            d["subtest_count"] += 1
+            d["subtest_fail" if unexpected else "subtest_pass"] += 1
+        elif action == "test_end":
+            d["end_time"] = t if d["end_time"] is None else max(d["end_time"], t)
+            d["status"], d["expected"], d["end_unexpected"] = status, expected or status, unexpected
+    for d in docs.values():
+        has_both = None not in (d["start_time"], d["end_time"])
+        d["duration"] = d["end_time"] - d["start_time"] if has_both else None
+        d["ok"] = not d.pop("end_unexpected") and d["subtest_fail"] == 0
+    return docs
+
+
 def test_mozlog_test_results(spark):
-    res = mozlog_results(fixtures.mozlog_lines(spark, n_suites=2, n_tests=10))
+    lines = fixtures.mozlog_rows(n_suites=2, n_tests=10) + _MOZLOG_EDGES
+    res = mozlog_results(spark.createDataFrame(lines, fixtures.MOZLOG_SCHEMA))
     rows = {(r["suite_key"], r["test"]): r for r in res.collect()}
-    assert len(rows) == 20  # 2 suites x 10 tests
+    assert len(rows) == 23  # 2 suites x 10 tests + 3 edge tests
+    assert {k: r.asDict() for k, r in rows.items()} == _replay_mozlog(lines)
+
+    r = rows[("suite9", "no_end")]
+    assert (r["status"], r["end_time"], r["duration"]) == (None, None, None)
+    assert (r["subtest_pass"], r["ok"]) == (2, True)  # null expected: the status was expected
+    r = rows[("suite9", "twice")]
+    assert (r["subtest_count"], r["subtest_fail"], r["ok"]) == (2, 2, False)
+    r = rows[("suite9", "known_fail")]
+    assert (r["subtest_fail"], r["status"], r["expected"], r["ok"]) == (0, "FAIL", "FAIL", True)
 
     # test 3: all subtests pass, end OK
     r = rows[("suite0", "dom/test_003.html")]
@@ -87,17 +141,38 @@ def test_lcov_coverage_parse(spark):
 
 def test_idempotent_sink_rerun(spark, tmp_path):
     """T9: re-running the same batch yields the same rows (exactly-once
-    effect), and duplicate ids within a batch collapse."""
+    effect), rows equal on the id columns collapse to one, and distinct
+    keys whose `_id`s collide stay distinct rows."""
     path = str(tmp_path / "sink")
     df = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (2, "a", 20.0), (3, "b", 30.0)],
-        ["k", "part", "v"],
+        [("1", "a", 10.0), ("2", "a", 20.0), ("2", "a", 20.0), ("2", "a", 21.0), ("3", "b", 30.0),
+         # xxhash64 skips nulls, so these two keys share one _id
+         (None, "b", 40.0), ("b", None, 50.0)],
+        "k string, part string, v double",
     )
     write_idempotent(df, path, id_cols=["k", "part"], partition_by=["part"])
     write_idempotent(df, path, id_cols=["k", "part"], partition_by=["part"])  # re-run
     out = spark.read.parquet(path)
-    assert out.count() == 3
-    assert out.select(F.count_distinct("_id")).first()[0] == 3
+    keys = [(r["k"], r["part"]) for r in out.collect()]
+    assert sorted(keys, key=repr) == sorted([("1", "a"), ("2", "a"), ("3", "b"), (None, "b"), ("b", None)], key=repr)
+    collided = out.filter(F.col("k").isNull() | F.col("part").isNull())
+    assert collided.select(F.count_distinct("_id")).first()[0] == 1
+    assert out.select(F.count_distinct("_id")).first()[0] == 4
+
+
+def test_idempotent_sink_overwrites_only_touched_partitions(spark, tmp_path):
+    """The dynamic overwrite is scoped to the writer: rewriting partition
+    `a` keeps partition `b` on disk and leaves the session's mode alone."""
+    path = str(tmp_path / "sink")
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf)
+    write_idempotent(spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], ["k", "part", "v"]),
+                     path, id_cols=["k", "part"], partition_by=["part"])
+    write_idempotent(spark.createDataFrame([(1, "a", 9.0)], ["k", "part", "v"]),
+                     path, id_cols=["k", "part"], partition_by=["part"])
+    out = sorted((r["k"], r["part"], r["v"]) for r in spark.read.parquet(path).collect())
+    assert out == [(1, "a", 9.0), (2, "b", 2.0)]
+    assert spark.conf.get(conf) == before == "STATIC"
 
 
 def test_split_sink_fans_out(spark, tmp_path):

@@ -1228,3 +1228,23 @@ def test_matrix_profile_ab_pair_lag_axis(spark):
     vlow = vplan.lower()
     assert "cartesianproduct" not in vlow and "nestedloop" not in vlow
     assert "_jbk" in vplan  # bucket fan-out key reaches the equi join
+
+
+def test_idempotent_sink_dedupe_reuses_aggregate_exchange(spark):
+    """The sink dedupes on the natural key, so an upstream aggregate
+    grouped by that key already satisfies it: the mozlog tests frame
+    shuffles once, the suites frame twice, the text steps frame once."""
+    from pyspark.sql import functions as F
+
+    from testlog_etl_spark.etl import fixtures, lineage, mozlog, text_log
+    from testlog_etl_spark.etl.sink import dedupe_with_id
+
+    def exchanges(df, id_cols):
+        df = lineage.stamp(df.select("*", F.lit("artifact").alias("artifact")),
+                           lineage.deterministic_id(*id_cols), "artifact", "stage")
+        return plan_of(dedupe_with_id(df, id_cols), "simple").count("Exchange hashpartitioning")
+
+    results = mozlog.test_results(fixtures.mozlog_lines(spark))
+    assert exchanges(results, ["suite_key", "test"]) == 1
+    assert exchanges(mozlog.suite_summaries(results), ["suite_key"]) == 2
+    assert exchanges(text_log.parse_steps(fixtures.text_log_lines(spark)), ["log_key", "step"]) == 1
