@@ -16,7 +16,7 @@ so bytes-on-disk for low-cardinality columns is proportional to the
 RUN COUNT, not the row count -- which the writer's sort order controls
 entirely. Counting runs under a candidate ordering is a global
 sequential dependency (value != previous value); the distributed form
-mirrors ``operators/scan.py``: range-partition on the ordering, count
+is a hierarchical scan: range-partition on the ordering, count
 intra-partition boundaries with one Arrow pass, and stitch the
 (partition-count-bounded) edge values on the driver.
 """

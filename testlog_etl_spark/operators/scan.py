@@ -1,976 +1,287 @@
-"""Distributed global prefix scan: rank and running sum in an arbitrary
-total order WITHOUT a single-partition window.
+"""Distributed global scan: rank, running sum and running max in an
+arbitrary total order WITHOUT a single-partition window.
 
 Spark plans ``Window.orderBy(...)`` with no ``partitionBy`` as ONE task
 holding the entire input -- fine over a frame that is bounded by
 construction (histogram buckets, top-100 lists), fatal over a grain
-that scales with the data (per-customer / per-part rollups are ~billions
-of rows at 100 TB TPC-H). This module is the general form of the
-hierarchical-scan pattern ``operators/packing.py::with_stream_offsets``
-introduced for token streams (reference parity: the reference's
-row-at-a-time engines sort-then-scan on one node; Spark-first is a
-range shuffle + bounded driver merge):
+that scales with the data (per-customer / per-part rollups are
+~billions of rows at 100 TB TPC-H). The reference's row-at-a-time
+engines answer rank, percentile and running-aggregate questions by
+sorting on one node; ``global_scan`` is the Spark-first restatement,
+computed entirely in-plan -- no range shuffle, no Python worker, no
+join:
 
-1. range-partition on the order columns and sort within partitions, so
-   partition p holds an order-contiguous, order-sorted slice and
-   partition ids increase along the order;
-2. one tiny per-partition aggregate (count + sum) -> driver: bounded by
-   the PARTITION COUNT, never the data size;
-3. exclusive-prefix the per-partition totals on the driver, capture the
-   (pid -> rank_offset, sum_offset) map in the scan closure;
-4. intra-partition row_number / running sum via a raw-Arrow
-   ``mapInArrow`` pass over the already-sorted partitions -- NO second
-   exchange. (The first implementation used
-   ``Window.partitionBy("_pid")``, which Catalyst satisfies with a full
-   hashpartitioning(_pid) Exchange on top of the range shuffle -- two
-   full-data shuffles, and 32 pids hashed into 32 reducers collide. The
-   r09 form used ``mapInPandas``, whose pandas float64 round trip
-   conflates NaN with NULL in pass-through columns -- raw Arrow batches
-   keep them distinct and reuse pass-through arrays zero-copy.)
+1. boundaries: ONE bounded driver job takes the ``64*nb`` rows with the
+   smallest ``xxhash64`` of the order tuple (a uniform row sample that
+   does not favour early partitions) and picks ``nb-1`` evenly spaced
+   boundary tuples per order, so boundaries follow row quantiles;
+2. bucket id: ``#{b < struct(prefix)}`` (``>`` for a descending
+   prefix), where the prefix is the longest run of atomic leading order
+   columns sharing the first column's direction. A count of boundaries
+   below a value is monotone in the value for ANY boundary set, and
+   Spark's struct ordering places null, NaN and +-0 exactly as its sort
+   does, so buckets are order-contiguous by construction: boundaries
+   only shape skew, never results. A non-atomic leading column gives
+   one bucket (ranks stay exact);
+3. rollup: ONE explode+aggregate driver job computes every spec's
+   per-bucket count, sum and max (<= n_specs*nb rows), folded into
+   exclusive offsets and prefix-max carries as LITERAL arrays;
+4. per row: offset[bucket] + row_number / running sum / running max
+   over ``Window.partitionBy(bucket).orderBy(order)`` -- one hash
+   exchange per distinct order (specs sharing an order share one
+   bucket column and one window, which CollapseWindow plans once).
 
-Total cost: ONE full-data range shuffle (plus the 32-row totals agg);
-grand totals (row count, value sum) fall out of step 3 for free, so
-callers that need ``n`` or ``tot`` alongside the scan pay no extra job.
+The bucket count is ``min(max(2, num_buckets or defaultParallelism),
+256)``: it grows with the cluster but is capped, so the plan literals
+(<= 255 boundary structs per order) and the sample collect (<= 16384
+rows) stay bounded on any cluster.
 
-FP note: the running sum associates as (partition/batch carry) + an
-intra-batch sequential cumsum -- the same association family as the
-windowed form it replaced (offset + intra-partition fold). Callers that
-need ENGINE-EXACT cum boundaries (oracle differential) must snap the
-value column to a dyadic grid first (the 2^-20 snap used throughout
-queries/), which makes every fold order bit-identical.
+FP note: the running sum associates as (bucket offset) + an
+intra-bucket sequential fold. Callers that need ENGINE-EXACT cum values
+(oracle differential) must keep the value column integral or snap it
+to a dyadic grid first (the 2^-20 snap used throughout queries/), which
+makes every fold order bit-identical. Max is a lattice join, so the
+running max has no such caveat.
 
-Lifetime note: the range-partitioned intermediate is persisted so the
-totals job and the main scan see the SAME sampled partition boundaries
-(repartitionByRange samples; an unpersisted recompute could re-sample
-and mismatch the offset map). The cached blocks are NOT eagerly freed
-when the returned plan's action finishes -- they live until Spark's
-ContextCleaner garbage-collects the unreferenced RDD (or the session
-ends). Callers running many scans in one long session can pass
-``persist_handles`` and unpersist after their action.
+Lifetime note: the input is persisted so the two build jobs and the
+main pass compute the upstream once; ``persist_handles`` receives it so
+callers can ``unpersist()`` after their action. Boundaries and offsets
+are literals in the returned plan, so a recompute after an unpersist
+gives the same answer.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import AtomicType, BinaryType, StructType
 
-from testlog_etl_spark.util import persist_once
+from testlog_etl_spark.util import const_array, persist_once
+
+MAX_BUCKETS = 256
+SAMPLE_PER_BUCKET = 64
 
 
-def global_rank_cumsum(
-    df: DataFrame,
-    order_by: Sequence[Column],
-    val_col: str | None = None,
-    rank_out: str = "i",
-    cum_out: str = "cum",
-    n_out: str | None = None,
-    total_out: str | None = None,
-    num_parts: int = 32,
-    persist_handles: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Add a global ``rank_out`` = row_number over ``order_by`` (callers
-    must make the order TOTAL -- include a unique tie-break column --
-    for deterministic output) and, when ``val_col`` is given,
-    ``cum_out`` = inclusive running sum of ``val_col`` in that order.
-    ``n_out``/``total_out`` optionally attach the global row count and
-    value sum as constant columns (free: they are the final driver
-    accumulator values). ``order_by`` takes Column sort expressions, so
-    descending orders (``F.col("rev").desc()``) work.
+@dataclass(frozen=True)
+class ScanSpec:
+    """One scan over ``order``: column names, ascending, or ``"name
+    desc"``. Make the order TOTAL (a unique tie-break last) for
+    deterministic ranks. Every output is a column name; None skips it.
 
-    Pass-through columns must be Arrow-convertible (the scan streams
-    each partition through ``mapInArrow``); every current caller's are.
-    If ``persist_handles`` is given, the persisted range-partitioned
-    intermediate is appended so the caller can ``unpersist()`` it after
-    its action (see module docstring for why eager unpersist inside
-    this function would be unsafe).
+    - ``rank``: global row_number (long);
+    - ``cum``: inclusive running sum of ``val`` (double; NULL adds 0);
+    - ``max``: running max of ``val`` (double), over strictly preceding
+      rows when ``exclusive`` (NULL for the global first row). NULL and
+      NaN values are skipped; a NULL or +-inf result surfaces as NULL;
+    - ``n`` / ``total``: global row count (long) / sum of ``val``
+      (double) as constant columns;
+    - ``rank_range=(lo, hi)``: keep only the rows of buckets whose ranks
+      meet [lo, hi] -- a page consumer's pruning; surviving ranks are
+      unchanged. Rank-only and single-spec, because it drops rows.
     """
-    order_by = list(order_by)
-    val = F.coalesce(F.col(val_col).cast("double"), F.lit(0.0)) if val_col else F.lit(0.0)
-    ranged = persist_once(
-        df.withColumn("_val0", val)
-        .repartitionByRange(num_parts, *order_by)
-        .sortWithinPartitions(*order_by)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    if persist_handles is not None:
-        persist_handles.append(ranged)
-    totals = ranged.groupBy("_pid").agg(
-        F.count(F.lit(1)).alias("_c"), F.sum("_val0").alias("_s")
-    ).collect()
-    n_acc, s_acc = 0, 0.0
-    off_map: dict[int, tuple[int, float]] = {}
-    for row in sorted(totals, key=lambda r: r["_pid"]):
-        off_map[row["_pid"]] = (n_acc, s_acc)
-        n_acc += row["_c"]
-        s_acc += row["_s"] or 0.0
 
-    passthrough = [f for f in ranged.schema.fields if f.name not in ("_pid", "_val0")]
-    out_fields = list(passthrough) + [StructField(rank_out, LongType())]
-    if val_col:
-        out_fields.append(StructField(cum_out, DoubleType()))
-    out_schema = StructType(out_fields)
-    names = [f.name for f in out_fields]
-    keep_names = [f.name for f in passthrough]
-    want_cum = bool(val_col)
-
-    # mapInArrow, NOT mapInPandas (r10): pandas float64 has ONE missing
-    # marker, so an Arrow->pandas->Arrow round trip silently turns NaN
-    # into NULL in every pass-through float column -- a NaN group key
-    # (or NaN metric) came out of the r09 scan as a null and merged
-    # with the real null group. Raw Arrow batches keep null and NaN
-    # distinct (and decimals/timestamps exact); the scan only APPENDS
-    # columns, so pass-through arrays are reused zero-copy.
-    def scan(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        roff: int | None = None
-        carry = 0.0
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            if roff is None:
-                pid = b.column(b.schema.get_field_index("_pid"))[0].as_py()
-                roff, carry = off_map.get(int(pid), (0, 0.0))
-            n = b.num_rows
-            arrays = [b.column(b.schema.get_field_index(c)) for c in keep_names]
-            arrays.append(pa.array(np.arange(roff + 1, roff + n + 1, dtype="int64")))
-            roff += n
-            if want_cum:
-                vals = b.column(b.schema.get_field_index("_val0")).to_numpy(
-                    zero_copy_only=False
-                )
-                cs = vals.cumsum() + carry
-                carry = float(cs[-1])
-                arrays.append(pa.array(cs, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    out = ranged.mapInArrow(scan, out_schema)
-    if n_out:
-        out = out.withColumn(n_out, F.lit(n_acc).cast("long"))
-    if total_out:
-        out = out.withColumn(total_out, F.lit(s_acc).cast("double"))
-    return out
+    order: tuple[str, ...]
+    rank: str | None = None
+    val: str | None = None
+    cum: str | None = None
+    max: str | None = None
+    exclusive: bool = False
+    n: str | None = None
+    total: str | None = None
+    rank_range: tuple[int, int] | None = None
 
 
-def global_rank_inplan(
+def global_scan(
     df: DataFrame,
-    key: str,
-    *,
-    tiebreak: Sequence[str] = (),
-    descending: bool = False,
-    val_col: str | None = None,
-    rank_out: str = "i",
-    cum_out: str = "cum",
-    n_out: str | None = None,
-    total_out: str | None = None,
-    num_buckets: int | None = None,
-    persist_handles: list[DataFrame] | None = None,
-    rank_range: tuple[int, int] | None = None,
-) -> DataFrame:
-    """Exact global rank / running sum over (``key`` asc|desc,
-    ``*tiebreak`` asc) computed ENTIRELY IN-PLAN — the r12 successor to
-    ``global_rank_cumsum`` for NUMERIC leading keys (the common case:
-    every bench caller ranks a rollup by a revenue/count/score column).
-
-    Same output contract as ``global_rank_cumsum(df, [key, *tiebreak],
-    ...)``: ``rank_out`` is the global row_number (long), ``cum_out``
-    the inclusive running sum of ``val_col`` (double), ``n_out`` /
-    ``total_out`` the global count/sum attached as columns. Ranks are
-    EXACT regardless of bucketing; the running sum associates as
-    (bucket offset) + intra-bucket sequential fold — the same family as
-    the range-partition + carry fold it replaces, so integer-valued
-    ``val_col``s (every current caller) are bit-exact and float callers
-    need the suite's dyadic snap exactly as before.
-
-    Why replace the range-shuffle scan (guide §1.2 "the distributed
-    algorithm" + §4 "eliminate the Python boundary"): the old
-    mechanism cost, PER CALL, a repartitionByRange SAMPLING job that
-    re-executes the whole upstream, a second full pass to collect
-    per-partition totals to the driver, a persist of the full shuffled
-    frame, and a ``mapInArrow`` pass that ships EVERY ranked row across
-    the JVM<->Python Arrow boundary. Measured on topk_global_paging at
-    sf0.1: 7 build-time jobs + 26 stages. This form plans ONE job with
-    no driver round-trip and no Python worker anywhere:
-
-    1. ``percentile_approx`` boundaries (nb-1 fractions) over a signed
-       numeric proxy of ``key`` — one tiny mergeable-sketch aggregate
-       over the cached input;
-    2. bucket id = #boundaries strictly below the proxy — an
-       order-preserving map, so bucket ranges are order-contiguous
-       (boundary-approximation error only moves SPLIT POINTS, never
-       relative order; ties share one bucket by construction);
-    3. per-bucket (count, sum) rollup — map-side combinable, <= nb+2
-       rows reach the driver — folded into exclusive-offset LITERAL
-       arrays (the bounded driver merge);
-    4. rank = offset lookup + ``row_number`` over (bucket | key,
-       tiebreak); cum = sum-offset lookup + windowed running sum.
-       Pure JVM codegen, one exchange, no joins.
-
-    NULL / NaN keys get dedicated end buckets matching Spark's sort
-    placement (asc: nulls first, NaN last; desc: NaN first, nulls
-    last), so mixed-key inputs rank identically to a full sort.
-
-    The boundary sketch and the <= nb+2-row bucket rollup are folded
-    into the plan as LITERALS via two bounded build-time jobs over the
-    persisted input (the same "bounded driver merge" contract as the
-    range-scan predecessor, but over the CACHED input — no sampling
-    pass ever re-executes the upstream). Folding them as literals
-    instead of broadcast-joining 1-row/32-row frames matters on the
-    measured bench: every tiny aggregate subtree and broadcast is its
-    own AQE query stage, and per-stage fixed cost dominates rollup
-    -sized inputs; the literal form leaves the final plan with exactly
-    ONE exchange and zero joins.
-
-    ``num_buckets`` defaults to the cluster's defaultParallelism
-    (scale-adaptive: grows with the cluster, never a local constant);
-    deployments ranking >~1e9-row frames should raise it toward
-    rows/bucket ~ a few million. ``persist_handles`` receives the one
-    persisted frame (the INPUT, cached so the two bounded build jobs
-    and the main pass trigger exactly one upstream computation).
-
-    ``rank_range=(lo, hi)`` (r13, pagination pruning): when the caller
-    only consumes ranks in [lo, hi] (a page), the returned frame keeps
-    ONLY the rows of buckets whose rank interval intersects the page —
-    the bucket offsets are known literals before the main pass, so the
-    exchange and window run on ~|page buckets|/nb of the data instead
-    of all of it, and a deep page costs the same as page one. Ranks of
-    the surviving rows are unchanged (offsets are global); rows outside
-    the covering buckets are DROPPED, so only page consumers may use
-    it. Requires ``val_col=None`` (a running sum needs every earlier
-    row).
-    """
-    if rank_range is not None and val_col is not None:
-        raise ValueError("rank_range requires val_col=None (cumsum needs all rows)")
-    return global_ranks_inplan(
-        df,
-        [
-            {
-                "key": key,
-                "tiebreak": tuple(tiebreak),
-                "descending": descending,
-                "val_col": val_col,
-                "rank_out": rank_out,
-                "cum_out": cum_out,
-                "n_out": n_out,
-                "total_out": total_out,
-                "rank_range": rank_range,
-            }
-        ],
-        num_buckets=num_buckets,
-        persist_handles=persist_handles,
-    )
-
-
-def global_ranks_inplan(
-    df: DataFrame,
-    specs: Sequence[dict],
+    specs: Sequence[ScanSpec],
     *,
     num_buckets: int | None = None,
     persist_handles: list[DataFrame] | None = None,
-    fold_key: str | None = None,
 ) -> DataFrame:
-    """Multi-key form of ``global_rank_inplan``: compute SEVERAL global
-    ranks/cumsums over the SAME frame in one batch. Each spec is a dict
-    with ``key`` (numeric column name) and optionally ``tiebreak``
-    (tuple of columns), ``descending``, ``val_col``, ``rank_out``,
-    ``cum_out``, ``n_out``, ``total_out``.
-
-    The batch form exists because build-time actions dominate
-    rollup-sized inputs on the measured bench: orders_rfm_segments
-    ranks the one customer rollup by THREE metrics, and three separate
-    calls cost six bounded driver jobs. Here ALL boundary sketches ride
-    ONE aggregate job and ALL bucket rollups ride ONE explode+aggregate
-    job (<= n_specs*(nb+4) rows to the driver), then each spec appends
-    its literal-offset + per-bucket-window rank column — one exchange
-    per spec, zero joins, zero Python.
-
-    Specs sharing the SAME (key, tiebreak, descending) triple reuse one
-    bucket column, and their Window nodes share one spec, so Catalyst's
-    CollapseWindow folds them into a single exchange automatically (r13;
-    eval_average_precision ranks/cumulates two val_cols over one
-    score-desc order — previously two identical exchanges).
-
-    ``fold_key`` (r13, opt-in): the name of a column that UNIQUELY keys
-    the rows of ``df``. When given, ALL specs' rank windows fold into
-    ONE exchange: each row explodes into n_specs skinny (metric, bucket,
-    sort-proxy) rows (pass-through column values ride only the first
-    spec's row; nulls elsewhere), one Window.partitionBy(metric, bucket)
-    ranks every metric at once, and one groupBy(fold_key) re-assembles
-    the row — n_specs bucket exchanges + sorts become one exchange +
-    sort over n_specs x skinnier rows plus one hash-agg exchange of the
-    ranked frame. Preconditions (asserted): every spec shares one
-    tiebreak tuple, and every key must order EXACTLY like its double
-    proxy (true for dates, timestamps, ints/longs up to 2^53 and any
-    double — the proxy is the sort key inside the shared window, where
-    the per-spec path sorts by the native column).
+    """``df``'s columns plus every spec's outputs, computed by the
+    bucketed in-plan scan (module docstring). All specs share the two
+    bounded build jobs, so batching specs over one frame costs no more
+    driver jobs than one spec. ``num_buckets`` defaults to the
+    cluster's defaultParallelism and is capped at ``MAX_BUCKETS``;
+    ``persist_handles`` receives the one persisted frame (the input).
     """
-    import math
-
-    from testlog_etl_spark.util import const_array
-
-    spark = df.sparkSession
-    nb = max(2, num_buckets or spark.sparkContext.defaultParallelism)
+    specs = list(specs)
+    for s in specs:
+        if s.rank_range is not None and (len(specs) > 1 or s.cum or s.max):
+            raise ValueError("rank_range is rank-only and single-spec (it drops rows)")
+        if (s.cum or s.max or s.total) and s.val is None:
+            raise ValueError("cum, max and total need val")
+    nb = min(max(2, num_buckets or df.sparkSession.sparkContext.defaultParallelism), MAX_BUCKETS)
     src = persist_once(df)
     if persist_handles is not None:
         persist_handles.append(src)
 
-    from pyspark.sql.types import DateType, DoubleType, FloatType, TimestampNTZType
+    parsed = [_parse_order(df.schema, s.order) for s in specs]
+    orders = list(dict.fromkeys(parsed))
+    spec_order = [orders.index(o) for o in parsed]
+    prefixes = [_prefix(df.schema, o) for o in orders]
 
-    prepped = []
-    for i, s in enumerate(specs):
-        kcol = F.col(s["key"])
-        desc = bool(s.get("descending"))
-        # order-preserving numeric proxy per key type: dates rank by day
-        # number, NTZ timestamps via the (UTC-pinned) instant; only
-        # float-typed keys can be NaN, so the NaN end-bucket guard is
-        # emitted for those alone.
-        ktype = df.schema[s["key"]].dataType
-        if isinstance(ktype, DateType):
-            base = F.unix_date(kcol).cast("double")
-        elif isinstance(ktype, TimestampNTZType):
-            base = kcol.cast("timestamp").cast("double")
-        else:
-            base = kcol.cast("double")
-        proxy = (-base) if desc else base
-        # end buckets: asc -> nulls first (-2), NaN last (nb+1); desc ->
-        # NaN first (-2), nulls last (nb+1). Finite rows: 0..nb-1.
-        prepped.append(
-            {
-                **s,
-                "i": i,
-                "kcol": kcol,
-                "desc": desc,
-                "proxy": proxy,
-                "is_float": isinstance(ktype, (DoubleType, FloatType)),
-                "null_b": nb + 1 if desc else -2,
-                "nan_b": -2 if desc else nb + 1,
-            }
-        )
+    # bounded build job 1: ONE hash-ordered sample of every order's
+    # prefix columns, LIMIT 64*nb rows (a sparse or empty sample only
+    # merges buckets)
+    pcols = list(dict.fromkeys(c for p in prefixes for c, _ in p))
+    hcols = list(dict.fromkeys(c for o in orders for c, _ in o))
+    sample = (
+        src.select(F.xxhash64(*hcols).alias("__scan_h"), *pcols)
+        .orderBy("__scan_h")
+        .limit(SAMPLE_PER_BUCKET * nb)
+        .collect()
+        if pcols
+        else []
+    )
+    bnds = [_boundaries(sample, pcols, p, nb) for p in prefixes]
+    bkts = [_bucket(df.schema, p, b) for p, b in zip(prefixes, bnds)]
 
-    # Bounded build job 1: ALL boundary sketches in one aggregate
-    # (nb-1 approximate quantiles per key; accuracy only moves bucket
-    # SPLIT POINTS, never relative order, so ranks stay exact). NaN
-    # keys are masked out of the sketch input (a NaN poisons the
-    # sketch's comparisons) and non-finite boundaries are dropped from
-    # the literal — both only merge buckets, never reorder rows;
-    # NaN/null rows rank via their dedicated end buckets.
-    fracs = F.array(*[F.lit(i / nb) for i in range(1, nb)])
-    brow = src.agg(
-        *[
-            F.percentile_approx(
-                F.when(~F.isnan(p["proxy"]), p["proxy"])
-                if p["is_float"]
-                else p["proxy"],
-                fracs,
-                F.lit(10000),
-            ).alias(f"_bnds{p['i']}")
-            for p in prepped
-        ]
-    ).first()
-    for p in prepped:
-        bnds = sorted(
-            float(b)
-            for b in (brow[f"_bnds{p['i']}"] or [])
-            if b is not None and math.isfinite(float(b))
-        )
-        if bnds:
-            barr = const_array(bnds)
-            proxy = p["proxy"]
-            fin = F.coalesce(
-                F.size(F.filter(barr, lambda b: b < proxy)), F.lit(0)
-            )
-        else:
-            fin = F.lit(0)
-        bkt = F.when(p["kcol"].isNull(), F.lit(p["null_b"]))
-        if p["is_float"]:
-            bkt = bkt.when(F.isnan(p["proxy"]), F.lit(p["nan_b"]))
-        p["bkt"] = bkt.otherwise(fin)
-        p["val"] = (
-            F.coalesce(F.col(p["val_col"]).cast("double"), F.lit(0.0))
-            if p.get("val_col")
-            else F.lit(0.0)
-        )
-
-    # Bounded build job 2: every spec's per-bucket (count, sum) rollup
-    # in one explode+aggregate pass -> exclusive offsets accumulated in
-    # bucket order on the driver (<= n_specs*(nb+4) rows — bounded by
-    # the operator's bucket constant, never the data).
+    # bounded build job 2: every spec's per-bucket (count, sum, max) in
+    # one explode+aggregate pass (<= n_specs*nb rows to the driver)
+    vals, maxv = [], []
+    for s in specs:
+        v = F.col(s.val).cast("double") if s.val else F.lit(0.0)
+        vals.append(F.coalesce(v, F.lit(0.0)))
+        # running max: NULL and NaN values mean "no value"
+        maxv.append(F.when(~F.isnan(v), v) if s.max else F.lit(None).cast("double"))
     packed = F.explode(
         F.array(
             *[
                 F.struct(
-                    F.lit(p["i"]).alias("_m"),
-                    p["bkt"].alias("_b"),
-                    p["val"].alias("_v"),
+                    F.lit(i).alias("m"),
+                    bkts[spec_order[i]].alias("b"),
+                    vals[i].alias("v"),
+                    maxv[i].alias("x"),
                 )
-                for p in prepped
+                for i in range(len(specs))
             ]
         )
     ).alias("_e")
-    totals = (
+    rollup = (
         src.select(packed)
-        .select("_e._m", "_e._b", "_e._v")
-        .groupBy("_m", "_b")
-        .agg(F.count(F.lit(1)).alias("_c"), F.sum("_v").alias("_s"))
+        .select("_e.*")
+        .groupBy("m", "b")
+        .agg(F.count(F.lit(1)).alias("c"), F.sum("v").alias("s"), F.max("x").alias("x"))
         .collect()
     )
-    acc: dict[int, tuple[int, float]] = {p["i"]: (0, 0.0) for p in prepped}
-    offs: dict[int, tuple[list, list]] = {
-        p["i"]: ([0] * (nb + 4), [0.0] * (nb + 4)) for p in prepped
-    }
-    # per-spec (bucket, first rank, last rank) spans, for rank_range
-    # bucket pruning
-    spans: dict[int, list[tuple[int, int, int]]] = {p["i"]: [] for p in prepped}
-    for row in sorted(totals, key=lambda r: (r["_m"], r["_b"])):
-        n_acc, s_acc = acc[row["_m"]]
-        roff, soff = offs[row["_m"]]
-        roff[row["_b"] + 2] = n_acc
-        soff[row["_b"] + 2] = s_acc
-        spans[row["_m"]].append((row["_b"], n_acc + 1, n_acc + row["_c"]))
-        acc[row["_m"]] = (n_acc + row["_c"], s_acc + (row["_s"] or 0.0))
 
-    if fold_key is not None:
-        return _fold_ranks(df, src, prepped, offs, acc, fold_key)
-
-    # rank/cum per spec = literal-array offset lookup + per-bucket
-    # window: InMemoryScan -> (per spec) ONE Exchange(_bkt_i) -> Sort ->
-    # Window -> Project, all JVM codegen, no joins. Specs with one
-    # (key, tiebreak, descending) signature share one bucket column, so
-    # their Window nodes carry the same spec and CollapseWindow plans
-    # them over ONE exchange.
     out = src
     out_names: list[str] = []
-    bcol_by_sig: dict[tuple, str] = {}
-    for p in prepped:
-        i = p["i"]
-        sig = (p["key"], tuple(p.get("tiebreak", ())), p["desc"])
-        bcol = bcol_by_sig.get(sig)
-        if bcol is None:
-            bcol = f"_bkt{i}"
-            bcol_by_sig[sig] = bcol
-            out = out.withColumn(bcol, p["bkt"])
-        rr = p.get("rank_range")
-        if rr is not None:
-            if len(prepped) > 1:
-                raise ValueError("rank_range is single-spec only (it drops rows)")
-            lo, hi = int(rr[0]), int(rr[1])
-            keep = [b for b, first, last in spans[i] if first <= hi and last >= lo]
+    added: set[int] = set()
+    for i, s in enumerate(specs):
+        j = spec_order[i]
+        bcol = f"_bkt{j}"
+        if j not in added:
+            added.add(j)
+            out = out.withColumn(bcol, bkts[j])
+        k = len(bnds[j]) + 1
+        roff, soff, carry = [0] * k, [0.0] * k, [math.nan] * k
+        n_acc, s_acc, m_acc = 0, 0.0, None
+        spans: list[tuple[int, int, int]] = []  # (bucket, first rank, last rank)
+        for r in sorted((r for r in rollup if r["m"] == i), key=lambda r: r["b"]):
+            b = r["b"]
+            roff[b], soff[b] = n_acc, s_acc
+            carry[b] = math.nan if m_acc is None else m_acc  # NaN: no earlier value
+            spans.append((b, n_acc + 1, n_acc + r["c"]))
+            n_acc += r["c"]
+            s_acc += r["s"] or 0.0
+            if r["x"] is not None and (m_acc is None or r["x"] > m_acc):
+                m_acc = r["x"]
+        if s.rank_range is not None:
+            lo, hi = s.rank_range
+            keep = [b for b, first, last in spans if first <= hi and last >= lo]
             # only the covering buckets' rows enter the exchange (their
             # offsets are global literals, so surviving ranks are exact)
             out = out.filter(F.col(bcol).isin(keep) if keep else F.lit(False))
-        order = [p["kcol"].desc() if p["desc"] else p["kcol"].asc()] + [
-            F.col(t).asc() for t in p.get("tiebreak", ())
-        ]
-        w = Window.partitionBy(bcol).orderBy(*order)
-        idx = F.col(bcol) + F.lit(3)  # element_at is 1-based; buckets start at -2
-        roff, soff = offs[i]
-        n_acc, s_acc = acc[i]
-        out = out.withColumn(
-            p.get("rank_out", "i"),
-            (F.element_at(const_array(roff), idx) + F.row_number().over(w)).cast(
-                "long"
-            ),
+        w = Window.partitionBy(bcol).orderBy(
+            *[F.col(c).desc() if d else F.col(c).asc() for c, d in orders[j]]
         )
-        out_names.append(p.get("rank_out", "i"))
-        if p.get("val_col"):
-            out = out.withColumn(
-                p.get("cum_out", "cum"),
-                F.element_at(const_array(soff), idx)
-                + F.sum(p["val"]).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-            )
-            out_names.append(p.get("cum_out", "cum"))
-        if p.get("n_out"):
-            out = out.withColumn(p["n_out"], F.lit(n_acc).cast("long"))
-            out_names.append(p["n_out"])
-        if p.get("total_out"):
-            out = out.withColumn(p["total_out"], F.lit(s_acc).cast("double"))
-            out_names.append(p["total_out"])
+        idx = F.col(bcol) + F.lit(1)  # element_at is 1-based; buckets start at 0
+        cols: dict[str, Column] = {}
+        if s.rank:
+            rn = F.row_number().over(w)
+            cols[s.rank] = (F.element_at(const_array(roff), idx) + rn).cast("long")
+        if s.cum:
+            run = F.sum(vals[i]).over(w.rowsBetween(Window.unboundedPreceding, 0))
+            cols[s.cum] = F.element_at(const_array(soff), idx) + run
+        if s.max:
+            frame = w.rowsBetween(Window.unboundedPreceding, -1 if s.exclusive else 0)
+            c = F.element_at(const_array(carry), idx)
+            folded = F.greatest(F.when(~F.isnan(c), c), F.max(maxv[i]).over(frame))
+            cols[s.max] = F.when(F.abs(folded) != F.lit(math.inf), folded).cast("double")
+        if s.n:
+            cols[s.n] = F.lit(n_acc).cast("long")
+        if s.total:
+            cols[s.total] = F.lit(s_acc).cast("double")
+        out = out.withColumns(cols)
+        out_names += cols
     return out.select(*df.columns, *out_names)
 
 
-def _fold_ranks(
-    df: DataFrame,
-    src: DataFrame,
-    prepped: list[dict],
-    offs: dict[int, tuple[list, list]],
-    acc: dict[int, tuple[int, float]],
-    fold_key: str,
-) -> DataFrame:
-    """``global_ranks_inplan``'s single-exchange body (``fold_key``
-    mode): explode each row into one skinny (metric, bucket, proxy) row
-    per spec, rank ALL specs under one Window.partitionBy(_m, _b), and
-    re-assemble rows by the unique ``fold_key``. The 2-D offset lookup
-    is a nested literal indexed by (metric, bucket) — still zero joins,
-    zero Python, bounded driver state."""
-    from testlog_etl_spark.util import const_array
+def _parse_order(schema: StructType, order: Sequence[str]) -> tuple[tuple[str, bool], ...]:
+    """``("x desc", "id")`` -> ``(("x", True), ("id", False))``; a
+    column literally named ``"x desc"`` stays a column name."""
+    out = []
+    for o in order:
+        name, _, d = o.rpartition(" ")
+        if o not in schema.names and name and d.lower() in ("asc", "desc"):
+            out.append((name, d.lower() == "desc"))
+        else:
+            out.append((o, False))
+    return tuple(out)
 
-    tb = tuple(prepped[0].get("tiebreak", ()))
-    assert all(
-        tuple(p.get("tiebreak", ())) == tb for p in prepped
-    ), "fold_key mode requires every spec to share one tiebreak tuple"
-    want_cum = any(p.get("val_col") for p in prepped)
-    # fold_key and tiebreak columns ride EVERY exploded row (the shared
-    # sort needs them); other pass-through values ride only spec 0's
-    # row and are re-attached by first(ignorenulls) at re-assembly.
-    always = [fold_key] + [t for t in tb if t != fold_key]
-    rest = [c for c in df.columns if c not in always]
-    elems = []
-    for p in prepped:
-        fields = [
-            F.lit(p["i"]).alias("_m"),
-            p["bkt"].cast("int").alias("_b"),
-            p["proxy"].alias("_srt"),
-        ]
-        if want_cum:
-            fields.append(p["val"].alias("_v"))
-        for c in rest:
-            fields.append(
-                (F.col(c) if p["i"] == 0 else F.lit(None).cast(df.schema[c].dataType)).alias(c)
-            )
-        elems.append(F.struct(*fields))
-    ex = src.select(*always, F.explode(F.array(*elems)).alias("_e")).select(
-        *always, "_e.*"
+
+def _prefix(schema: StructType, order: tuple[tuple[str, bool], ...]) -> list[tuple[str, bool]]:
+    """Longest run of atomic leading order columns sharing the first
+    column's direction -- the part of the order a boundary struct can
+    compare in one engine comparison."""
+    out: list[tuple[str, bool]] = []
+    for c, d in order:
+        t = schema[c].dataType
+        if d != order[0][1] or not isinstance(t, AtomicType) or isinstance(t, BinaryType):
+            break
+        out.append((c, d))
+    return out
+
+
+def _sort_key(t: tuple) -> tuple:
+    # only PICKS evenly spaced boundaries (every comparison that places a
+    # row runs in-engine): nulls first, NaN after every other value
+    return tuple(
+        (0,) if v is None else (2,) if isinstance(v, float) and v != v else (1, v) for v in t
     )
-    w = Window.partitionBy("_m", "_b").orderBy(
-        F.col("_srt").asc(), *[F.col(t).asc() for t in tb]
-    )
-    roff2d = F.array(*[const_array(offs[p["i"]][0]) for p in prepped])
-    idx_m = F.col("_m") + F.lit(1)
-    idx_b = F.col("_b") + F.lit(3)
-    ranked = ex.withColumn(
-        "_rk",
-        (F.element_at(F.element_at(roff2d, idx_m), idx_b) + F.row_number().over(w)).cast(
-            "long"
-        ),
-    )
-    if want_cum:
-        soff2d = F.array(*[const_array(offs[p["i"]][1]) for p in prepped])
-        ranked = ranked.withColumn(
-            "_cm",
-            F.element_at(F.element_at(soff2d, idx_m), idx_b)
-            + F.sum("_v").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    aggs = [F.first(F.col(c), ignorenulls=True).alias(c) for c in rest]
-    lit_cols: list[tuple[str, Column]] = []
-    out_names: list[str] = []
-    for p in prepped:
-        i = p["i"]
-        is_m = F.col("_m") == i
-        aggs.append(F.max(F.when(is_m, F.col("_rk"))).alias(p.get("rank_out", "i")))
-        out_names.append(p.get("rank_out", "i"))
-        if p.get("val_col"):
-            aggs.append(F.max(F.when(is_m, F.col("_cm"))).alias(p.get("cum_out", "cum")))
-            out_names.append(p.get("cum_out", "cum"))
-        n_acc, s_acc = acc[i]
-        if p.get("n_out"):
-            lit_cols.append((p["n_out"], F.lit(n_acc).cast("long")))
-            out_names.append(p["n_out"])
-        if p.get("total_out"):
-            lit_cols.append((p["total_out"], F.lit(s_acc).cast("double")))
-            out_names.append(p["total_out"])
-    out = ranked.groupBy(*always).agg(*aggs)
-    for name, col in lit_cols:
-        out = out.withColumn(name, col)
-    return out.select(*df.columns, *out_names)
 
 
-_INPLAN_OK_TYPES = (
-    "string", "date", "timestamp", "timestamp_ntz", "tinyint", "smallint",
-    "int", "bigint", "float", "double", "decimal", "boolean",
-)
+def _boundaries(sample: list, pcols: list[str], prefix: list[tuple[str, bool]], nb: int) -> list[tuple]:
+    """Up to ``nb-1`` distinct boundary tuples over ``prefix``, evenly
+    spaced in the sorted sample multiset (so they follow row quantiles)."""
+    if not prefix or not sample:
+        return []
+    pos = [pcols.index(c) + 1 for c, _ in prefix]  # +1: skip the hash
+    tuples = sorted((tuple(r[i] for i in pos) for r in sample), key=_sort_key)
+    picked = {}
+    for i in range(1, nb):
+        t = tuples[i * len(tuples) // nb]
+        picked[_sort_key(t)] = t
+    return list(picked.values())
 
 
-def inplan_rank_supported(df: DataFrame, order_cols: Sequence[str]) -> bool:
-    """True iff every order column's type is atomic and orderable, so
-    ``global_rank_cumsum_inplan`` applies (callers fall back to the
-    range-scan ``global_rank_cumsum`` otherwise)."""
-    for c in order_cols:
-        t = df.schema[c].dataType.simpleString()
-        if not t.startswith(_INPLAN_OK_TYPES):
-            return False
-    return True
-
-
-def global_rank_cumsum_inplan(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    val_col: str | None = None,
-    rank_out: str = "i",
-    cum_out: str = "cum",
-    n_out: str | None = None,
-    total_out: str | None = None,
-    num_buckets: int | None = None,
-    persist_handles: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Exact global rank / running sum over ``order_cols`` (all
-    ASCENDING plain columns — the shape of every remaining range-scan
-    caller), computed entirely in-plan for ANY atomic orderable key
-    type — the r13 successor to ``global_rank_cumsum`` for the
-    string/composite-keyed callers the numeric ``global_rank_inplan``
-    could not serve (VERDICT r12 #6).
-
-    Same contract as ``global_rank_cumsum(df, [asc cols], ...)``; the
-    persisted INPUT is appended to ``persist_handles`` (callers use it
-    as the cached rollup exactly as they used the range-partitioned
-    frame).
-
-    Mechanism — the numeric form's boundary sketch generalizes because
-    bucket boundaries only affect SKEW, never correctness: any fixed
-    boundary set yields order-contiguous buckets, and ranks come from
-    literal offsets + an intra-bucket window over the TRUE columns.
-    So instead of ``percentile_approx`` (numeric-only) the boundaries
-    are a bounded deterministic hash-sample of the order tuple,
-    evenly sliced on the driver:
-
-    1. ONE bounded job: sample rows where ``pmod(xxhash64(cols), p) =
-       0`` (NULL/NaN rows excluded — they only lose boundary
-       candidates, their ranks come from ordering), LIMIT-capped;
-       nb-1 evenly spaced boundary tuples become typed literal
-       STRUCTS. Python's sort only picks boundary values; every
-       actual comparison runs in-engine.
-    2. bucket id = count of boundary structs < struct(cols) — struct
-       comparison is the engine's own lexicographic ordering (nulls
-       first, NaN last), identical to the sort order, so buckets are
-       order-contiguous for free.
-    3. per-bucket (count, sum) rollup -> literal exclusive offsets
-       (bounded driver merge), rank/cum = offset + row_number /
-       running sum over Window.partitionBy(bucket).orderBy(cols).
-
-    vs the range scan, PER CALL: no repartitionByRange sampling job
-    re-executing the upstream, no full-data range shuffle persist, and
-    no ``mapInArrow`` shipping every ranked row across the Python
-    boundary — one hash exchange, zero Python, zero joins.
-    """
-    from testlog_etl_spark.util import const_array
-
-    spark = df.sparkSession
-    ocols = list(order_cols)
-    nb = max(2, num_buckets or spark.sparkContext.defaultParallelism)
-    val = F.coalesce(F.col(val_col).cast("double"), F.lit(0.0)) if val_col else F.lit(0.0)
-    src = persist_once(df)
-    if persist_handles is not None:
-        persist_handles.append(src)
-
-    from pyspark.sql.types import DoubleType, FloatType
-
-    is_float = {c: isinstance(df.schema[c].dataType, (DoubleType, FloatType)) for c in ocols}
-    clean = F.lit(True)
-    for c in ocols:
-        clean = clean & F.col(c).isNotNull()
-        if is_float[c]:
-            clean = clean & ~F.isnan(F.col(c))
-    # Bounded build job 1: deterministic hash-sample of boundary
-    # candidates (cap ~= 64*nb keeps the collect bounded by the bucket
-    # constant; a sparse or empty sample only merges buckets)
-    cap = 64 * nb
-    samp = (
-        src.filter(clean)
-        .select(*ocols)
-        .filter(F.pmod(F.xxhash64(*[F.col(c) for c in ocols]), F.lit(97)) == 0)
-        .limit(cap)
-        .collect()
-    )
-    tuples = sorted({tuple(r) for r in samp})
-    bnds = []
-    if len(tuples) >= nb:
-        step = len(tuples) / nb
-        bnds = sorted({tuples[int(i * step)] for i in range(1, nb)})
-    elif tuples:
-        bnds = tuples
-    types = {c: df.schema[c].dataType for c in ocols}
-    proxy = F.struct(*[F.col(c).alias(c) for c in ocols])
-    fin = F.lit(0)
+def _bucket(schema: StructType, prefix: list[tuple[str, bool]], bnds: list[tuple]) -> Column:
+    """Bucket id = #boundaries below the row's prefix struct (above, for
+    a descending prefix): 0..len(bnds), monotone along the order."""
+    if not bnds:
+        return F.lit(0)
+    desc = prefix[0][1]
+    row = F.struct(*[F.col(c).alias(c) for c, _ in prefix])
+    n = F.lit(0)
     for t in bnds:
-        b = F.struct(*[F.lit(v).cast(types[c]).alias(c) for c, v in zip(ocols, t)])
-        fin = fin + F.when(b < proxy, F.lit(1)).otherwise(F.lit(0))
-    bkt = fin
-
-    # Bounded build job 2: per-bucket (count, sum) rollup -> exclusive
-    # literal offsets (<= nb+1 rows to the driver)
-    totals = (
-        src.select(bkt.alias("_b"), val.alias("_v"))
-        .groupBy("_b")
-        .agg(F.count(F.lit(1)).alias("_c"), F.sum("_v").alias("_s"))
-        .collect()
-    )
-    n_acc, s_acc = 0, 0.0
-    roff, soff = [0] * (len(bnds) + 1), [0.0] * (len(bnds) + 1)
-    for row in sorted(totals, key=lambda r: r["_b"]):
-        roff[row["_b"]] = n_acc
-        soff[row["_b"]] = s_acc
-        n_acc += row["_c"]
-        s_acc += row["_s"] or 0.0
-
-    w = Window.partitionBy("_bkt").orderBy(*[F.col(c).asc() for c in ocols])
-    out = src.withColumn("_bkt", bkt)
-    idx = F.col("_bkt") + F.lit(1)  # element_at is 1-based; buckets start at 0
-    out_names = [rank_out]
-    out = out.withColumn(
-        rank_out,
-        (F.element_at(const_array(roff), idx) + F.row_number().over(w)).cast("long"),
-    )
-    if val_col:
-        out = out.withColumn(
-            cum_out,
-            F.element_at(const_array(soff), idx)
-            + F.sum(val).over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        b = F.struct(
+            *[F.lit(v).cast(schema[c].dataType).alias(c) for (c, _), v in zip(prefix, t)]
         )
-        out_names.append(cum_out)
-    if n_out:
-        out = out.withColumn(n_out, F.lit(n_acc).cast("long"))
-        out_names.append(n_out)
-    if total_out:
-        out = out.withColumn(total_out, F.lit(s_acc).cast("double"))
-        out_names.append(total_out)
-    return out.select(*df.columns, *out_names)
-
-
-def global_running_max(
-    df: DataFrame,
-    order_by: Sequence[Column],
-    val_col: str,
-    out: str = "run_max",
-    exclusive: bool = False,
-    num_parts: int = 32,
-    persist_handles: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Running maximum of ``val_col`` (double) in an arbitrary total
-    order, same shape as ``global_rank_cumsum``: one range shuffle, a
-    partition-count-bounded totals collect, then an in-place Arrow
-    cummax per already-sorted partition -- no single-partition window.
-
-    ``exclusive=True`` gives each row the max over STRICTLY preceding
-    rows (NULL for the global first row) -- the watermark shape: "the
-    high-water mark as of just before this row arrived". Max is a
-    lattice join, so unlike the cumsum there is no FP-association
-    caveat: any grouping of the fold yields the identical result.
-    """
-    order_by = list(order_by)
-    ranged = persist_once(
-        df.withColumn("_val0", F.col(val_col).cast("double"))
-        .repartitionByRange(num_parts, *order_by)
-        .sortWithinPartitions(*order_by)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    if persist_handles is not None:
-        persist_handles.append(ranged)
-    totals = ranged.groupBy("_pid").agg(F.max("_val0").alias("_m")).collect()
-    carry_map: dict[int, float | None] = {}
-    acc: float | None = None
-    for row in sorted(totals, key=lambda r: r["_pid"]):
-        carry_map[row["_pid"]] = acc
-        m = row["_m"]
-        if m is not None and (acc is None or m > acc):
-            acc = m
-
-    passthrough = [f for f in ranged.schema.fields if f.name not in ("_pid", "_val0")]
-    out_schema = StructType(list(passthrough) + [StructField(out, DoubleType())])
-    names = [f.name for f in out_schema.fields]
-    keep_names = [f.name for f in passthrough]
-
-    # mapInArrow for the same null-vs-NaN fidelity as global_rank_cumsum
-    # (see its comment). _val0 nulls surface as NaN via to_numpy and are
-    # treated as "no value" exactly as the pandas path did; the OUTPUT
-    # NaN marker means "no preceding value" and converts back to NULL
-    # (from_pandas=True), preserving the documented exclusive-first-row
-    # NULL.
-    def scan(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        init = False
-        carry: float | None = None
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            if not init:
-                pid = b.column(b.schema.get_field_index("_pid"))[0].as_py()
-                carry = carry_map.get(int(pid))
-                init = True
-            vals = b.column(b.schema.get_field_index("_val0")).to_numpy(
-                zero_copy_only=False
-            )
-            filled = np.where(np.isnan(vals), -np.inf, vals)
-            cm = np.maximum.accumulate(filled)
-            if carry is not None:
-                cm = np.maximum(cm, carry)
-            res = np.empty(len(vals))
-            if exclusive:
-                res[0] = carry if carry is not None else np.nan
-                res[1:] = cm[:-1]
-            else:
-                res = cm
-            res = np.where(np.isinf(res), np.nan, res)
-            arrays = [b.column(b.schema.get_field_index(c)) for c in keep_names]
-            arrays.append(pa.array(res, type=pa.float64(), from_pandas=True))
-            carry = float(cm[-1]) if not np.isinf(cm[-1]) else carry
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return ranged.mapInArrow(scan, out_schema)
-
-
-def global_running_max_inplan(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    val_col: str,
-    out: str = "run_max",
-    exclusive: bool = False,
-    num_buckets: int | None = None,
-    persist_handles: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Running maximum of ``val_col`` over ascending ``order_cols``
-    computed ENTIRELY IN-PLAN — the r13 successor to
-    ``global_running_max`` for atomic orderable keys, completing the §4
-    boundary elimination across the registry (this was the last
-    registered-query consumer of the range-shuffle + ``mapInArrow``
-    scan).
-
-    Same contract as ``global_running_max`` including its documented
-    missing-value quirk: a NULL, NaN or ±inf *resulting* maximum
-    surfaces as NULL (the Arrow path fills NaN/NULL with -inf for the
-    cummax and converts any infinite result back to NULL), and
-    ``exclusive=True`` gives the max over STRICTLY preceding rows
-    (NULL for the global first row).
-
-    Mechanism (max is a lattice join, so this is the rank sketch minus
-    the exactness bookkeeping — ANY order-contiguous bucketing gives
-    the identical answer):
-
-    1. bucket id over ``order_cols`` from sampled struct boundaries
-       (same bounded deterministic hash-sample as
-       ``global_rank_cumsum_inplan``; boundaries only move skew);
-    2. ONE bounded build job: per-bucket max of the cleaned value →
-       exclusive prefix-max carries folded into a literal array
-       (NaN sentinel = "no earlier value"; NaN can never be a real
-       carry because NaN values are cleaned out);
-    3. per row: ``greatest(carry[bucket], max(val) OVER (PARTITION BY
-       bucket ORDER BY cols ROWS UNBOUNDED PRECEDING [TO -1]))`` —
-       ``greatest`` skips NULL operands, matching the carry fold.
-
-    One hash exchange, zero joins, zero Python."""
-    import math
-
-    from pyspark.sql.types import DoubleType, FloatType
-
-    from testlog_etl_spark.util import const_array
-
-    spark = df.sparkSession
-    ocols = list(order_cols)
-    nb = max(2, num_buckets or spark.sparkContext.defaultParallelism)
-    src = persist_once(df)
-    if persist_handles is not None:
-        persist_handles.append(src)
-
-    # cleaned value: NULL and NaN mean "no value" (±inf stays in the
-    # fold and is nulled at the END, exactly like the Arrow path's
-    # isinf(result) -> NULL conversion)
-    vraw = F.col(val_col).cast("double")
-    val = F.when(vraw.isNotNull() & ~F.isnan(vraw), vraw)
-
-    is_float = {c: isinstance(df.schema[c].dataType, (DoubleType, FloatType)) for c in ocols}
-    clean = F.lit(True)
-    for c in ocols:
-        clean = clean & F.col(c).isNotNull()
-        if is_float[c]:
-            clean = clean & ~F.isnan(F.col(c))
-    # bounded build job 1: deterministic hash-sample of boundary
-    # candidates (identical scheme + argument as global_rank_cumsum_inplan)
-    cap = 64 * nb
-    samp = (
-        src.filter(clean)
-        .select(*ocols)
-        .filter(F.pmod(F.xxhash64(*[F.col(c) for c in ocols]), F.lit(97)) == 0)
-        .limit(cap)
-        .collect()
-    )
-    tuples = sorted({tuple(r) for r in samp})
-    bnds = []
-    if len(tuples) >= nb:
-        step = len(tuples) / nb
-        bnds = sorted({tuples[int(i * step)] for i in range(1, nb)})
-    elif tuples:
-        bnds = tuples
-    types = {c: df.schema[c].dataType for c in ocols}
-    proxy = F.struct(*[F.col(c).alias(c) for c in ocols])
-    fin = F.lit(0)
-    for t in bnds:
-        b = F.struct(*[F.lit(v).cast(types[c]).alias(c) for c, v in zip(ocols, t)])
-        fin = fin + F.when(b < proxy, F.lit(1)).otherwise(F.lit(0))
-    bkt = fin
-
-    # bounded build job 2: per-bucket max -> exclusive prefix-max
-    # carries (<= len(bnds)+1 rows to the driver)
-    totals = (
-        src.select(bkt.alias("_b"), val.alias("_v"))
-        .groupBy("_b")
-        .agg(F.max("_v").alias("_m"))
-        .collect()
-    )
-    carries: list[float] = [math.nan] * (len(bnds) + 1)
-    acc: float | None = None
-    for row in sorted(totals, key=lambda r: r["_b"]):
-        carries[row["_b"]] = math.nan if acc is None else acc
-        m = row["_m"]
-        if m is not None and (acc is None or m > acc):
-            acc = m
-
-    w = Window.partitionBy("_bkt").orderBy(*[F.col(c).asc() for c in ocols])
-    frame = w.rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
-    stepped = src.withColumn("_bkt", bkt)
-    idx = F.col("_bkt") + F.lit(1)  # element_at is 1-based; buckets start at 0
-    carry_raw = F.element_at(const_array(carries), idx)
-    carry = F.when(~F.isnan(carry_raw), carry_raw)  # NaN sentinel -> NULL
-    folded = F.greatest(carry, F.max(val).over(frame))
-    result = F.when(F.abs(folded) == F.lit(float("inf")), F.lit(None)).otherwise(folded)
-    return stepped.withColumn(out, result.cast("double")).select(*df.columns, out)
-
-
-def group_quantile_exact(
-    df: DataFrame,
-    key: str,
-    val: str,
-    q: float = 0.5,
-    out: str = "q",
-    num_parts: int = 32,
-) -> DataFrame:
-    """Exact per-group linear-interpolated quantile — BIT-IDENTICAL to
-    Spark's exact ``percentile(val, q)`` and DuckDB's ``quantile_cont``
-    (both compute position ``p = q*(n-1)`` and interpolate with the
-    SYMMETRIC form ``v[⌈p⌉]·(p-⌊p⌋) + v[⌊p⌋]·(⌈p⌉-p)``, which rounds
-    differently from the naive ``lo + frac·(hi-lo)`` — e.g. q=0.9 over
-    {1.0, 3.0} is 2.8000000000000003 under both engines, 2.8 naive) —
-    WITHOUT the exact-percentile aggregate's scale hazard:
-    ``percentile()`` buffers every group value in its aggregation
-    state, so its partial buffers ride the shuffle at the full column
-    width and each group's final merge lands on ONE reducer (measured
-    80 KB/shuffle-record on stats_levene_test at sf0.1; at 100 TB a
-    group's buffer is the group). Here only ``(key, value, count)``
-    rollup rows cross one range exchange:
-
-    1. per-(key, value) count rollup (map-side combinable);
-    2. ``global_rank_cumsum`` over (key, value) -> global cumulative
-       count, range-partitioned — no per-group concentration;
-    3. a second, group-rollup-sized scan in the same key order turns
-       the per-group totals into rank offsets and target
-       order-statistic positions — fully distributed, any key-domain
-       cardinality (r10; the r09 version collected the totals and
-       walked offsets on the driver);
-    4. a null-safe equi-join + filter selects the ≤2 covering value
-       rows per group; interpolation is closed-form arithmetic.
-
-    NULL values are ignored (``percentile`` semantics); a group with
-    only NULLs yields NO row (vs percentile's NULL row) — callers that
-    need the NULL row should left-join this result back to the key
-    rollup. Returns a DataFrame (key, out) with ``out`` double.
-
-    Thin wrapper over ``operators/scan_quantile.py::
-    group_quantiles_exact`` (the multi-quantile form; full mechanism
-    and FP-exactness notes live there).
-    """
-    from testlog_etl_spark.operators.scan_quantile import group_quantiles_exact
-
-    return group_quantiles_exact(df, key, val, [q], [out], num_parts=num_parts)
+        n = n + F.when((b > row) if desc else (b < row), 1).otherwise(0)
+    return n

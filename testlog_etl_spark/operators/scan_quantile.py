@@ -17,14 +17,14 @@ the JX runner routes arbitrary user group keys here, so the contract
 is now a theorem instead):
 
 1. a per-(key, value) count rollup;
-2. one range-partitioned global cumulative count over (key asc, value
-   asc) (``operators/scan.py::global_rank_cumsum`` — no per-group
+2. one global cumulative count over (key asc, value asc)
+   (``operators/scan.py::global_scan`` -- bucket-keyed, no per-group
    concentration anywhere);
-3. a SECOND, group-rollup-sized ``global_rank_cumsum`` over the
-   per-group totals in the SAME key order, whose exclusive prefix IS
-   each group's rank offset — both scans use Spark's asc-nulls-first
-   (NaN-last) range order, so the offsets index the value order
-   exactly, for any key type and any key-domain cardinality;
+3. a SECOND, group-rollup-sized ``global_scan`` over the per-group
+   totals in the SAME key order, whose exclusive prefix IS each group's
+   rank offset -- both scans sort with Spark's asc-nulls-first (NaN-
+   last) order, so the offsets index the value order exactly, for any
+   key type and any key-domain cardinality;
 4. per-(group, quantile) selection rows derived column-wise from the
    offset frame (``explode`` of a literal array of ``(q_i, q_v)``
    structs carrying explicit quantile indices — the floor/coefficient
@@ -50,15 +50,9 @@ NULL values are ignored (``percentile`` semantics); a group with only
 NULLs yields NO row (vs percentile's NULL row) — callers that need the
 NULL row should left-join this result back to the key rollup.
 
-Lifetime: with ``materialize=True`` (default) the small final frame is
-persisted and counted, after which the two scan intermediates are
-eagerly unpersisted — long sessions no longer accumulate cached
-range-partitioned rollups until ContextCleaner GC (r09 advisor). Pass
-``materialize=False`` to stay fully lazy; the scan handles are then
-appended to ``persist_handles`` for the caller to unpersist after its
-action (unpersisting BEFORE the action would let a recompute re-sample
-range boundaries out from under the captured offset maps — see
-``operators/scan.py``).
+Lifetime: the small final frame is persisted and counted, after which
+the two scans' persisted inputs are eagerly unpersisted, so long
+sessions do not accumulate cached rollups until ContextCleaner GC.
 
 Reference parity note: the reference's row-at-a-time engine sorts each
 group in memory for its percentile aggregate (SURVEY.md §2.3 A7); this
@@ -73,13 +67,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 from testlog_etl_spark.util import persist_once
-
-from testlog_etl_spark.operators.scan import (
-    global_rank_cumsum,
-    global_rank_cumsum_inplan,
-    inplan_rank_supported,
-)
 
 
 def _expr_key(vcol: Column) -> str:
@@ -114,10 +103,9 @@ def attach_group_quantiles(
     ``specs`` are ``(out_name, value column, q)``. Empty ``specs``
     returns ``base`` unchanged.
 
-    EAGER under the default ``materialize=True`` of the underlying
-    ``group_quantiles_exact``: constructing the returned DataFrame runs
-    the two scan jobs immediately and leaves one small (group-rollup-
-    sized) frame persisted. Pass ``persist_handles`` to receive that
+    EAGER like the underlying ``group_quantiles_exact``: constructing
+    the returned DataFrame runs the two scans immediately and leaves one
+    small (group-rollup-sized) frame persisted. Pass ``persist_handles`` to receive that
     cached frame and ``unpersist()`` it after your action; without it
     the cache lives until session end (bounded: one rollup-sized frame
     per call).
@@ -203,7 +191,6 @@ def group_quantiles_exact(
     qs: Sequence[float],
     outs: Sequence[str],
     num_parts: int = 32,
-    materialize: bool = True,
     persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """One row per group with one DOUBLE column per requested quantile
@@ -231,31 +218,12 @@ def group_quantiles_exact(
         .agg(F.count(F.lit(1)).cast("double").alias("_cnt"))
     )
     handles: list[DataFrame] = []
-    # r13: the any-type in-plan rank (sampled struct boundaries, one
-    # hash exchange, no sampling pass, no mapInArrow Python boundary)
-    # serves every atomic orderable key; exotic key types keep the
-    # proven range scan (differential-pinned equal either way).
-    use_inplan = inplan_rank_supported(pv, [*keys, val])
-    if use_inplan:
-        ranked = global_rank_cumsum_inplan(
-            pv,
-            [*keys, val],
-            val_col="_cnt",
-            rank_out="_i",
-            cum_out="_gcum",
-            num_buckets=num_parts,
-            persist_handles=handles,
-        )
-    else:
-        ranked = global_rank_cumsum(
-            pv,
-            [F.col(k).asc() for k in keys] + [F.col(val).asc()],
-            val_col="_cnt",
-            rank_out="_i",
-            cum_out="_gcum",
-            num_parts=num_parts,
-            persist_handles=handles,
-        )
+    ranked = global_scan(
+        pv,
+        [ScanSpec((*keys, val), val="_cnt", cum="_gcum")],
+        num_buckets=num_parts,
+        persist_handles=handles,
+    )
     # Per-group totals read the PERSISTED rollup the scan just built
     # (handles[0]) instead of recomputing pv from the source — at scale
     # the source scan dominates and must run exactly once. A second,
@@ -264,26 +232,12 @@ def group_quantiles_exact(
     # the distributed form of the r09 driver walk. Counts are
     # integer-valued doubles, so every fold order is exact.
     gt = handles[0].groupBy(*keys).agg(F.sum("_cnt").alias("_n"))
-    if use_inplan:
-        offs = global_rank_cumsum_inplan(
-            gt,
-            list(keys),
-            val_col="_n",
-            rank_out="_gi",
-            cum_out="_gn",
-            num_buckets=num_parts,
-            persist_handles=handles,
-        )
-    else:
-        offs = global_rank_cumsum(
-            gt,
-            [F.col(k).asc() for k in keys],
-            val_col="_n",
-            rank_out="_gi",
-            cum_out="_gn",
-            num_parts=num_parts,
-            persist_handles=handles,
-        )
+    offs = global_scan(
+        gt,
+        [ScanSpec(tuple(keys), val="_n", cum="_gn")],
+        num_buckets=num_parts,
+        persist_handles=handles,
+    )
     # per-(group, quantile) selection rows, column-wise: position
     # p = q·(n−1); covering ranks _lo = ⌊p⌋+1 and _lo+1; engine-exact
     # coefficients c_hi = p − ⌊p⌋ and c_lo = (⌊p⌋+1) − p (NOT 1 − c_hi,
@@ -353,17 +307,13 @@ def group_quantiles_exact(
             .alias(out)
         )
     result = per_key.select(*cols)
-    if materialize:
-        # eager: persist the (group-rollup-sized) result, run its one
-        # action, then free the two scan intermediates immediately —
-        # the caller reads the cached result, and a lineage recompute
-        # can no longer observe re-sampled range boundaries
-        result = persist_once(result)
-        result.count()
-        for h in handles:
-            h.unpersist()
-        if persist_handles is not None:
-            persist_handles.append(result)
-    elif persist_handles is not None:
-        persist_handles.extend(handles)
+    # eager: persist the (group-rollup-sized) result, run its one
+    # action, then free the two scans' persisted inputs immediately --
+    # the caller reads the cached result
+    result = persist_once(result)
+    result.count()
+    for h in handles:
+        h.unpersist()
+    if persist_handles is not None:
+        persist_handles.append(result)
     return result

@@ -33,7 +33,7 @@ applied implicitly.
 r11: the passes run on ``mapInArrow`` (numpy on the two metric columns,
 Arrow ``take`` for the survivors), not ``mapInPandas`` -- pass-through
 columns keep decimal/timestamp/NaN fidelity instead of riding a pandas
-float64 round trip (the r10 ``operators/scan.py`` rationale).
+float64 round trip, which conflates NaN with NULL.
 """
 
 from __future__ import annotations

@@ -14,8 +14,8 @@ The scalable shape is prune-then-merge:
 1. **Local prune, zero shuffle**: an Arrow-batched `mapInArrow` pass
    keeps each batch's top-k per group (Arrow sort_indices + numpy
    group-boundary ranks -- no pandas round trip, so pass-through
-   columns keep decimal/timestamp/NaN fidelity, same r10 rationale as
-   operators/scan.py). Output per batch is <= k rows per group seen in
+   columns keep decimal/timestamp/NaN fidelity: a pandas float64 round
+   trip conflates NaN with NULL). Output per batch is <= k rows per group seen in
    that batch -- the only Python in the operator, O(batch log batch),
    and exact: a row outside its batch's local top-k cannot be in the
    global top-k. (A float group KEY containing NaN splits into

@@ -777,7 +777,7 @@ FROM k
 """,
 )
 def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     r = orders.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev"))
@@ -786,7 +786,7 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning: the rank runs over the CUSTOMER grain, which scales
     # with the data (~1.5e10 rows at 100 TB TPC-H) -- an unpartitioned
     # window would put the whole rollup in one task. n rides along free.
-    k = global_rank_inplan(r, "rev", tiebreak=("o_custkey",), rank_out="i", n_out="n")
+    k = global_scan(r, [ScanSpec(("rev", "o_custkey"), rank="i", n="n")])
     nd = F.col("n").cast("double")
     return k.agg(
         F.any_value(F.col("n")).alias("n_customers"),
@@ -828,7 +828,7 @@ FROM c GROUP BY abc_class ORDER BY abc_class
 """,
 )
 def agg_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     r = li.groupBy("l_partkey").agg(
@@ -846,14 +846,8 @@ def agg_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpartitioned window: the scan runs over the PART grain, which
     # scales with the data (~2e10 rows at 100 TB TPC-H). The grand
     # total falls out of the same bounded rollup.
-    c = global_rank_inplan(
-        ri,
-        "rev_i",
-        tiebreak=("l_partkey",),
-        descending=True,
-        val_col="rev_i",
-        cum_out="cum",
-        total_out="tot",
+    c = global_scan(
+        ri, [ScanSpec(("rev_i desc", "l_partkey"), val="rev_i", cum="cum", total="tot")]
     )
     cls = (
         F.when(F.col("cum") / F.col("tot") <= 0.80, "A")
@@ -960,10 +954,10 @@ def agg_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="deterministic keyset pagination at scale: page 3 (ranks "
     "101-150) of parts by revenue. LIMIT/OFFSET pulls offset+limit "
     "rows into one task and re-sorts per page; the in-plan bucketed "
-    "scan (operators/scan.py::global_rank_inplan) assigns a GLOBAL "
-    "rank in one bucket-keyed shuffle (approx-percentile boundaries "
-    "-> order-contiguous buckets -> broadcast offsets + per-bucket "
-    "row_number; no sampling job, no driver collect, no Python "
+    "scan (operators/scan.py::global_scan) assigns a GLOBAL "
+    "rank in one bucket-keyed shuffle (sampled struct boundaries "
+    "-> order-contiguous buckets -> literal offsets + per-bucket "
+    "row_number; two bounded build jobs, no range shuffle, no Python "
     "boundary), so any page is a filter on the rank column and deep "
     "pages cost the same as page one. Ordering folds integral cents "
     "(ROUND(rev,4)*1e4) so rank order cannot drift between engines at "
@@ -983,7 +977,7 @@ SELECT i, l_partkey, rev FROM k WHERE i BETWEEN 101 AND 150 ORDER BY i
     bench=True,
 )
 def topk_global_paging(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     r = li.groupBy("l_partkey").agg(
@@ -995,9 +989,8 @@ def topk_global_paging(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles ~|page buckets|/nb of the rollup instead of all of it.
     # Surviving ranks are exact (offsets are global literals), so the
     # BETWEEN filter below is unchanged.
-    k = global_rank_inplan(
-        ri, "rev_i", tiebreak=("l_partkey",), descending=True, rank_out="i",
-        rank_range=(101, 150),
+    k = global_scan(
+        ri, [ScanSpec(("rev_i desc", "l_partkey"), rank="i", rank_range=(101, 150))]
     )
     return (
         k.filter(F.col("i").between(101, 150))
@@ -1924,7 +1917,7 @@ def orders_littles_law_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_lorenz_deciles",
     doc="Lorenz curve deciles of customer revenue (the gini query's "
     "presentable companion): global revenue rank via the in-plan "
-    "bucketed scan (operators/scan.py::global_rank_inplan -- "
+    "bucketed scan (operators/scan.py::global_scan -- "
     "no single-partition window; deciles from integer rank "
     "arithmetic), then the decile rollup and a 10-row cumulative "
     "share. Bottom-decile share vs top-decile share is the "
@@ -1958,16 +1951,15 @@ ORDER BY decile
 def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     cx = orders.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.sum("o_totalprice").alias("x")
     )
     handles: list = []
-    r = global_rank_inplan(
-        cx, "x", tiebreak=("cust",), rank_out="i",
-        n_out="n", persist_handles=handles,
+    r = global_scan(
+        cx, [ScanSpec(("x", "cust"), rank="i", n="n")], persist_handles=handles
     )
     d = r.groupBy(F.expr("((i - 1) * 10) div n").cast("int").alias("decile")).agg(
         F.count(F.lit(1)).alias("n_customers"), F.sum("x").alias("rev")
@@ -2161,7 +2153,7 @@ ORDER BY class_1995, class_1996
 """,
 )
 def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
 
@@ -2171,14 +2163,8 @@ def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("o_custkey").alias("cust"))
             .agg(F.round(F.sum("o_totalprice") * 100, 0).alias("rev_i"))
         )
-        c = global_rank_inplan(
-            r,
-            "rev_i",
-            tiebreak=("cust",),
-            descending=True,
-            val_col="rev_i",
-            cum_out="cum",
-            total_out="tot",
+        c = global_scan(
+            r, [ScanSpec(("rev_i desc", "cust"), val="rev_i", cum="cum", total="tot")]
         )
         share = F.col("cum") / F.col("tot")
         return c.select(
@@ -2622,9 +2608,10 @@ def agg_binned_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "day), frequency (order count), monetary (revenue sum) are each "
     "quintile-scored 1..5 and customers grouped into (r,f,m) cells. "
     "The quintile needs a GLOBAL rank over a grain that scales with "
-    "the data, so each metric rides operators/scan.py::"
-    "global_rank_inplan (one bucket-keyed shuffle per metric; offsets "
-    "from a bounded bucket rollup, fully in-plan) -- never an "
+    "the data, so the three metrics ride ONE operators/scan.py::"
+    "global_scan call (one bucket-keyed shuffle per metric; boundaries "
+    "and offsets from two bounded build jobs shared by all three, "
+    "fully in-plan) -- never an "
     "unpartitioned ntile window over the customer grain (the "
     "window_lint rule). "
     "The score is computed EXPLICITLY from (rank, n) with integer "
@@ -2660,7 +2647,7 @@ ORDER BY r_score, f_score, m_score
 """,
 )
 def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_ranks_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     c = orders.groupBy(F.col("o_custkey").alias("cust")).agg(
@@ -2670,23 +2657,17 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("freq"),
         F.round(F.sum("o_totalprice"), 4).alias("mon"),
     )
-    ranked = global_ranks_inplan(
+    # note: the row order feeding the final AVG(mon) follows the last
+    # rank window's bucket partitioning, and at sf0.01 two (r,f,m) cells
+    # sit within half an ulp of a ROUND(..., 4) boundary -- the per-spec
+    # windows' fold order is what the correctness history pins.
+    ranked = global_scan(
         c,
         [
-            {"key": "rec", "tiebreak": ("cust",), "descending": True, "rank_out": "rr", "n_out": "n"},
-            {"key": "freq", "tiebreak": ("cust",), "descending": True, "rank_out": "rf"},
-            {"key": "mon", "tiebreak": ("cust",), "descending": True, "rank_out": "rm"},
+            ScanSpec(("rec desc", "cust"), rank="rr", n="n"),
+            ScanSpec(("freq desc", "cust"), rank="rf"),
+            ScanSpec(("mon desc", "cust"), rank="rm"),
         ],
-        # r13 note: fold_key="cust" would collapse the three bucket
-        # exchanges into one (+ one re-assembly hash-agg) and the RANKS
-        # are differential-pinned bit-identical -- but the fold changes
-        # the row order feeding the final AVG(mon), and at sf0.01 two
-        # (r,f,m) cells sit within half an ulp of a ROUND(..., 4)
-        # boundary, flipping avg_monetary's last digit vs the DuckDB
-        # oracle. The oracle states ROUND(AVG(mon), 4) over engine fold
-        # order, so the query keeps the default per-spec windows whose
-        # fold order the correctness history pins; the single-exchange
-        # form stays available on the operator for rank-only consumers.
     )
     scored = ranked.select(
         "mon",

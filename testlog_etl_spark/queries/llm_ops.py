@@ -2810,7 +2810,7 @@ FROM c WHERE cum <= 50000 GROUP BY source ORDER BY source
 )
 def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from testlog_etl_spark.operators import filtering
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"].filter(
         F.col("text").isNotNull() & (F.trim("text") != "")
@@ -2820,9 +2820,7 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "source", "doc_id", snapped.alias("s"), textstats.token_count(F.col("text")).alias("n_tok")
     )
-    c = global_rank_inplan(
-        base, "s", tiebreak=("doc_id",), descending=True, val_col="n_tok", cum_out="cum"
-    )
+    c = global_scan(base, [ScanSpec(("s desc", "doc_id"), val="n_tok", cum="cum")])
     return (
         c.filter(F.col("cum") <= 50000)
         .groupBy("source")
@@ -3081,12 +3079,10 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first_doc/100, which SCALES with the corpus (tens of millions of
     # buckets at 100 TB) -- an unpartitioned window would put them all
     # in one task (window_lint r05 catch)
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     return (
-        global_rank_inplan(
-            b, "bucket", val_col="new_terms", cum_out="_cum"
-        )
+        global_scan(b, [ScanSpec(("bucket",), val="new_terms", cum="_cum")])
         .select("bucket", "new_terms", F.col("_cum").cast("long").alias("vocab_size"))
         .orderBy("bucket")
     )
@@ -3824,7 +3820,7 @@ def dedup_jaccard_prefixfilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_balanced_shards",
     doc="balanced training-shard assignment: docs ranked by token count "
     "(desc, doc_id ties) via the in-plan bucketed global scan "
-    "(operators/scan.py::global_rank_inplan -- no single-partition "
+    "(operators/scan.py::global_scan -- no single-partition "
     "window), then dealt round-robin into 16 shards: sorted round-"
     "robin is the classic near-LPT heuristic, largest items spread "
     "first so shard token totals stay within one max-doc of each "
@@ -3854,7 +3850,7 @@ ORDER BY shard
 """,
 )
 def corpus_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
     from testlog_etl_spark.util import persist_once
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
@@ -3862,13 +3858,8 @@ def corpus_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.size(textstats.tokens(F.col("text"))).alias("n_tok")
     )
     handles: list = []
-    r = global_rank_inplan(
-        d,
-        "n_tok",
-        tiebreak=("doc_id",),
-        descending=True,
-        rank_out="i",
-        persist_handles=handles,
+    r = global_scan(
+        d, [ScanSpec(("n_tok desc", "doc_id"), rank="i")], persist_handles=handles
     )
     s = r.groupBy(((F.col("i") - 1) % 16).alias("shard")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -6798,21 +6789,14 @@ FROM d, tot ORDER BY decile
 """,
 )
 def eval_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     s = docs.select(
         "doc_id", "n_chars", (F.col("lang") == "en").cast("int").alias("y")
     )
-    ranked = global_rank_inplan(
-        s,
-        "n_chars",
-        tiebreak=("doc_id",),
-        descending=True,
-        val_col="y",
-        rank_out="i",
-        cum_out="cum",
-        n_out="n_tot",
+    ranked = global_scan(
+        s, [ScanSpec(("n_chars desc", "doc_id"), rank="i", val="y", cum="cum", n="n_tot")]
     )
     d = ranked.groupBy(
         F.expr("(i - 1) * 10 div n_tot + 1").cast("long").alias("decile")
@@ -7380,15 +7364,13 @@ ORDER BY i
 """,
 )
 def sample_systematic_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     base = orders.select(
         "o_orderkey", F.col("o_orderdate").cast("date").alias("day"), "o_orderdate"
     )
-    r = global_rank_inplan(
-        base, "o_orderdate", tiebreak=("o_orderkey",), rank_out="i"
-    )
+    r = global_scan(base, [ScanSpec(("o_orderdate", "o_orderkey"), rank="i")])
     return (
         r.filter(F.pmod(F.col("i") - 17, F.lit(100)) == 0)
         .select("i", "o_orderkey", "day")
@@ -7701,7 +7683,7 @@ FROM cells
 )
 def eval_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     from testlog_etl_spark.operators import filtering
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"].filter(
         F.col("text").isNotNull() & (F.trim("text") != "")
@@ -7713,9 +7695,7 @@ def eval_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         F.least(F.floor(score * 5).cast("int"), F.lit(4)).alias("a"),
     )
-    r = global_rank_inplan(
-        s, "n_chars", tiebreak=("doc_id",), rank_out="i", n_out="n_tot"
-    ).select("a", F.expr("cast((i - 1) * 5 div n_tot as int)").alias("b"))
+    r = global_scan(s, [ScanSpec(("n_chars", "doc_id"), rank="i", n="n_tot")]).select("a", F.expr("cast((i - 1) * 5 div n_tot as int)").alias("b"))
     o = r.groupBy("a", "b").agg(F.count(F.lit(1)).alias("o"))
     ma = o.groupBy("a").agg(F.sum("o").alias("na"))
     mb = o.groupBy("b").agg(F.sum("o").alias("nb"))
@@ -7784,7 +7764,7 @@ FROM c, tot
 )
 def eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     from testlog_etl_spark.operators import filtering
-    from testlog_etl_spark.operators.scan import global_ranks_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"].filter(
         F.col("text").isNotNull() & (F.trim("text") != "")
@@ -7795,15 +7775,13 @@ def eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = s.groupBy("score").agg(F.sum("y").alias("np"), F.count(F.lit(1)).alias("n"))
     # cumulate positives and totals in score-DESC order via the scan:
     # the distinct-score grain scales with the 2^20 grid occupancy
-    c2 = global_ranks_inplan(
+    c2 = global_scan(
         g.withColumn("_np", F.col("np").cast("double")).withColumn(
             "_n", F.col("n").cast("double")
         ),
         [
-            {"key": "score", "descending": True, "val_col": "_np",
-             "cum_out": "cum_p"},
-            {"key": "score", "descending": True, "val_col": "_n",
-             "rank_out": "i2", "cum_out": "cum_n"},
+            ScanSpec(("score desc",), val="_np", cum="cum_p"),
+            ScanSpec(("score desc",), rank="i2", val="_n", cum="cum_n"),
         ],
     )
     tot = g.agg(F.sum("np").alias("p"))

@@ -1662,11 +1662,11 @@ SELECT (SELECT count(*) FROM adj)::BIGINT AS n_pairs,
 """,
 )
 def dq_id_time_inversions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     base = orders.select("o_orderkey", F.col("o_orderdate").cast("date").alias("day"))
-    r = global_rank_inplan(base, "o_orderkey", rank_out="i")
+    r = global_scan(base, [ScanSpec(("o_orderkey",), rank="i")])
     a = r.select(F.col("i").alias("ia"), F.col("day").alias("d0"))
     b = r.select(F.col("i").alias("ib"), F.col("day").alias("d1"))
     adj = a.join(b, F.col("ib") == F.col("ia") + 1).select(

@@ -285,31 +285,22 @@ def stats_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source (a scaling grain: |source| is bounded but every source's
     # docs grow with the corpus) on one task, and median()/percentile()
     # over pr buffer every doc's rank per source on one reducer. Both
-    # replaced: the rank comes from ONE range-partitioned hierarchical
-    # scan (per-source rank = global rank - source offset; the order
+    # replaced: the rank comes from ONE bucketed global scan
+    # (per-source rank = global rank - source offset; the order
     # has a doc_id tie-break so RANK == ROW_NUMBER and percent_rank =
     # (rank-1)/(n-1) exactly), the quantiles from rank selection
     # (operators/scan_quantile.py).
-    from testlog_etl_spark.operators.scan import global_rank_cumsum_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
     from testlog_etl_spark.operators.scan_quantile import group_quantiles_exact
 
-    # `handles` exists to READ the first scan's persisted rollup
+    # `handles` exists to READ the first scan's persisted input
     # (handles[0], below) without re-scanning the source. The caches
-    # intentionally live until session end: the returned frame is lazy,
-    # and unpersisting before the caller's action would let a lineage
-    # recompute re-sample boundaries out from under the captured
-    # offset maps (operators/scan.py module docstring). Bounded leak:
-    # two rollup-sized frames per call. r13: both scans ride the
-    # any-type in-plan rank (sampled struct boundaries — string keys
-    # compare in-engine), dropping the range-sampling jobs and the
-    # mapInArrow Python boundary from this path.
+    # live until session end: the returned frame is lazy and reads
+    # them. Bounded leak: two rollup-sized frames per call. Both scans
+    # compare the string key in-engine (sampled struct boundaries).
     handles: list = []
-    ranked = global_rank_cumsum_inplan(
-        sc,
-        ["source", "s", "doc_id"],
-        val_col=None,
-        rank_out="_gr",
-        persist_handles=handles,
+    ranked = global_scan(
+        sc, [ScanSpec(("source", "s", "doc_id"), rank="_gr")], persist_handles=handles
     )
     # per-source rank offsets via a second, source-rollup-sized scan in
     # the SAME key order (the distributed form of the r09 driver walk —
@@ -317,13 +308,8 @@ def stats_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # asc ordering, so the offsets index the global rank order exactly,
     # with no collect and no Python-vs-UTF8 sort divergence)
     totals = handles[0].groupBy("source").agg(F.count(F.lit(1)).cast("double").alias("_nd"))
-    offs = global_rank_cumsum_inplan(
-        totals,
-        ["source"],
-        val_col="_nd",
-        rank_out="_oi",
-        cum_out="_cum",
-        persist_handles=handles,
+    offs = global_scan(
+        totals, [ScanSpec(("source",), val="_nd", cum="_cum")], persist_handles=handles
     ).select(
         "source",
         (F.col("_cum") - F.col("_nd")).cast("long").alias("_off"),
@@ -1544,22 +1530,22 @@ FROM s
 """,
 )
 def stats_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import group_quantile_exact
+    from testlog_etl_spark.operators.scan_quantile import group_quantiles_exact
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     # Per-group medians via the rank-selection operator, NOT the exact
     # percentile() aggregate: percentile buffers every group value in
     # its aggregation state (measured 80 KB/shuffle-record here at
     # sf0.1 -- the r09 window shuffle audit), and each group's buffer
-    # merge lands on one reducer; group_quantile_exact shuffles only
+    # merge lands on one reducer; group_quantiles_exact shuffles only
     # (grp, value, count) rollup rows and is bit-identical to
-    # percentile()/quantile_cont (operators/scan.py).
-    med = group_quantile_exact(
+    # percentile()/quantile_cont (operators/scan_quantile.py).
+    med = group_quantiles_exact(
         orders.select(F.col("o_orderpriority").alias("grp"), "o_totalprice"),
         "grp",
         "o_totalprice",
-        0.5,
-        out="md",
+        [0.5],
+        ["md"],
     )
     z = (
         orders.join(
@@ -3462,8 +3448,8 @@ def stats_simpsons_paradox_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "approximated ranks k = (n -/+ 1.959964*sqrt(n))/2): the CI "
     "bounds are the values AT those global ranks, so the operator is "
     "exact selection, not estimation -- and rank selection at the "
-    "order-total grain rides operators/scan.py::global_rank_cumsum "
-    "(range shuffle + offset broadcast), never a single-partition "
+    "order-total grain rides operators/scan.py::global_scan "
+    "(bucket-keyed shuffle + literal offsets), never a single-partition "
     "sort. Both engines compute identical rank integers (sqrt is "
     "correctly-rounded IEEE; floor/ceil of identical doubles agree) "
     "and then pass parquet values through untouched -- no float "
@@ -3492,15 +3478,12 @@ FROM k
 """,
 )
 def stats_median_ci_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
-    ranked = global_rank_inplan(
+    ranked = global_scan(
         orders.select(F.col("o_totalprice").alias("v"), "o_orderkey"),
-        "v",
-        tiebreak=("o_orderkey",),
-        rank_out="i",
-        n_out="n",
+        [ScanSpec(("v", "o_orderkey"), rank="i", n="n")],
     )
     k = ranked.select("n").limit(1).select(
         "n",
@@ -3884,9 +3867,9 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the data (doubles are near-unique), so an unpartitioned
     # window here is exactly what window_lint forbids. cum is an exact
     # integer in double form, so avg_rank is engine-exact.
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
-    r = global_rank_inplan(v, "x", val_col="t", cum_out="_cum").select(
+    r = global_scan(v, [ScanSpec(("x",), val="t", cum="_cum")]).select(
         "x",
         "t",
         (F.col("_cum") - F.col("t") + (F.col("t") + 1) / 2.0).alias("avg_rank"),
@@ -4469,15 +4452,13 @@ FROM s
 """,
 )
 def stats_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     v = orders.select(
         F.round("o_totalprice", 0).cast("long").alias("x"), "o_orderkey"
     )
-    r = global_rank_inplan(
-        v, "x", tiebreak=("o_orderkey",), rank_out="i", n_out="n"
-    )
+    r = global_scan(v, [ScanSpec(("x", "o_orderkey"), rank="i", n="n")])
     s = r.agg(
         F.max("n").alias("n"),
         F.sum((2 * F.col("i") - F.col("n") - 1) * F.col("x")).alias("w"),

@@ -750,17 +750,13 @@ def stream_record_breakers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the per-hour accepted/dropped counts are an auditable readout "
     "(the operations question 'what did the watermark cost us?'). "
     "The running max over a data-scale total order runs through "
-    "operators/scan.py::global_running_max_inplan (bucketed cummax: "
+    "operators/scan.py::global_scan (bucketed cummax: "
     "sampled struct boundaries, literal prefix-max carries, one hash "
     "exchange, zero Python) -- no single-partition window.",
     oracle=None,  # filled below: shares the generated xxh64 SQL
 )
 def stream_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.operators.scan import (
-        global_running_max,
-        global_running_max_inplan,
-        inplan_rank_supported,
-    )
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
     from testlog_etl_spark.tables import load_tables
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
@@ -773,23 +769,13 @@ def stream_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.pmod(F.xxhash64(F.col("event_id").cast("string")), F.lit(120))
         ).cast("double").alias("arr_sec"),
     )
-    # r13: the in-plan bucketed cummax (one hash exchange, zero Python)
-    # replaces the range-shuffle + mapInArrow scan for atomic orderable
-    # keys -- this was the registry's last Python-boundary scan caller.
-    # Differential-pinned equal (test_global_running_max_inplan_matches_
-    # range_scan); exotic key types would fall back to the range scan.
-    if inplan_rank_supported(base, ["arr_sec", "event_id"]):
-        scanned = global_running_max_inplan(
-            base, ["arr_sec", "event_id"], "ts_sec", out="seen_max", exclusive=True
-        )
-    else:  # pragma: no cover - current schema always supports in-plan
-        scanned = global_running_max(
-            base,
-            [F.col("arr_sec"), F.col("event_id")],
-            "ts_sec",
-            out="seen_max",
-            exclusive=True,
-        )
+    # exclusive running max over the arrival order: one hash exchange,
+    # zero Python (differential-pinned against a single-partition
+    # window in tests/test_diff.py)
+    scanned = global_scan(
+        base,
+        [ScanSpec(("arr_sec", "event_id"), val="ts_sec", max="seen_max", exclusive=True)],
+    )
     flagged = scanned.withColumn(
         "late", F.col("ts_sec") < F.col("seen_max") - 60
     )

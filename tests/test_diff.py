@@ -254,205 +254,214 @@ def test_lindley_window_form_equals_sequential_fold(spark):
 
 
 # ---------------------------------------------------------------- scan
+#
+# Every global_scan output is checked against a single-partition
+# reference: Spark's Window.orderBy over the whole frame (ranks, running
+# sums) or a Python replay of the sorted rows (the running max's
+# missing-value contract).
 
 
-def test_global_rank_cumsum_matches_naive_window(spark):
+def _window_ref(df, order, val=None):
+    """(rank, running sum) per id from one unpartitioned window."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from testlog_etl_spark.operators.scan import global_rank_cumsum
+    cols = []
+    for o in order:
+        name, _, d = o.rpartition(" ")
+        cols.append(F.col(name).desc() if d == "desc" else F.col(o).asc())
+    w = Window.orderBy(*cols)
+    ref = df.withColumn("_ri", F.row_number().over(w))
+    if val:
+        v = F.coalesce(F.col(val).cast("double"), F.lit(0.0))
+        ref = ref.withColumn("_rc", F.sum(v).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+    return {r["id"]: (r["_ri"], r["_rc"] if val else None) for r in ref.collect()}
 
+
+def _check_scan(df, order, nbk, val="t"):
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
+
+    got = global_scan(
+        df,
+        [ScanSpec(order, rank="i", val=val, cum="c", n="n", total="tt")],
+        num_buckets=nbk,
+    )
+    assert got.dtypes[-4:] == [("i", "bigint"), ("c", "double"), ("n", "bigint"), ("tt", "double")]
+    rows = got.collect()
+    want = _window_ref(df, order, val)
+    assert {r["id"]: (r["i"], r["c"]) for r in rows} == want, (order, nbk)
+    tot = max(want.values())[1]  # the last-ranked row's running sum
+    assert all(r["n"] == len(want) and r["tt"] == tot for r in rows), (order, nbk)
+    return got
+
+
+def test_global_rank_cumsum_matches_naive_window(spark):
     rows = [(i, float((i * 37) % 101)) for i in range(200)]
     df = spark.createDataFrame(rows, "id bigint, v double")
-    got = global_rank_cumsum(
-        df,
-        [F.col("v").desc(), F.col("id").asc()],
-        val_col="v",
-        rank_out="i",
-        cum_out="cum",
-        n_out="n",
-        total_out="tot",
-        num_parts=7,
-    )
-    w = Window.orderBy(F.col("v").desc(), F.col("id").asc())
-    ref = (
-        df.withColumn("i", F.row_number().over(w))
-        .withColumn("cum", F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    )
-    g = {r["id"]: (r["i"], round(r["cum"], 6), r["n"], round(r["tot"], 6)) for r in got.collect()}
-    e = {r["id"]: (r["i"], round(r["cum"], 6)) for r in ref.collect()}
-    tot = round(sum(v for _, v in rows), 6)
-    assert len(g) == 200
-    for k, (i, cum, n, t) in g.items():
-        assert (i, cum) == e[k]
-        assert n == 200 and t == tot
+    _check_scan(df, ("v desc", "id"), 7, val="v")
 
 
 def test_global_rank_cumsum_empty_and_null_vals(spark):
-    from pyspark.sql import functions as F
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
-    from testlog_etl_spark.operators.scan import global_rank_cumsum
-
+    spec = [ScanSpec(("id",), rank="i", val="v", cum="cum")]
     empty = spark.createDataFrame([], "id bigint, v double")
-    assert global_rank_cumsum(empty, [F.col("id").asc()], val_col="v").count() == 0
+    assert global_scan(empty, spec).count() == 0
     # null values contribute 0 to the running sum, rows still ranked
     df = spark.createDataFrame([(1, None), (2, 5.0), (3, None)], "id bigint, v double")
-    got = {r["id"]: (r["i"], r["cum"]) for r in
-           global_rank_cumsum(df, [F.col("id").asc()], val_col="v", num_parts=2).collect()}
+    got = {r["id"]: (r["i"], r["cum"]) for r in global_scan(df, spec, num_buckets=2).collect()}
     assert got == {1: (1, 0.0), 2: (2, 5.0), 3: (3, 5.0)}
 
 
 @pytest.mark.slow
 def test_global_rank_inplan_matches_range_scan(spark):
-    """r12: the in-plan bucketed rank (literal boundary/offset fold, one
-    exchange, no Python) must agree with the range-shuffle scan it
-    replaces on adversarial keys: ties, NULLs, NaNs, both directions,
-    degenerate bucket counts (fewer and far more buckets than distinct
-    keys)."""
+    """Numeric keys against the single-partition window: ties, NULLs,
+    NaNs, +-0.0, +-inf, both directions, degenerate bucket counts
+    (fewer and far more buckets than distinct keys)."""
     import random
-
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators.scan import (
-        global_rank_cumsum,
-        global_rank_inplan,
-    )
 
     random.seed(7)
     rows = []
     for i in range(800):
-        v = random.choice([None, float("nan")] + [float(random.randint(0, 25))] * 18)
+        v = random.choice(
+            [None, float("nan"), 0.0, -0.0, float("inf"), float("-inf")]
+            + [float(random.randint(0, 25))] * 18
+        )
         rows.append((i, v, float(random.randint(0, 5))))
     df = spark.createDataFrame(rows, "id long, x double, t double")
-    for desc in (False, True):
+    for order in (("x", "id"), ("x desc", "id")):
         for nbk in (2, 5, 64):
-            order = [F.col("x").desc() if desc else F.col("x").asc(), F.col("id").asc()]
-            old = global_rank_cumsum(
-                df, order, val_col="t", rank_out="i", cum_out="c",
-                n_out="n", total_out="tt",
-            )
-            new = global_rank_inplan(
-                df, "x", tiebreak=("id",), descending=desc, val_col="t",
-                rank_out="i", cum_out="c", n_out="n", total_out="tt",
-                num_buckets=nbk,
-            )
-            assert old.dtypes == new.dtypes
-            o = {r["id"]: (r["i"], r["c"], r["n"], r["tt"]) for r in old.collect()}
-            nw = {r["id"]: (r["i"], r["c"], r["n"], r["tt"]) for r in new.collect()}
-            assert o == nw, (desc, nbk)
+            _check_scan(df, order, nbk)
 
 
 def test_global_ranks_inplan_batch_matches_chained(spark):
     """The batched multi-spec form must equal chaining single calls."""
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators.scan import (
-        global_rank_inplan,
-        global_ranks_inplan,
-    )
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     rows = [(i, float((i * 37) % 101), float((i * 13) % 17)) for i in range(300)]
     df = spark.createDataFrame(rows, "id long, a double, b double")
-    chained = global_rank_inplan(
-        df, "a", tiebreak=("id",), descending=True, rank_out="ra", n_out="n",
-        num_buckets=6,
-    )
-    chained = global_rank_inplan(
-        chained, "b", tiebreak=("id",), rank_out="rb", num_buckets=6
-    )
-    batch = global_ranks_inplan(
-        df,
-        [
-            {"key": "a", "tiebreak": ("id",), "descending": True,
-             "rank_out": "ra", "n_out": "n"},
-            {"key": "b", "tiebreak": ("id",), "rank_out": "rb"},
-        ],
-        num_buckets=6,
-    )
+    sa = ScanSpec(("a desc", "id"), rank="ra", n="n")
+    sb = ScanSpec(("b", "id"), rank="rb")
+    chained = global_scan(global_scan(df, [sa], num_buckets=6), [sb], num_buckets=6)
+    batch = global_scan(df, [sa, sb], num_buckets=6)
     c = {r["id"]: (r["ra"], r["n"], r["rb"]) for r in chained.collect()}
     g = {r["id"]: (r["ra"], r["n"], r["rb"]) for r in batch.collect()}
     assert c == g
 
 
-def test_global_ranks_inplan_fold_matches_default(spark):
-    """r13: the single-exchange fold_key mode (explode to (metric,
-    bucket) rows, one shared window, groupBy re-assembly) must be
-    row-identical to the per-spec default on adversarial keys: ties,
-    NULLs, NaNs, mixed directions, cumsums, degenerate bucket counts."""
+def test_global_scan_mixed_direction_orders(spark):
+    """Orders whose direction changes after the leading column(s): the
+    boundary prefix stops at the change, so heavy ties on the prefix
+    share a bucket and the window breaks them. Two orders in one call
+    (x desc with heavy ties, then a descending string key) at 2/5/64
+    buckets, each against the single-partition window."""
     import random
 
-    from testlog_etl_spark.operators.scan import global_ranks_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
-    random.seed(13)
-    rows = []
-    for i in range(600):
-        a = random.choice([None, float("nan")] + [float(random.randint(0, 20))] * 8)
-        b = float(random.randint(0, 9))
-        t = float(random.randint(0, 5))
-        rows.append((i, a, b, t))
-    df = spark.createDataFrame(rows, "id long, a double, b double, t double")
-    specs = [
-        {"key": "a", "tiebreak": ("id",), "descending": True, "rank_out": "ra",
-         "n_out": "n"},
-        {"key": "b", "tiebreak": ("id",), "rank_out": "rb", "val_col": "t",
-         "cum_out": "cb", "total_out": "tt"},
-        {"key": "b", "tiebreak": ("id",), "descending": True, "rank_out": "rbd"},
+    random.seed(41)
+    words = [None, "alpha", "ALPHA", "Ωmega", "déjà", "", "中文"]
+    rows = [
+        (i, float(random.choice([1, 1, 1, 1, 2, 3])), random.choice(words), float(i % 4))
+        for i in range(600)
     ]
-    cols = ("ra", "n", "rb", "cb", "tt", "rbd")
-    for nbk in (3, 64):
-        dflt = global_ranks_inplan(df, specs, num_buckets=nbk)
-        fold = global_ranks_inplan(df, specs, num_buckets=nbk, fold_key="id")
-        assert dflt.dtypes == fold.dtypes
-        d = {r["id"]: tuple(r[c] for c in cols) for r in dflt.collect()}
-        f = {r["id"]: tuple(r[c] for c in cols) for r in fold.collect()}
-        assert d == f, nbk
+    df = spark.createDataFrame(rows, "id long, x double, s string, t double")
+    ox, os_ = ("x desc", "id"), ("s desc", "x", "id")
+    want_x, want_s = _window_ref(df, ox, "t"), _window_ref(df, os_)
+    for nbk in (2, 5, 64):
+        got = global_scan(
+            df,
+            [ScanSpec(ox, rank="ix", val="t", cum="cx"), ScanSpec(os_, rank="is")],
+            num_buckets=nbk,
+        ).collect()
+        assert {r["id"]: (r["ix"], r["cx"]) for r in got} == want_x, nbk
+        assert {r["id"]: (r["is"], None) for r in got} == want_s, nbk
+
+
+def test_global_scan_caps_bucket_count(spark):
+    """num_buckets far above the cap: the executed plan carries at most
+    MAX_BUCKETS-1 boundary structs per order, and ranks stay exact."""
+    from testlog_etl_spark.operators.scan import MAX_BUCKETS
+
+    rows = [(i, float(i % 997), float(i % 3)) for i in range(3000)]
+    df = spark.createDataFrame(rows, "id long, x double, t double")
+    got = _check_scan(df, ("x", "id"), 100_000)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    # one boundary comparison per CASE term of the bucket projection
+    # (the executed AQE plan may print the projection more than once)
+    n_bnds = [
+        ln.count(" THEN 1 ELSE 0 END") for ln in plan.splitlines() if " AS _bkt0#" in ln
+    ]
+    assert MAX_BUCKETS == 256 and n_bnds, plan
+    assert all(0 < n <= MAX_BUCKETS - 1 for n in n_bnds), n_bnds
+
+
+def test_global_scan_batching_adds_no_build_jobs(spark):
+    """Three specs over one frame launch no more build-time jobs than
+    one spec: boundaries and rollups ride one job each per call."""
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
+
+    sc = spark.sparkContext
+    rows = [(i, i % 7, float((i * 13) % 29), float(i % 5)) for i in range(400)]
+
+    def build_jobs(specs, group):
+        # a fresh frame per call, so neither call finds the other's cache
+        df = spark.createDataFrame(rows, "id long, a long, b double, c double")
+        sc.setJobGroup(group, "global_scan build")
+        try:
+            global_scan(df, specs, num_buckets=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one = build_jobs([ScanSpec(("a desc", "id"), rank="r1", n="n")], "scan-jobs-1")
+    three = build_jobs(
+        [
+            ScanSpec(("a desc", "id"), rank="r1", n="n"),
+            ScanSpec(("b desc", "id"), rank="r2"),
+            ScanSpec(("c", "id"), rank="r3", val="b", cum="cb"),
+        ],
+        "scan-jobs-3",
+    )
+    assert 0 < three <= one, (one, three)
 
 
 def test_global_rank_inplan_rank_range_prunes_exactly(spark):
-    """r13: rank_range bucket pruning must keep EVERY row whose rank
-    falls in the page, with the identical rank values the unpruned
-    operator assigns -- across ties, desc, and page positions that
-    straddle bucket boundaries."""
+    """rank_range bucket pruning must keep EVERY row whose rank falls in
+    the page, with the identical rank values the unpruned scan assigns
+    -- across ties, desc, and page positions that straddle bucket
+    boundaries."""
     from pyspark.sql import functions as F
 
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     rows = [(i, float((i * 37) % 50)) for i in range(1000)]
     df = spark.createDataFrame(rows, "id long, v double")
-    for desc in (False, True):
-        full = global_rank_inplan(
-            df, "v", tiebreak=("id",), descending=desc, rank_out="i", num_buckets=8
-        )
+    for order in (("v", "id"), ("v desc", "id")):
+        full = global_scan(df, [ScanSpec(order, rank="i")], num_buckets=8)
         want = {r["id"]: r["i"] for r in full.collect() if 101 <= r["i"] <= 150}
-        paged = global_rank_inplan(
-            df, "v", tiebreak=("id",), descending=desc, rank_out="i",
-            num_buckets=8, rank_range=(101, 150),
-        )
+        paged = global_scan(df, [ScanSpec(order, rank="i", rank_range=(101, 150))], num_buckets=8)
         got = {r["id"]: r["i"] for r in paged.filter(F.col("i").between(101, 150)).collect()}
-        assert got == want, desc
+        assert got == want, order
         # pruning must actually drop non-covering buckets' rows
         assert paged.count() < 1000
     # page beyond the data -> empty, not an error
-    empty = global_rank_inplan(
-        df, "v", tiebreak=("id",), rank_out="i", num_buckets=8,
-        rank_range=(5000, 5100),
+    empty = global_scan(
+        df, [ScanSpec(("v", "id"), rank="i", rank_range=(5000, 5100))], num_buckets=8
     )
     assert empty.count() == 0
+    with pytest.raises(ValueError):
+        global_scan(df, [ScanSpec(("v", "id"), rank="i", val="v", cum="c", rank_range=(1, 2))])
 
 
 def test_global_rank_cumsum_inplan_matches_range_scan(spark):
-    """r13: the any-type in-plan rank (sampled struct boundaries, one
-    hash exchange, zero Python) must agree with the range-shuffle scan
-    on adversarial keys: non-ASCII strings, NULLs, ties, composite
-    (string, double) orders, cumsums, degenerate bucket counts."""
+    """Composite keys against the single-partition window: non-ASCII
+    strings, NULLs, NaNs, ties, a (string, double, id) order, cumsums,
+    degenerate bucket counts; and a non-atomic leading column, which
+    gets one bucket and stays exact."""
     import random
 
     from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators.scan import (
-        global_rank_cumsum,
-        global_rank_cumsum_inplan,
-    )
 
     random.seed(29)
     words = ["alpha", "ALPHA", "Ωmega", "déjà", "zzz", "", " ", "naïve", "中文", "a'b"]
@@ -462,32 +471,21 @@ def test_global_rank_cumsum_inplan_matches_range_scan(spark):
         x = random.choice([None, float("nan")] + [float(random.randint(0, 9))] * 8)
         rows.append((i, s, x, float(random.randint(0, 5))))
     df = spark.createDataFrame(rows, "id long, s string, x double, t double")
-    order = [F.col("s").asc(), F.col("x").asc(), F.col("id").asc()]
-    old = global_rank_cumsum(
-        df, order, val_col="t", rank_out="i", cum_out="c", n_out="n", total_out="tt"
-    )
     for nbk in (2, 5, 64):
-        new = global_rank_cumsum_inplan(
-            df, ["s", "x", "id"], val_col="t", rank_out="i", cum_out="c",
-            n_out="n", total_out="tt", num_buckets=nbk,
-        )
-        assert old.dtypes == new.dtypes
-        o = {r["id"]: (r["i"], r["c"], r["n"], r["tt"]) for r in old.collect()}
-        nw = {r["id"]: (r["i"], r["c"], r["n"], r["tt"]) for r in new.collect()}
-        assert o == nw, nbk
+        _check_scan(df, ("s", "x", "id"), nbk)
+    arr = df.withColumn("a", F.array("x", F.col("id").cast("double")))
+    _check_scan(arr, ("a", "id"), 5)
 
 
 def test_global_rank_inplan_no_python_single_exchange(spark):
-    """Plan pins for the r12 rank: no Python eval node anywhere, and the
-    ranked output adds exactly ONE exchange over the (cached) input."""
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators.scan import global_rank_inplan
+    """Plan pins: no Python eval node anywhere, and the ranked output
+    adds exactly ONE exchange over the (cached) input."""
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     df = spark.createDataFrame(
         [(i, float(i % 9)) for i in range(500)], "id long, v double"
     )
-    out = global_rank_inplan(df, "v", tiebreak=("id",), rank_out="i", num_buckets=4)
+    out = global_scan(df, [ScanSpec(("v", "id"), rank="i")], num_buckets=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "MapInArrow" not in plan and "FlatMapGroupsInPandas" not in plan
@@ -495,36 +493,53 @@ def test_global_rank_inplan_no_python_single_exchange(spark):
 
 
 def test_global_rank_cumsum_persist_handles(spark):
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators.scan import global_rank_cumsum
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     df = spark.createDataFrame([(i, float(i)) for i in range(10)], "id bigint, v double")
     handles = []
-    out = global_rank_cumsum(df, [F.col("id").asc()], val_col="v", persist_handles=handles)
+    out = global_scan(
+        df, [ScanSpec(("id",), val="v", cum="cum")], persist_handles=handles
+    )
     assert out.count() == 10
     [h] = handles
     assert h.storageLevel.useMemory  # persisted while the plan is live
     h.unpersist(blocking=True)
     assert not h.storageLevel.useMemory
+    # boundaries and offsets are plan literals: a recompute agrees
+    assert [r["cum"] for r in out.orderBy("id").collect()] == [
+        float(sum(range(i + 1))) for i in range(10)
+    ]
+
+
+def _running_max_replay(rows, exclusive):
+    """Python replay of the running-max contract over rows sorted by
+    (k asc nulls first, NaN last, id): NULL/NaN values are skipped and a
+    NULL or +-inf result surfaces as NULL."""
+    import math
+
+    def key(r):
+        k = r[1]
+        return ((0,) if k is None else (2,) if math.isnan(k) else (1, k), r[0])
+
+    out, acc = {}, None
+    for i, _, v in sorted(rows, key=key):
+        prev = acc
+        if v is not None and not math.isnan(v) and (acc is None or v > acc):
+            acc = v
+        m = prev if exclusive else acc
+        out[i] = None if m is None or math.isinf(m) else m
+    return out
 
 
 def test_global_running_max_inplan_matches_range_scan(spark):
-    """r13: the in-plan bucketed cummax (sampled struct boundaries,
-    literal prefix-max carries, one hash exchange, zero Python) must
-    agree with the range-shuffle + Arrow scan on adversarial values:
-    NULL/NaN/±inf values (the operator's documented missing-value
-    quirk), NULL keys, ties, both inclusive and exclusive frames,
-    degenerate bucket counts. Also pins the plan: no Python node, and
-    exactly one added exchange."""
+    """The bucketed running max against the Python replay on
+    adversarial values: NULL/NaN/+-inf values (the documented
+    missing-value contract), NULL and NaN keys, ties, inclusive and
+    exclusive frames, degenerate bucket counts. Also pins the plan: no
+    Python node."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators.scan import (
-        global_running_max,
-        global_running_max_inplan,
-    )
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     random.seed(31)
     rows = []
@@ -537,15 +552,13 @@ def test_global_running_max_inplan_matches_range_scan(spark):
         rows.append((i, k, v))
     df = spark.createDataFrame(rows, "id long, k double, v double")
     for exclusive in (False, True):
-        old = global_running_max(
-            df, [F.col("k").asc(), F.col("id").asc()], "v", out="m", exclusive=exclusive
-        )
-        o = {r["id"]: r["m"] for r in old.collect()}
+        want = _running_max_replay(rows, exclusive)
         for nbk in (2, 5, 64):
-            new = global_running_max_inplan(
-                df, ["k", "id"], "v", out="m", exclusive=exclusive, num_buckets=nbk
+            new = global_scan(
+                df,
+                [ScanSpec(("k", "id"), val="v", max="m", exclusive=exclusive)],
+                num_buckets=nbk,
             )
-            nw = {r["id"]: r["m"] for r in new.collect()}
-            assert o == nw, (exclusive, nbk)
+            assert {r["id"]: r["m"] for r in new.collect()} == want, (exclusive, nbk)
     plan = new._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" not in plan and "EvalPython" not in plan

@@ -586,11 +586,10 @@ def test_gini_and_pareto_have_no_unpartitioned_window(spark):
     # run over grains that SCALE with the data (customer, part), so the
     # plan must show a KEYED rank exchange and no unpartitioned window.
     # (The keyless FINAL aggregate still plans a one-row SinglePartition
-    # merge -- that is partial+final and fine.) r12: the rank moved from
-    # the range-shuffle scan to the in-plan bucketed rank
-    # (operators/scan.py::global_rank_inplan) -- the exchange is now
-    # hashpartitioning on the bucket column and the mapInArrow rank
-    # transport is gone (no Python node anywhere in the plan).
+    # merge -- that is partial+final and fine.) The rank runs on the
+    # in-plan bucketed scan (operators/scan.py::global_scan): the
+    # exchange is hashpartitioning on the bucket column and there is
+    # no Python node anywhere in the plan.
     from testlog_etl_spark.planlint import unpartitioned_windows
 
     for name in ("agg_gini_concentration", "agg_abc_pareto"):
@@ -673,22 +672,6 @@ def test_window_lint_sees_subquery_windows(spark):
         "(SELECT rn FROM (SELECT row_number() OVER (ORDER BY id) AS rn FROM _lint_t))"
     )
     assert unpartitioned_windows(in_sub)
-
-
-def test_global_rank_cumsum_single_exchange(spark):
-    # ADVICE r05: the old Window.partitionBy('_pid') form planned a
-    # SECOND full-data hashpartitioning exchange on top of the range
-    # shuffle; the mapInPandas scan must plan exactly one full-data
-    # exchange (rangepartitioning) and no hashpartitioning of _pid.
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators.scan import global_rank_cumsum
-
-    df = spark.createDataFrame([(i, float(i)) for i in range(100)], "id bigint, v double")
-    out = global_rank_cumsum(df, [F.col("v").asc(), F.col("id").asc()], val_col="v", num_parts=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan, plan
-    assert "hashpartitioning(_pid" not in plan, plan
 
 
 def test_mixture_weights_single_corpus_shuffle(spark):

@@ -237,17 +237,17 @@ scan_rows = st.lists(
 def test_global_scan_matches_sequential_model(rows, parts, desc):
     from pyspark.sql import functions as F
 
-    from testlog_etl_spark.operators.scan import global_rank_cumsum
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     spark = _spark()
     data = [(i, v, None if x is None else float(x)) for i, (v, x) in enumerate(rows)]
     df = spark.createDataFrame(data, "id bigint, k bigint, v double")
-    order = [F.col("k").desc() if desc else F.col("k").asc(), F.col("id").asc()]
+    spec = ScanSpec(
+        ("k desc" if desc else "k", "id"), rank="i", val="v", cum="cum", n="n", total="tot"
+    )
     got = {
         r["id"]: (r["i"], r["cum"], r["n"], r["tot"])
-        for r in global_rank_cumsum(
-            df, order, val_col="v", n_out="n", total_out="tot", num_parts=parts
-        ).collect()
+        for r in global_scan(df, [spec], num_buckets=parts).collect()
     }
     seq = sorted(data, key=lambda t: ((-t[1] if desc else t[1]), t[0]))
     acc, tot = 0.0, sum(x or 0.0 for _, _, x in data)
@@ -474,7 +474,7 @@ _gq_rows = st.lists(
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_gq_rows, st.sampled_from([0.5, 0.25, 0.9, 0.1, 0.999]))
 def test_group_quantile_exact_matches_both_engines(rows, q):
-    """group_quantile_exact (the scale-safe replacement for the exact
+    """group_quantiles_exact (the scale-safe replacement for the exact
     percentile() aggregate, whose partial buffers carry every group
     value through the shuffle) must stay BIT-identical to Spark's
     percentile() and DuckDB's quantile_cont — including the symmetric
@@ -482,11 +482,11 @@ def test_group_quantile_exact_matches_both_engines(rows, q):
     which rounds differently from the naive lo + frac·(hi-lo)."""
     import duckdb
 
-    from testlog_etl_spark.operators.scan import group_quantile_exact
+    from testlog_etl_spark.operators.scan_quantile import group_quantiles_exact
 
     spark = _spark()
     df = spark.createDataFrame(rows, "k string, v double")
-    got = {r.k: r.q for r in group_quantile_exact(df, "k", "v", q).collect()}
+    got = {r.k: r.q for r in group_quantiles_exact(df, "k", "v", [q], ["q"]).collect()}
     want = {
         r.k: r.q
         for r in df.groupBy("k").agg(F.expr(f"percentile(v, {q})").alias("q")).collect()
@@ -584,23 +584,18 @@ _runmax_rows = st.lists(
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_runmax_rows, st.booleans())
 def test_global_running_max_matches_window_reference_fuzz(vals, exclusive):
-    """r10: global_running_max moved to mapInArrow; its NaN sentinel for
-    'no preceding value' must convert back to NULL (from_pandas=True)
-    and NULL inputs must be skipped, exactly like the single-partition
-    window form it replaces at scale."""
+    """The running max's NaN carry sentinel for 'no preceding value'
+    must surface as NULL and NULL inputs must be skipped, exactly like
+    the single-partition window form it replaces at scale."""
     from pyspark.sql import Window
 
-    from testlog_etl_spark.operators.scan import global_running_max
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     spark = _spark()
     rows = [(i, v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "i long, v double").repartition(3)
-    got = {
-        r["i"]: r["m"]
-        for r in global_running_max(
-            df, [F.col("i")], "v", out="m", exclusive=exclusive, num_parts=3
-        ).collect()
-    }
+    spec = ScanSpec(("i",), val="v", max="m", exclusive=exclusive)
+    got = {r["i"]: r["m"] for r in global_scan(df, [spec], num_buckets=3).collect()}
     end = -1 if exclusive else Window.currentRow
     w = Window.orderBy("i").rowsBetween(Window.unboundedPreceding, end)
     want = {r["i"]: r["m"] for r in df.select("i", F.max("v").over(w).alias("m")).collect()}
@@ -755,9 +750,9 @@ def test_minhash_valve_loses_only_capped_band_candidates_fuzz(docs, cap):
     assert capped <= full
 
 
-# --- r11: mapInArrow pass-through fidelity for decimal128 / timestamp ---
-# The two scan operators only APPEND columns; pass-through Arrow arrays
-# must come out byte-exact for types pandas would mangle (decimal128 ->
+# --- r11: scan pass-through fidelity for decimal128 / timestamp ---
+# The scan only APPENDS columns; pass-through values must come out
+# exact for types a Python round trip would mangle (decimal128 ->
 # object/float, tz-aware timestamps re-rendered). VERDICT r10 item 7.
 
 _scanfid_rows = st.lists(
@@ -778,7 +773,7 @@ def test_scan_passthrough_preserves_decimal_and_timestamp_fuzz(rows):
     import datetime as dt
     from decimal import Decimal
 
-    from testlog_etl_spark.operators.scan import global_rank_cumsum, global_running_max
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     spark = _spark()
     data = []
@@ -796,13 +791,13 @@ def test_scan_passthrough_preserves_decimal_and_timestamp_fuzz(rows):
     ).repartition(3)
     want = {r["i"]: (r["dec"], r["ts"], r["v"]) for r in df.collect()}
 
-    ranked = global_rank_cumsum(df, [F.col("i")], val_col="v", rank_out="rk", num_parts=3)
+    ranked = global_scan(df, [ScanSpec(("i",), rank="rk", val="v", cum="cum")], num_buckets=3)
     got = {r["i"]: (r["dec"], r["ts"], r["v"]) for r in ranked.collect()}
     assert got == want, (data, got, want)
     # the appended rank is the total order itself
     assert {r["i"]: r["rk"] for r in ranked.collect()} == {i: i + 1 for i in range(len(data))}
 
-    rm = global_running_max(df, [F.col("i")], "v", out="m", num_parts=3)
+    rm = global_scan(df, [ScanSpec(("i",), val="v", max="m")], num_buckets=3)
     got2 = {r["i"]: (r["dec"], r["ts"], r["v"]) for r in rm.collect()}
     assert got2 == want, (data, got2, want)
 

@@ -222,21 +222,18 @@ def test_rle_runs_null_and_alternating(spark):
 
 
 def test_global_running_max_inclusive_exclusive(spark):
-    from testlog_etl_spark.operators.scan import global_running_max
+    from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     rows = [(1, 5.0), (2, 3.0), (3, 9.0), (4, 2.0), (5, 9.5), (6, 1.0)]
     df = spark.createDataFrame(rows, "i long, v double").repartition(4)
-    inc = {
-        r["i"]: r["m"]
-        for r in global_running_max(df, [F.col("i")], "v", out="m", num_parts=3).collect()
-    }
+
+    def run(exclusive):
+        spec = ScanSpec(("i",), val="v", max="m", exclusive=exclusive)
+        return {r["i"]: r["m"] for r in global_scan(df, [spec], num_buckets=3).collect()}
+
+    inc = run(False)
     assert inc == {1: 5.0, 2: 5.0, 3: 9.0, 4: 9.0, 5: 9.5, 6: 9.5}
-    exc = {
-        r["i"]: r["m"]
-        for r in global_running_max(
-            df, [F.col("i")], "v", out="m", exclusive=True, num_parts=3
-        ).collect()
-    }
+    exc = run(True)
     assert exc[1] is None
     assert {k: v for k, v in exc.items() if k > 1} == {
         2: 5.0, 3: 5.0, 4: 9.0, 5: 9.0, 6: 9.5

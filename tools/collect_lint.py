@@ -38,22 +38,11 @@ WHITELIST: dict[str, str] = {
     "query.py::format_list": "caller-facing output format (see format_table)",
     "query.py::format_cube": "cube cells bounded by edge-domain cardinality product",
     "__main__.py::_show": "CLI presentation of an already-limited frame",
-    "operators/scan.py::global_rank_cumsum": "per-partition (count,sum) totals: one row per range partition",
-    "operators/scan.py::global_ranks_inplan": (
-        "boundary sketch (nb-1 quantiles/spec) + per-bucket (count,sum) "
-        "rollup: <= n_specs*(nb+4) rows, bounded by the operator's bucket "
-        "constant, never the data"
-    ),
-    "operators/scan.py::global_rank_cumsum_inplan": (
+    "operators/scan.py::global_scan": (
         "boundary sample LIMIT-capped at 64*nb rows + per-bucket "
-        "(count,sum) rollup <= nb+1 rows: both bounded by the "
-        "operator's bucket constant, never the data"
-    ),
-    "operators/scan.py::global_running_max": "per-partition max totals: one row per range partition",
-    "operators/scan.py::global_running_max_inplan": (
-        "boundary sample LIMIT-capped at 64*nb rows + per-bucket max "
-        "rollup <= nb+1 rows: both bounded by the operator's bucket "
-        "constant, never the data"
+        "(count,sum,max) rollup <= n_specs*nb rows, nb capped at "
+        "MAX_BUCKETS=256: bounded by the operator's bucket constant, "
+        "never the data"
     ),
     "operators/packing.py::with_stream_offsets": "per-partition token totals: one row per range partition",
     "operators/edges.py::_resolve_others": "distinct edge parts capped by limit(e.limit or DEFAULT_EDGE_LIMIT)",
