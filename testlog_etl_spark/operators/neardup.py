@@ -7,9 +7,9 @@ Scale design (the whole point of these over exact O(n^2) comparison):
   take array_min per seed.
 - LSH banding turns signature similarity into equi-join keys: b bands of
   r rows; docs sharing any band key become candidates. The only shuffles
-  are the band-key self-join and the final distinct -- both proportional
-  to candidate volume, not n^2. With b=64, r=2 a pair at Jaccard 0.8 is
-  missed with probability (1-0.8^2)^64 ~ 4e-29.
+  are the band-key groupBy (``block_pairs``) and the final distinct --
+  both proportional to candidate volume, not n^2. With b=64, r=2 a pair
+  at Jaccard 0.8 is missed with probability (1-0.8^2)^64 ~ 4e-29.
 - Candidates are verified with EXACT shingle-set Jaccard (array
   intersect/union), so false positives cost only the verify compute.
 - SimHash: 64-bit sign-of-weighted-sum signature; pairs within Hamming
@@ -155,25 +155,10 @@ def band_keys(sig_col: Column, band_r: int = BAND_R, n_hashes: int = N_HASHES) -
 # profile is the deployment default, pinned against the real
 # signatures by tests/test_llm_ops.py::test_corpus_scale_profile_matches_signatures.
 CORPUS_SCALE_PROFILE: dict[str, dict] = {
-    # verify_mode="colocate" (r13): shuffle the shingle table once by id
-    # against exploded (member, pair) rows instead of joining it twice
-    # -- heavy verify moves 2x|table|+|pairs| -> 1x|table|+2x|pairs|
-    # sets. NOT a recall trade: both modes verify the identical
-    # candidate set (differential-pinned); the local default stays
-    # "join" (the light candidate side broadcasts under AQE, measured
-    # 1.7 vs 2.2 s at sf0.1).
-    "minhash_lsh_pairs": {"max_block": 64, "chain_oversized": True,
-                          "verify_mode": "colocate"},
+    "minhash_lsh_pairs": {"max_block": 64, "chain_oversized": True},
     "hamming_join": {"max_block": 64},
     "editdist1_pairs": {"max_block": 64},
     "build_postings": {"max_df": 64},  # operators/postings.py
-    # one cell exchange, zero joins: half the vector shuffle bytes of
-    # the default join mode -- wins once shuffle, not per-pair CPU,
-    # dominates (operators/similarity.py::semantic_dedup; r12
-    # measurement note there). Unlike the caps above this is NOT a
-    # recall trade: both modes produce identical output
-    # (differential-tested).
-    "semantic_dedup": {"pair_mode": "fold"},  # operators/similarity.py
 }
 
 
@@ -195,6 +180,37 @@ def _cap_blocks(rows: DataFrame, keys: list[str], max_block: int) -> DataFrame:
     )
 
 
+def block_pairs(
+    rows: DataFrame, keys: list[str], member: Column, max_block: int | None = None
+) -> DataFrame:
+    """Candidate generation shared by every blocked near-dup tier: one
+    ``(_a, _b)`` row of ``member`` values for each unordered pair of
+    rows that share a block (equal ``keys``), with ``_a < _b`` in
+    ``array_sort`` order. A pair sharing several blocks is emitted once
+    per shared block; callers dedupe and verify.
+
+    A NULL in any key column forms no block (equi-join semantics: NULL
+    chunks of NULL keys must not pair those rows at distance 0).
+
+    One groupBy(keys) shuffle with a map-side partial collect_list;
+    each block's C(k,2) pairs come out of two pipelined Generates
+    (anchor posexplode, then explode of the anchor's tail slice), so no
+    k^2 array is ever built. The largest block bounds the per-row state;
+    ``max_block`` drops blocks larger than the cap as rows before their
+    array materializes (``_cap_blocks``) -- a recall valve, exact only
+    when None."""
+    for k in keys:
+        rows = rows.filter(F.col(k).isNotNull())
+    if max_block is not None:
+        rows = _cap_blocks(rows, keys, max_block)
+    blocks = rows.groupBy(*keys).agg(F.array_sort(F.collect_list(member)).alias("_ms"))
+    return (
+        blocks.filter(F.size("_ms") >= 2)
+        .select(F.posexplode("_ms").alias("_i", "_a"), "_ms")
+        .select("_a", F.explode(F.slice(F.col("_ms"), F.col("_i") + 2, F.size("_ms"))).alias("_b"))
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -205,31 +221,19 @@ def minhash_lsh_pairs(
     band_r: int = BAND_R,
     max_block: int | None = None,
     chain_oversized: bool = False,
-    verify_mode: str = "join",
 ) -> DataFrame:
     """(id_a, id_b, jaccard) for all pairs with exact shingle Jaccard >=
-    threshold, found via LSH candidates + exact verify.
-
-    ``verify_mode``: how surviving candidates re-attach their shingle
-    sets for the exact-Jaccard check. ``"join"`` (default, what the
-    bench measures fastest locally -- the light candidate side
-    broadcasts under AQE so shingles never move at this scale) joins
-    the pair list against the shingle table twice; ``"colocate"`` is
-    the §8.4 scale form -- shuffle the shingle table ONCE by id against
-    exploded (member, pair) rows and group by pair -- selected by
-    ``CORPUS_SCALE_PROFILE`` for the shuffle-bound regime. Both modes
-    verify the identical candidate set and emit identical pairs
-    (differential-pinned).
+    threshold, found via LSH candidates + exact verify. Surviving
+    candidates rejoin their shingle sets by id (the light candidate
+    side broadcasts under AQE, so shingles never move locally).
 
     Plan shape: signatures+bands are computed ONCE and persisted -- the
     band expression must reference a materialized signature column, or
     projection collapse would inline the 128-element signature array
     into each of the 64 band keys (a 128x expression blow-up, measured
-    ~100x slower). Candidates come from ONE (band_idx, band_key) groupBy
-    carrying only (band, id) -- each bucket's pairs are expanded in
-    place (r12; the previous band self-join traversed the banded frame
-    twice and moved it twice); shingle sets rejoin only for surviving
-    candidates.
+    ~100x slower). Candidates come from ``block_pairs`` over (band_idx,
+    band_key) carrying only (band, id): one shuffle of the banded frame;
+    shingle sets rejoin only for surviving candidates.
 
     Hot-band valve: a band key shared by k docs yields k^2/2 candidates
     from the bucket expansion, so a boilerplate-heavy corpus (k
@@ -263,24 +267,8 @@ def minhash_lsh_pairs(
     )
     bands = sigs.select("_id", F.posexplode("_bands").alias("_band_idx", "_band_key"))
 
-    # Candidate generation (r12, guide 2.4 "remove shuffles outright"):
-    # ONE groupBy(band) + in-bucket pair expansion replaces the band
-    # SELF-JOIN. The join form scanned the banded frame twice and moved
-    # it twice (locally: probe pass + a full broadcast build of every
-    # (id, band) row; at cluster scale: a sort-merge join shuffling BOTH
-    # sides); the aggregate form shuffles the same (band, id) rows
-    # exactly once -- map-side partial collect_list -- and emits each
-    # bucket's C(k,2) pairs in place. The candidate SET is identical by
-    # construction (all unordered pairs sharing a bucket, ids sorted so
-    # id_a < id_b), so the verify stage and the operator contract are
-    # unchanged. Pair expansion is two PIPELINED Generates (anchor
-    # posexplode, then explode of the per-anchor tail slice): no k^2
-    # array is ever materialized per row. Buffer concentration: the
-    # UNCAPPED path holds one O(bucket) id array per bucket while the
-    # aggregate builds -- the exact contract requires the full bucket,
-    # so the exposure is bounded by the largest band bucket (8 bytes x
-    # members); the capped deployment profile bounds it by max_block,
-    # enforced BEFORE the array materializes (_cap_blocks).
+    # Hot-band valve: its own count window, because chain mode needs
+    # the oversized bands' rows; only the kept bands reach block_pairs.
     chain_cand = None
     if max_block is not None:
         wb = Window.partitionBy("_band_idx", "_band_key")
@@ -288,7 +276,7 @@ def minhash_lsh_pairs(
         if chain_oversized:
             # k-1 consecutive-id edges over each oversized bucket,
             # via lag over the id-sorted window -- constant state, no
-            # bucket array (same edges as the old sorted-array zip)
+            # bucket array
             chain_cand = (
                 sized.filter(F.col("_bc") > int(max_block))
                 .withColumn("_prev", F.lag("_id").over(wb.orderBy("_id")))
@@ -296,47 +284,16 @@ def minhash_lsh_pairs(
                 .select(F.col("_prev").alias("id_a"), F.col("_id").alias("id_b"))
             )
         bands = sized.filter(F.col("_bc") <= int(max_block)).drop("_bc")
-    buckets = bands.groupBy("_band_idx", "_band_key").agg(
-        F.array_sort(F.collect_list("_id")).alias("_ids")
-    )
-
-    anchored = buckets.filter(F.size("_ids") >= 2).select(
-        F.posexplode("_ids").alias("_i", "id_a"), "_ids"
-    )
-    cand = anchored.select(
-        "id_a",
-        F.explode(F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))).alias("id_b"),
+    cand = block_pairs(bands, ["_band_idx", "_band_key"], F.col("_id")).select(
+        F.col("_a").alias("id_a"), F.col("_b").alias("id_b")
     )
     if chain_cand is not None:
         cand = cand.unionByName(chain_cand)
     cand = cand.dropDuplicates(["id_a", "id_b"])
     sh = sigs.select("_id", "_sh")
-    if verify_mode == "colocate":
-        # §8.4 pair-id co-location: the 2-join form hashes the shingle
-        # table by id TWICE (and the first join's matched sh_a rides the
-        # second join's pair shuffle). Here each candidate pair emits
-        # two skinny (member id, pair) rows, the shingle table shuffles
-        # by id exactly ONCE against them, and one groupBy(pair) brings
-        # the two matched sets together: heavy moves go from
-        # 2x|table| + |pairs| sets to 1x|table| + 2x|pairs| sets -- a
-        # win whenever candidates are sparser than the corpus. Each
-        # (id_a, id_b) group holds exactly two rows (ids differ and
-        # positions are unique), so max(when(...)) IS the matched set.
-        sides = cand.select(F.col("id_a").alias("_vid"), "id_a", "id_b").unionByName(
-            cand.select(F.col("id_b").alias("_vid"), "id_a", "id_b")
-        )
-        pairs = (
-            sides.join(sh, sides["_vid"] == sh["_id"])
-            .groupBy("id_a", "id_b")
-            .agg(
-                F.max(F.when(F.col("_vid") == F.col("id_a"), F.col("_sh"))).alias("sh_a"),
-                F.max(F.when(F.col("_vid") == F.col("id_b"), F.col("_sh"))).alias("sh_b"),
-            )
-        )
-    else:
-        pairs = cand.join(
-            sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a"
-        ).join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
+    pairs = cand.join(
+        sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a"
+    ).join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
     verified = (
         pairs.withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
@@ -411,23 +368,8 @@ def simhash_pairs(
             )
         ).alias("_chunk_idx", "_chunk"),
     )
-    # candidates from ONE (chunk_idx, chunk) groupBy + in-bucket pair
-    # expansion (r12, guide 2.4): the previous left/right self-join
-    # scanned and moved the chunk table twice; this shuffles it once.
-    # structs sort by leading _id (unique), so pairs come out id_a <
-    # id_b exactly as the old join filter produced. Two pipelined
-    # Generates keep per-row state O(bucket), never bucket^2.
-    buckets = chunks.groupBy("_chunk_idx", "_chunk").agg(
-        F.array_sort(F.collect_list(F.struct("_id", "_sig"))).alias("_ms")
-    )
-    anchored = buckets.filter(F.size("_ms") >= 2).select(
-        F.posexplode("_ms").alias("_i", "_a"), "_ms"
-    )
     return (
-        anchored.select(
-            "_a",
-            F.explode(F.slice(F.col("_ms"), F.col("_i") + 2, F.size("_ms"))).alias("_b"),
-        )
+        block_pairs(chunks, ["_chunk_idx", "_chunk"], F.struct("_id", "_sig"))
         .select(
             F.col("_a._id").alias("id_a"),
             F.col("_b._id").alias("id_b"),
@@ -495,7 +437,8 @@ def hamming_join(
 
     Verification is a positionwise codegen fold (`substr` compare), not
     a UDF; the DuckDB oracle states the same contract with its native
-    `hamming()`.
+    `hamming()`. A NULL key pairs with nothing (`hamming(NULL, NULL)`
+    is NULL there too).
     """
     n_chunks = int(max_dist) + 1
     if int(length) < n_chunks:
@@ -520,26 +463,10 @@ def hamming_join(
             )
         ).alias("_c"),
     ).select("_id", "_key", F.col("_c.idx").alias("_idx"), F.col("_c.txt").alias("_txt"))
-    # candidates from ONE (idx, txt) groupBy + in-bucket pair expansion
-    # (r12, guide 2.4): replaces the a/b self-join (two traverses, two
-    # movements of the chunk table) with a single shuffle; the hot-block
-    # valve drops oversized blocks as ROWS before their array can
-    # materialize (_cap_blocks; an oversized block contributes no
-    # candidates, its rows still pair via their other chunks). Structs
-    # sort by leading _id (unique) so pairs come out a_id < b_id.
-    if max_block is not None:
-        chunks = _cap_blocks(chunks, ["_idx", "_txt"], max_block)
-    buckets = chunks.groupBy("_idx", "_txt").agg(
-        F.array_sort(F.collect_list(F.struct("_id", "_key"))).alias("_ms")
-    )
-    anchored = buckets.filter(F.size("_ms") >= 2).select(
-        F.posexplode("_ms").alias("_i", "_a"), "_ms"
-    )
+    # an oversized block contributes no candidates; its rows still pair
+    # via their other chunks
     cand = (
-        anchored.select(
-            "_a",
-            F.explode(F.slice(F.col("_ms"), F.col("_i") + 2, F.size("_ms"))).alias("_b"),
-        )
+        block_pairs(chunks, ["_idx", "_txt"], F.struct("_id", "_key"), max_block)
         .select(
             F.col("_a._id").alias("a_id"),
             F.col("_b._id").alias("b_id"),
@@ -615,26 +542,8 @@ def editdist1_pairs(
     exploded = keys.select(
         "_id", "_key", F.explode(variants).alias("_v")
     ).select("_id", "_key", F.xxhash64("_v").alias("_vh"))
-    # candidates from ONE variant-hash groupBy + in-bucket pair
-    # expansion (r12, guide 2.4): replaces the self-join (two traverses
-    # and two movements of the neighborhood table) with a single
-    # shuffle; the hot-variant valve drops oversized buckets as ROWS
-    # before their array can materialize (_cap_blocks). Structs sort by
-    # leading _id (unique), so pairs come out id_a < id_b exactly as
-    # the old join condition produced.
-    if max_block is not None:
-        exploded = _cap_blocks(exploded, ["_vh"], max_block)
-    buckets = exploded.groupBy("_vh").agg(
-        F.array_sort(F.collect_list(F.struct("_id", "_key"))).alias("_ms")
-    )
-    anchored = buckets.filter(F.size("_ms") >= 2).select(
-        F.posexplode("_ms").alias("_i", "_a"), "_ms"
-    )
     cand = (
-        anchored.select(
-            "_a",
-            F.explode(F.slice(F.col("_ms"), F.col("_i") + 2, F.size("_ms"))).alias("_b"),
-        )
+        block_pairs(exploded, ["_vh"], F.struct("_id", "_key"), max_block)
         .select(
             F.col("_a._id").alias("id_a"),
             F.col("_b._id").alias("id_b"),
@@ -643,8 +552,7 @@ def editdist1_pairs(
         )
         # id_a < id_b guards the (astronomically unlikely) case of two
         # DISTINCT variants of one key colliding into the same 64-bit
-        # bucket, which would otherwise emit a self-pair the old join's
-        # a._id < b._id condition excluded
+        # bucket, which would otherwise emit a self-pair
         .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
@@ -673,8 +581,8 @@ def jaccard_pairs_prefix_filtered(
     candidate-volume optimization: prefixes then hold the rarest
     tokens, whose postings are shortest.
 
-    Scale shape vs the brute-force sibling (dedup_ngram_jaccard's
-    id_a < id_b crossjoin): shuffles are all LINEAR in token volume --
+    Scale shape vs the brute-force id_a < id_b crossjoin (kept in
+    tests as this operator's oracle twin): shuffles are all LINEAR in token volume --
     df count, sort-regroup per doc, prefix><postings equi-join keyed by
     token -- and the only super-linear term is the candidate verify,
     which is bounded by true-ish pairs instead of n^2/2. Skewed (stop-

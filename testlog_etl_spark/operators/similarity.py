@@ -648,7 +648,6 @@ def semantic_dedup(
     seed: int = 7,
     target_cell_rows: int = 256,
     n_rows: int | None = None,
-    pair_mode: str = "join",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) restated Spark-first:
     bucket embeddings into cells, score pairwise cosine ONLY within a
@@ -707,93 +706,27 @@ def semantic_dedup(
         .withColumn("_n", l2_norm(F.col("_v")))
         .select(id_col, "_sig", "_v", "_n")
     )
-    # Two measured pair strategies with IDENTICAL output (r12,
-    # differential-tested):
-    #
-    # - "join" (default): cell self-join + pair filter + min-exemplar
-    #   groupBy. Vectors cross the cell exchange once PER SIDE, but all
-    #   pair scoring runs codegen'd — measured fastest on sf0.1
-    #   (0.91 s vs 1.02–1.17 s, warm-JVM min-of-4; every one-shuffle
-    #   variant lost locally to interpreted higher-order-lambda
-    #   overhead: indexed fold 1.1x, slice fold 1.9x, pair-expansion
-    #   hybrid 1.4x, filter-over-indices 1.9x).
-    # - "fold": ONE groupBy(_sig) + per-member indexed fold over its
-    #   EARLIER cell members. A vector lives in exactly one cell
-    #   (single-table signature), so the whole operator is one
-    #   exchange and zero joins — HALF the vector shuffle bytes and
-    #   two fewer exchanges, which wins once shuffle (not per-pair
-    #   CPU) dominates: the 100 TB deployment setting
-    #   (CORPUS_SCALE_PROFILE in operators/neardup.py).
-    #
-    # Equivalence: ids ascend in the sorted cell, so the FIRST earlier
-    # member at/above threshold IS the min-id exemplar the join form's
-    # min(struct(id, cos)) selects; cosine operand order (lower-id
-    # vector first) is identical in both, so scores are bit-identical.
-    if pair_mode not in ("join", "fold"):
-        raise ValueError(f"semantic_dedup: pair_mode must be 'join' or 'fold', got {pair_mode!r}")
-    if pair_mode == "join":
-        a = side.select(
-            F.col(id_col).alias("_id_a"), "_sig", F.col("_v").alias("_va"), F.col("_n").alias("_na")
-        )
-        b = side.select(
-            F.col(id_col).alias("_id_b"), "_sig", F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
-        )
-        pairs = (
-            a.join(b, on="_sig")
-            .filter(F.col("_id_a") < F.col("_id_b"))
-            .withColumn("_cos", dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")))
-            .filter(F.col("_cos") >= F.lit(threshold))
-        )
-        return (
-            pairs.groupBy(F.col("_id_b").alias(id_col))
-            .agg(F.min(F.struct(F.col("_id_a"), F.col("_cos"))).alias("_m"))
-            .select(id_col, F.col("_m._id_a").alias("exemplar"), F.col("_m._cos").alias("cosine"))
-        )
-    id_type = df.schema[id_col].dataType
-    buckets = side.groupBy("_sig").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(id_col).alias("_id"), F.col("_n"), F.col("_v")))
-        ).alias("_ms")
+    # cell self-join + pair filter + min-exemplar groupBy: vectors cross
+    # the cell exchange once per side, but all pair scoring runs
+    # codegen'd -- measured fastest on sf0.1 against every one-shuffle
+    # variant (indexed fold 1.1x, slice fold 1.9x, pair-expansion hybrid
+    # 1.4x, filter-over-indices 1.9x: interpreted higher-order lambdas)
+    a = side.select(
+        F.col(id_col).alias("_id_a"), "_sig", F.col("_v").alias("_va"), F.col("_n").alias("_na")
     )
-    member = (
-        buckets.filter(F.size("_ms") >= 2)
-        .select(F.posexplode("_ms").alias("_i", "_mb"), "_ms")
-        # the first member (_i = 0) has no earlier neighbor, so it can
-        # never be dropped; filtering it here also keeps the fold's
-        # sequence(1, _i) strictly ascending (sequence would COUNT DOWN
-        # for _i = 0)
-        .filter(F.col("_i") >= 1)
+    b = side.select(
+        F.col(id_col).alias("_id_b"), "_sig", F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
     )
-
-    def _cos(m: Column) -> Column:
-        return dot(m["_v"], F.col("_mb._v")) / (m["_n"] * F.col("_mb._n"))
-
-    # fold over INDICES with element_at, not over slice(_ms, 1, _i):
-    # the slice form copies the i-element prefix of heavy vector
-    # structs for every member (O(|cell|^2 * dim) copies per cell --
-    # measured ~1.9x the whole-operator wall); indexing copies nothing
-    fold = F.aggregate(
-        F.sequence(F.lit(1), F.col("_i")),
-        F.struct(
-            F.lit(None).cast(id_type).alias("_a"), F.lit(None).cast("double").alias("_c")
-        ),
-        lambda acc, j: F.when(acc["_a"].isNotNull(), acc).otherwise(
-            F.when(
-                _cos(F.element_at(F.col("_ms"), j)) >= F.lit(threshold),
-                F.struct(
-                    F.element_at(F.col("_ms"), j)["_id"].alias("_a"),
-                    _cos(F.element_at(F.col("_ms"), j)).alias("_c"),
-                ),
-            ).otherwise(acc)
-        ),
+    pairs = (
+        a.join(b, on="_sig")
+        .filter(F.col("_id_a") < F.col("_id_b"))
+        .withColumn("_cos", dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")))
+        .filter(F.col("_cos") >= F.lit(threshold))
     )
     return (
-        member.select(
-            F.col("_mb._id").alias(id_col),
-            fold["_a"].alias("exemplar"),
-            fold["_c"].alias("cosine"),
-        )
-        .filter(F.col("exemplar").isNotNull())
+        pairs.groupBy(F.col("_id_b").alias(id_col))
+        .agg(F.min(F.struct(F.col("_id_a"), F.col("_cos"))).alias("_m"))
+        .select(id_col, F.col("_m._id_a").alias("exemplar"), F.col("_m._cos").alias("cosine"))
     )
 
 

@@ -153,9 +153,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "symmetric Jaccard structurally misses (the union term drowns the "
     "small side). One row per (contained, container) ordered pair at "
     "C >= 0.8 with |A| >= 3 shingles (degenerate tiny docs excluded on "
-    "both engines). Same brute-force-pair contract as the Jaccard "
-    "tier; at scale the candidate generation rides the same MinHash "
-    "banding, with only the verify formula swapped.",
+    "both engines). An O(n^2) ordered pair scan (size-gated): no "
+    "lossless candidate path exists for this contract (C >= 0.8, no df "
+    "cap); dedup_containment_postings is the postings-join tier with a "
+    "df <= 64 boilerplate cap.",
     oracle=f"""
 WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
 d AS (SELECT doc_id, {_DUCK_SHINGLES} AS sh FROM t)
@@ -185,7 +186,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prunes the intersect for the ~38% of ordered pairs the bound
     # excludes (|B|=0 pairs had C=0 and were filtered either way).
     # when(gate, ...) and not a bare AND for the same canonicalization
-    # reason as dedup_ngram_jaccard: the cheap tests must structurally
+    # reason as dedup_embedding_cosine: the cheap tests must structurally
     # guard the intersect. Still the full O(n^2) ordered pair scan the
     # oracle states.
     gate = (F.col("contained_id") != F.col("container_id")) & (
@@ -199,11 +200,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_ngram_jaccard",
-    doc="exact n-gram Jaccard tier (the verify stage as its own "
-    "operator): brute-force pair scan, same contract as the oracle.",
-    oracle=f"""
+_JACCARD_ORACLE = f"""
 WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
 d AS (SELECT doc_id, {_DUCK_SHINGLES} AS sh FROM t)
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -213,37 +210,38 @@ FROM d a JOIN d b ON a.doc_id < b.doc_id
 WHERE len(list_intersect(a.sh,b.sh))::DOUBLE /
       (len(a.sh) + len(b.sh) - len(list_intersect(a.sh,b.sh))) >= 0.5
 ORDER BY id_a, id_b
-""",
+"""
+
+
+@register(
+    "dedup_jaccard_prefixfilter",
+    doc="n-gram Jaccard pairs via PPJoin-style prefix filtering "
+    "(operators/neardup.py::jaccard_pairs_prefix_filtered): "
+    "rarest-first token prefixes of length n - ceil(t*n) + 1 joined "
+    "against the full posting list, then exact verify. Every shuffle is "
+    "linear in token volume; the oracle is the brute-force all-pairs "
+    "SQL, so the oracle compare proves the filter is lossless. Same "
+    "function as dedup_ngram_jaccard.",
+    oracle=_JACCARD_ORACLE,
+)
+@register(
+    "dedup_ngram_jaccard",
+    doc="exact n-gram Jaccard tier: all doc pairs with exact 3-shingle "
+    "Jaccard >= 0.5, the contract the oracle's all-pairs scan states. "
+    "Candidates come from the lossless PPJoin prefix filter, not a pair "
+    "scan (same function as dedup_jaccard_prefixfilter).",
+    oracle=_JACCARD_ORACLE,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.util import spread
-
+    # the operator persists its (id, shingles) input and this query keeps
+    # no handle: the cache lives until the session clears it (bench.py
+    # clears between queries)
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    d = spread(docs.select("doc_id", neardup.word_shingles(F.col("text")).alias("sh")))
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"), F.size("sh").alias("_sa"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"), F.size("sh").alias("_sb"))
-    j = neardup.jaccard(F.col("sh_a"), F.col("sh_b"))
-    # r13 size gate (guide 3.2 spirit, provably lossless): J = |I|/|U|
-    # <= min(|A|,|B|)/max(|A|,|B|), so a pair can reach 0.5 only when
-    # 2*min >= max -- two integer compares replace the set-intersection
-    # for the ~41% of pairs the bound excludes (exact integer
-    # arithmetic; empty-set pairs keep their J=0 path: 2*0 >= 0 keeps
-    # them, J=0 drops them, as before). Stated as when(gate, J >= t,
-    # else false) because a bare AND chain gets canonicalized with the
-    # expensive intersect FIRST in the BNL condition (observed in the
-    # plan -- the gate then saves nothing); the when() makes the
-    # short-circuit structural. Still the full O(n^2) pair scan the
-    # oracle states; only provably-sub-threshold pairs skip the
-    # intersect.
-    gate = (F.col("id_a") < F.col("id_b")) & (
-        F.least("_sa", "_sb") * 2 >= F.greatest("_sa", "_sb")
-    )
-    return (
-        a.join(b, F.when(gate, j >= 0.5).otherwise(F.lit(False)))
-        .withColumn("jaccard", j)
-        .select("id_a", "id_b", F.round("jaccard", R).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
+    d = docs.select("doc_id", neardup.word_shingles(F.col("text")).alias("sh"))
+    pairs = neardup.jaccard_pairs_prefix_filtered(d, "doc_id", "sh", 0.5)
+    return pairs.select(
+        "id_a", "id_b", F.round("jaccard", R).alias("jaccard")
+    ).orderBy("id_a", "id_b")
 
 
 @register(
@@ -296,7 +294,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # else false) so the id test structurally short-circuits the dot
     # fold: pushed as a bare AND, Catalyst orders the expensive
     # predicate FIRST in the BNL condition and the fold runs for all
-    # n^2 ordered pairs (observed in the plan), not the n^2/2 kept ones
+    # n^2 ordered pairs (observed in the plan), not the n^2/2 kept ones.
+    # The forced broadcast ships the WHOLE embeddings side to every
+    # executor: fine at sf0.1, but this is the last nested-loop pair
+    # scan on the execution path, and at larger scale factors the build
+    # side outgrows the broadcast size limit.
     return (
         a.join(F.broadcast(b), F.when(F.col("id_a") < F.col("id_b"), cos >= 0.45).otherwise(F.lit(False)))
         .withColumn("cos", cos)
@@ -3784,39 +3786,6 @@ def dedup_editdist_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_jaccard_prefixfilter",
-    doc="the SCALE path for dedup_ngram_jaccard: identical output "
-    "contract (all pairs with exact 3-shingle Jaccard >= 0.5) but "
-    "candidates come from PPJoin-style prefix filtering "
-    "(operators/neardup.py::jaccard_pairs_prefix_filtered) instead of "
-    "the O(n^2) id_a < id_b crossjoin -- rarest-first token prefixes "
-    "of length n - ceil(t*n) + 1 joined against the full posting "
-    "list, then exact verify. Every shuffle is linear in token "
-    "volume; the oracle is deliberately the SAME brute-force SQL as "
-    "the crossjoin sibling, so the driver hash proves the filter is "
-    "lossless.",
-    oracle=f"""
-WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-d AS (SELECT doc_id, {_DUCK_SHINGLES} AS sh FROM t)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       ROUND(len(list_intersect(a.sh,b.sh))::DOUBLE /
-             (len(a.sh) + len(b.sh) - len(list_intersect(a.sh,b.sh))), {R}) AS jaccard
-FROM d a JOIN d b ON a.doc_id < b.doc_id
-WHERE len(list_intersect(a.sh,b.sh))::DOUBLE /
-      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh,b.sh))) >= 0.5
-ORDER BY id_a, id_b
-""",
-)
-def dedup_jaccard_prefixfilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    d = docs.select("doc_id", neardup.word_shingles(F.col("text")).alias("sh"))
-    pairs = neardup.jaccard_pairs_prefix_filtered(d, "doc_id", "sh", 0.5)
-    return pairs.select(
-        "id_a", "id_b", F.round("jaccard", R).alias("jaccard")
-    ).orderBy("id_a", "id_b")
-
-
-@register(
     "corpus_balanced_shards",
     doc="balanced training-shard assignment: docs ranked by token count "
     "(desc, doc_id ties) via the in-plan bucketed global scan "
@@ -4884,16 +4853,7 @@ def sim_sparse_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     wn = w.withColumn(
         "nrm", F.sqrt(F.sum(F.col("w") * F.col("w")).over(Window.partitionBy("doc_id")))
     )
-    buckets = wn.groupBy("term").agg(
-        F.array_sort(F.collect_list(F.struct("doc_id", "w", "nrm"))).alias("_ms")
-    )
-    anchored = buckets.filter(F.size("_ms") >= 2).select(
-        F.posexplode("_ms").alias("_i", "_a"), "_ms"
-    )
-    pairs = anchored.select(
-        "_a",
-        F.explode(F.slice(F.col("_ms"), F.col("_i") + 2, F.size("_ms"))).alias("_b"),
-    ).select(
+    pairs = neardup.block_pairs(wn, ["term"], F.struct("doc_id", "w", "nrm")).select(
         F.col("_a.doc_id").alias("id_a"),
         F.col("_b.doc_id").alias("id_b"),
         (F.col("_a.w") * F.col("_b.w")).alias("_ww"),
@@ -7145,8 +7105,9 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recall-oriented key, confirm with an O(len^2) metric INSIDE "
     "blocks only): key = first char + vowel/space-stripped remainder "
     "of lower(p_name) (RE2-safe -- no backreferences, so the same "
-    "regex runs on both engines), self-join within key on "
-    "p_partkey < p_partkey, keep pairs with levenshtein <= 4. At "
+    "regex runs on both engines), in-block pairs part1 < part2 "
+    "(operators/neardup.py::block_pairs), keep pairs with "
+    "levenshtein <= 4. At "
     "100 TB the block key is the shuffle key and the quadratic "
     "verify is bounded by the largest block, which the key design "
     "controls -- the dedup_hamming_prefix rationale.",
@@ -7175,18 +7136,20 @@ def dedup_phonetic_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_replace(F.expr("substring(lower(trim(p_name)), 2)"), "[aeiouy ]", ""),
         ).alias("pkey"),
     )
-    a = k.select(F.col("pkey"), F.col("p_partkey").alias("part1"), F.col("p_name").alias("n1"))
-    b = k.select(F.col("pkey"), F.col("p_partkey").alias("part2"), F.col("p_name").alias("n2"))
     # r13 examined, left alone: the 3.1M in-block pairs are the block
     # key's declared recall contract and the levenshtein verify is a
     # codegen'd JVM intrinsic. Both measured alternatives lost: the
     # banded 3-arg levenshtein(.., 4) was no faster (7.8 vs 7.5 s on
     # the isolated verify), and a |len(a)-len(b)| <= 4 pre-gate excludes
     # 0.0% of pairs (part names are same-length color-word tuples).
+    pairs = neardup.block_pairs(k, ["pkey"], F.struct("p_partkey", "p_name", "pkey"))
     return (
-        a.join(b, "pkey")
-        .filter(F.col("part2") > F.col("part1"))
-        .withColumn("lev", F.levenshtein("n1", "n2"))
+        pairs.select(
+            F.col("_a.pkey").alias("pkey"),
+            F.col("_a.p_partkey").alias("part1"),
+            F.col("_b.p_partkey").alias("part2"),
+            F.levenshtein("_a.p_name", "_b.p_name").alias("lev"),
+        )
         .filter(F.col("lev") <= 4)
         .select("pkey", "part1", "part2", F.col("lev").cast("int").alias("lev"))
         .orderBy("pkey", "part1", "part2")

@@ -872,6 +872,8 @@ def test_hamming_join_exact_within_threshold(spark):
         (2, base[:3] + "X" + base[8:9] + "Y" + base[10:][:-4] + base[-4:]),  # scrambled; recompute below
         (3, "Z" * 16),                              # far from everything
         (4, base),                                  # exact dup of 0
+        (5, None),                                  # NULL keys pair with nothing,
+        (6, None),                                  # not each other at distance 0
     ]
     # rebuild row 2 deterministically: dist 2 from 0 (positions 4 and 9)
     s = list(base); s[3] = "X"; s[8] = "Y"
@@ -886,6 +888,7 @@ def test_hamming_join_exact_within_threshold(spark):
     assert got[(1, 4)] == 1
     assert got[(2, 4)] == 2
     assert all(a != 3 and b != 3 for a, b in got)   # far row pairs with nothing
+    assert all(i < 5 for pair in got for i in pair)
     assert len(got) == 6
 
 
@@ -1006,44 +1009,6 @@ def test_semantic_dedup_n_rows_skips_count(spark):
     auto = semantic_dedup(df, "vec_id", "embedding", dim=3, threshold=0.999)
     hinted = semantic_dedup(df, "vec_id", "embedding", dim=3, threshold=0.999, n_rows=40)
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, hinted.collect()))
-
-
-def test_semantic_dedup_pair_modes_identical(spark):
-    """The 'fold' scale mode (one cell exchange, zero joins -- the
-    CORPUS_SCALE_PROFILE setting) must produce BIT-identical output to
-    the default 'join' mode on real embeddings, including the cosine
-    values (same operand order in both paths)."""
-    from tests.conftest import SF_SMALL
-    from testlog_etl_spark.operators.similarity import semantic_dedup
-    from testlog_etl_spark.tables import load_table
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    # threshold -1 makes every same-cell pair qualify, so the test
-    # compares a full exemplar assignment (0.45 is vacuous at sf0.001)
-    kw = dict(id_col="vec_id", vec_col="embedding", dim=64, threshold=-1.0, n_bits=6, seed=7)
-    join_rows = sorted(map(tuple, semantic_dedup(emb, **kw).collect()))
-    fold_rows = sorted(map(tuple, semantic_dedup(emb, pair_mode="fold", **kw).collect()))
-    assert join_rows == fold_rows
-    assert len(join_rows) > 0  # non-vacuous: some cell has >= 2 members
-
-
-def test_minhash_verify_modes_identical(spark):
-    """r13: the 'colocate' verify mode (shingle table shuffled ONCE by
-    id against exploded pair sides -- the CORPUS_SCALE_PROFILE setting)
-    must produce bit-identical pairs to the default 2-join verify,
-    including the exact jaccard values."""
-    from tests.conftest import SF_SMALL
-    from testlog_etl_spark.operators.neardup import minhash_lsh_pairs
-    from testlog_etl_spark.tables import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents").filter(F.col("text").isNotNull())
-    kw = dict(id_col="doc_id", text_col="text", threshold=0.2)
-    join_rows = sorted(map(tuple, minhash_lsh_pairs(docs, **kw).collect()))
-    colo_rows = sorted(
-        map(tuple, minhash_lsh_pairs(docs, verify_mode="colocate", **kw).collect())
-    )
-    assert join_rows == colo_rows
-    assert len(join_rows) > 0
 
 
 def test_countmin_merge_equals_union_and_overestimates(spark):
@@ -1588,20 +1553,17 @@ def test_corpus_scale_profile_matches_signatures():
     one-name deployment recipe can't rot as signatures evolve."""
     import inspect
 
-    from testlog_etl_spark.operators import neardup, postings, similarity
+    from testlog_etl_spark.operators import neardup, postings
 
-    modules = {"build_postings": postings, "semantic_dedup": similarity}
+    modules = {"build_postings": postings}
     for name, kwargs in neardup.CORPUS_SCALE_PROFILE.items():
         fn = getattr(modules.get(name, neardup), name)
         params = inspect.signature(fn).parameters
         missing = [k for k in kwargs if k not in params]
         assert not missing, f"{name}: profile kwargs not in signature: {missing}"
-        # every entry must be opt-in: caps default OFF (None/False);
-        # mode switches default to the non-profile value ("join" is
-        # semantic_dedup's locally-measured default, "fold" the scale
-        # setting)
+        # every entry must be opt-in: caps default OFF (None/False)
         for k, v in kwargs.items():
-            assert params[k].default in (None, False, "join"), (name, k)
+            assert params[k].default in (None, False), (name, k)
             assert params[k].default != v, (name, k, "profile value must differ from default")
 
 
@@ -1712,10 +1674,9 @@ def test_word_ngrams_bigram_zipwith_matches_slice_form(spark):
 
 
 def test_pair_scan_size_gates_are_lossless(spark):
-    """r13: the size gates in dedup_ngram_jaccard / dedup_containment
-    (J <= min/max, C <= |B|/|A|) must not change the emitted pair set
-    on a corpus with every size relation: equal, half, over-half,
-    under-half, empty, containment-heavy."""
+    """r13: the size gate in dedup_containment (C <= |B|/|A|) must not
+    change the emitted pair set on a corpus with every size relation:
+    equal, half, over-half, under-half, empty, containment-heavy."""
     rows = [
         (1, "a b c d e f g h i j"),
         (2, "a b c d e f g h i j"),          # identical to 1
@@ -1729,22 +1690,6 @@ def test_pair_scan_size_gates_are_lossless(spark):
     from pyspark.sql import functions as FF
 
     d = df.select("doc_id", nd.word_shingles(FF.col("text")).alias("sh"))
-    a = d.select(FF.col("doc_id").alias("id_a"), FF.col("sh").alias("sh_a"), FF.size("sh").alias("sa"))
-    b = d.select(FF.col("doc_id").alias("id_b"), FF.col("sh").alias("sh_b"), FF.size("sh").alias("sb"))
-    j = nd.jaccard(FF.col("sh_a"), FF.col("sh_b"))
-    ungated = {
-        (r["id_a"], r["id_b"], r["j"])
-        for r in a.join(b, FF.col("id_a") < FF.col("id_b"))
-        .withColumn("j", j).filter(FF.col("j") >= 0.5).select("id_a", "id_b", "j").collect()
-    }
-    gate = (FF.col("id_a") < FF.col("id_b")) & (FF.least("sa", "sb") * 2 >= FF.greatest("sa", "sb"))
-    gated = {
-        (r["id_a"], r["id_b"], r["j"])
-        for r in a.join(b, FF.when(gate, j >= 0.5).otherwise(FF.lit(False)))
-        .withColumn("j", j).select("id_a", "id_b", "j").collect()
-    }
-    assert gated == ungated and len(ungated) >= 1
-
     ca = d.filter(FF.size("sh") >= 3).select(
         FF.col("doc_id").alias("ia"), FF.col("sh").alias("sha"), FF.size("sh").alias("sa")
     )

@@ -781,12 +781,12 @@ def test_skyline_no_join_no_global_sort(spark):
 
 def test_prefix_filter_join_has_no_cartesian(spark):
     # the whole point of the PPJoin restatement: candidate generation is
-    # an EQUI-join on the token, never the O(n^2) crossjoin its
-    # brute-force sibling plans
-    df = _q("dedup_jaccard_prefixfilter")(spark, SF_SMALL)
-    plan = plan_of(df).lower()
-    assert "cartesianproduct" not in plan
-    assert "broadcastnestedloop" not in plan
+    # an EQUI-join on the token, never the O(n^2) crossjoin of the
+    # brute-force oracle twin
+    for name in ("dedup_jaccard_prefixfilter", "dedup_ngram_jaccard"):
+        plan = plan_of(_q(name)(spark, SF_SMALL)).lower()
+        assert "cartesianproduct" not in plan, name
+        assert "broadcastnestedloop" not in plan, name
 
 
 def test_winsorized_and_iqr_broadcast_the_percentile_rollup(spark):

@@ -108,37 +108,6 @@ def main() -> None:
 
     qs["dedup_semantic_auto"] = _dedup_semantic_auto
 
-    # probe-only variants (r13, VERDICT r12 #9): the CORPUS_SCALE_PROFILE
-    # opt-in modes vs their local defaults, so the "scale form wins when
-    # shuffle-bound" claims get measured rows at the 8x tier
-    def _dedup_semantic_fold(sp, sf_dir):
-        from pyspark.sql import functions as FF
-
-        from testlog_etl_spark.operators import similarity
-        from testlog_etl_spark.tables import load_tables
-
-        emb = load_tables(sp, sf_dir, ("embeddings",))["embeddings"]
-        return similarity.semantic_dedup(
-            emb, id_col="vec_id", vec_col="embedding", dim=64, threshold=0.45,
-            n_bits=6, seed=7, pair_mode="fold",
-        ).select("vec_id", "exemplar", FF.round("cosine", 4).alias("cos"))
-
-    def _dedup_minhash_colocate(sp, sf_dir):
-        from pyspark.sql import functions as FF
-
-        from testlog_etl_spark.operators import neardup
-        from testlog_etl_spark.tables import load_tables
-
-        docs = load_tables(sp, sf_dir, ("documents",))["documents"].filter(
-            FF.col("text").isNotNull()
-        )
-        return neardup.minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.5, verify_mode="colocate"
-        )
-
-    qs["dedup_semantic_fold"] = _dedup_semantic_fold
-    qs["dedup_minhash_colocate"] = _dedup_minhash_colocate
-
     # the staged-but-unregistered r13 pack (queries/r13_pack.py) shares
     # the (spark, sf_dir) signature -- probe-able by name ahead of its
     # registration, without touching the frozen registry
