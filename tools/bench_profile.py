@@ -4,6 +4,11 @@ the status tracker. Job/stage/task counts are load-invariant, so on a
 shared box they are the primary optimization signal (guide 1.1/1.2:
 count passes and shuffles, not noisy seconds).
 
+``codegen_compiles`` lists, per rep, how many generated classes the query
+compiled (a driver-side read of Spark's CodegenMetrics, no extra job):
+0 on a rep means it ran on already-compiled code; a rep with compiles
+also paid ~10 ms per class for codegen.
+
 Usage: python tools/bench_profile.py [query ..]   # default: all bench cases
 """
 
@@ -26,6 +31,7 @@ def main() -> None:
     spark = get_spark("bench-profile")
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     cases = bench_cases()
     names = sys.argv[1:] or list(cases)
 
@@ -40,14 +46,17 @@ def main() -> None:
         case = cases[name]
         best = float("inf")
         prof = None
+        compiles = []
         for r in range(reps):
             tracker = jsc.statusTracker()
             jobs0 = len(tracker.getJobIdsForGroup(None))
+            compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
             sc.setJobDescription(f"bench:{name}")
             t0 = time.perf_counter()
             case.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             sc.setJobDescription(None)
+            compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - compiles0)
             if r == 0:
                 # count jobs/stages/tasks of the first (cold-cache) rep
                 jids = sorted(tracker.getJobIdsForGroup(None))[jobs0:]
@@ -66,8 +75,15 @@ def main() -> None:
                 prof = (njobs, nstages, ntasks)
             best = min(best, dt)
         spark.catalog.clearCache()
-        out[name] = {"sec": round(best, 3), "jobs": prof[0], "stages": prof[1], "tasks": prof[2]}
-        print(f"{name:32s} {best:7.3f}s  jobs={prof[0]:3d} stages={prof[1]:4d} tasks={prof[2]:5d}", file=sys.stderr)
+        out[name] = {
+            "sec": round(best, 3), "jobs": prof[0], "stages": prof[1], "tasks": prof[2],
+            "codegen_compiles": compiles,
+        }
+        print(
+            f"{name:32s} {best:7.3f}s  jobs={prof[0]:3d} stages={prof[1]:4d} tasks={prof[2]:5d}"
+            f" compiles={compiles}",
+            file=sys.stderr,
+        )
 
     print(json.dumps(out))
 
