@@ -67,17 +67,6 @@ def bucketed_join(
     return spark.table(left_table).join(spark.table(right_table).hint("merge"), on)
 
 
-def normalize_to_bits(col, lo: float, hi: float, bits: int = 16):
-    """Map a numeric column to an integer rank in [0, 2^bits): the
-    fixed-grid quantization Z-ordering interleaves. Bounds are the
-    table's (cheaply known or pre-agged) min/max; values at hi clamp to
-    the top cell."""
-    span = float(hi) - float(lo)
-    cells = (1 << bits) - 1
-    scaled = ((col.cast("double") - F.lit(float(lo))) / F.lit(span)) * F.lit(cells)
-    return F.least(F.greatest(F.floor(scaled).cast("bigint"), F.lit(0)), F.lit(cells))
-
-
 def zorder_key2(a, b, bits: int = 16):
     """Bit-interleave two `bits`-bit integer columns into one Z-curve
     key (a pure codegen expression -- 4*bits shift/mask ops, no UDF).

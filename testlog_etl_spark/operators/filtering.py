@@ -88,75 +88,3 @@ def linear_quality_score(text: Column) -> Column:
         + F.lit(w["mean_token_len"]) * textstats.mean_token_len(text)
     )
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-
-
-def dsir_importance(
-    docs,
-    id_col: str,
-    terms: Column,
-    target_pred: Column,
-    n_buckets: int = 512,
-):
-    """DSIR-style hashed-n-gram importance weights (Xie et al.,
-    NeurIPS'23 "Data Selection for Language Models via Importance
-    Resampling"): score every document by how much its token
-    distribution looks like a TARGET domain relative to the RAW corpus,
-    using bag-of-hashed-unigram language models::
-
-        w(doc) = sum over token instances of
-                   ln p_target(bucket(token)) - ln p_raw(bucket(token))
-
-    where bucket = pmod(xxhash64(token), n_buckets) and both bucket
-    distributions are Laplace-smoothed ((cnt + 1) / (total + B)). The
-    target corpus is selected IN-FLIGHT by ``target_pred`` (a Column
-    predicate over ``docs``), so one token pass feeds both counts.
-
-    Returns one row per document with >= 1 token: (id_col, is_target,
-    n_tokens, imp_weight ROUNDED 4, imp_per_token ROUNDED 6). Zero-token
-    documents have an empty bag — no likelihood ratio exists; callers
-    needing them keep them upstream. Rounding happens HERE so downstream
-    top-k cuts on the weight are deterministic cross-engine (per-doc
-    sums of hundreds of doubles differ in addition order between
-    engines; the log-ratio terms are O(1), so 1e-4 is far above ulp
-    accumulation at any document length).
-
-    Scale shape: pass 1 is explode -> groupBy(bucket) with map-side
-    combine — the shuffle is bounded by n_buckets rows per mapper, and
-    the target counts ride the same pass as a conditional sum. The
-    resulting B-row log-ratio table (plus its 1-row totals) broadcasts
-    back onto pass 2's exploded tokens, which re-aggregate keyed by doc
-    id (again partial-aggregated). Nothing corpus-sized ever joins or
-    shuffles wider than the token->doc rollup any tokenizer already
-    pays; at 100 TB the bucket table is KB-sized regardless of corpus.
-    """
-    toks = docs.select(
-        F.col(id_col).alias("_doc"),
-        target_pred.cast("boolean").alias("_is_tgt"),
-        F.explode(terms).alias("_term"),
-    ).withColumn("_bkt", F.pmod(F.xxhash64("_term"), F.lit(n_buckets)))
-    bcnt = toks.groupBy("_bkt").agg(
-        F.count(F.lit(1)).cast("double").alias("_raw"),
-        F.sum(F.when(F.col("_is_tgt"), 1).otherwise(0)).cast("double").alias("_tgt"),
-    )
-    totals = bcnt.agg(
-        F.sum("_raw").alias("_t_raw"), F.sum("_tgt").alias("_t_tgt")
-    )
-    ratios = bcnt.crossJoin(F.broadcast(totals)).select(
-        "_bkt",
-        (
-            F.log((F.col("_tgt") + 1.0) / (F.col("_t_tgt") + F.lit(float(n_buckets))))
-            - F.log((F.col("_raw") + 1.0) / (F.col("_t_raw") + F.lit(float(n_buckets))))
-        ).alias("_lr"),
-    )
-    return (
-        toks.join(F.broadcast(ratios), "_bkt")
-        .groupBy("_doc", "_is_tgt")
-        .agg(F.count(F.lit(1)).alias("n_tokens"), F.sum("_lr").alias("_w"))
-        .select(
-            F.col("_doc").alias(id_col),
-            F.col("_is_tgt").alias("is_target"),
-            "n_tokens",
-            F.round("_w", 4).alias("imp_weight"),
-            F.round(F.col("_w") / F.col("n_tokens"), 6).alias("imp_per_token"),
-        )
-    )

@@ -234,69 +234,3 @@ def detect_scene_cuts(
             out = {k: [] for k in out}
 
     return media.mapInPandas(run, SCENE_CUT_SCHEMA)
-
-
-AHASH_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("ahash", StringType()),  # 64-char '0'/'1' bit string
-    ]
-)
-
-
-def _average_hash(payload: bytes, bits: int = 64) -> str | None:
-    """Average hash (aHash, the classic perceptual-hash baseline): split
-    the pixel stream into ``bits`` equal-share blocks, bit b = 1 iff
-    block b's mean exceeds the global mean. Payloads shorter than
-    ``bits`` bytes return None (no meaningful blocks). Pure integer
-    sums -> one exact double division per mean, so the bit pattern is
-    engine-portable (the oracle replays byte-for-byte in SQL)."""
-    import numpy as np
-
-    n = len(payload)
-    if n < bits:
-        return None
-    # vectorized block sums (r13, §4.2): bincount/reduceat give the
-    # IDENTICAL integers the per-byte Python loops produced; the mean
-    # comparisons keep the same int/int Python divisions, so the bit
-    # pattern is unchanged.
-    arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-    total = int(arr.sum())
-    gm = total / n
-    bounds = [i * n // bits for i in range(bits + 1)]
-    sums = np.add.reduceat(arr, bounds[:-1])
-    out = [
-        "1" if int(s) / (hi - lo) > gm else "0"
-        for s, lo, hi in zip(sums, bounds[:-1], bounds[1:])
-    ]
-    return "".join(out)
-
-
-def average_hash(media: DataFrame, bits: int = 64) -> DataFrame:
-    """Perceptual-hash plumbing: Arrow batches of binary payloads in,
-    (media_id, ahash bit-string) out — the decode boundary is the same
-    honest stand-in as extract_features (bytes AS the pixel stream; a
-    real deployment decodes to grayscale first, changing only
-    ``_average_hash``'s input). Pair the output with
-    ``neardup.hamming_join`` for the near-duplicate tier: the bit
-    string IS a 64-char key, so the pigeonhole chunk blocking applies
-    unchanged and nothing corpus-sized goes all-pairs."""
-    from testlog_etl_spark.util import spread
-
-    media = spread(media)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "ahash": [
-                        _average_hash(p if p is not None else b"", bits)
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return media.mapInPandas(run, AHASH_SCHEMA).filter(F.col("ahash").isNotNull())

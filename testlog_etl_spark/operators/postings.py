@@ -149,85 +149,6 @@ def bm25_topk(
     )
 
 
-def query_likelihood_topk(
-    docs: DataFrame,
-    id_col: str,
-    terms: Column,
-    query_terms: list[str],
-    k: int = 10,
-    mu: float = 300.0,
-) -> DataFrame:
-    """Dirichlet-smoothed query-likelihood retrieval (Zhai & Lafferty,
-    SIGIR'01) — the language-model twin of ``bm25_topk``:
-
-        score(d) = sum over t in q of ln((tf_td + mu*p(t|C)) / (|d| + mu)),
-        p(t|C) = cf_t / |C| (collection term frequency over token count).
-
-    Computed via the standard hit-only decomposition, so absent terms
-    never materialize rows::
-
-        score(d) = qconst - |q'| * ln(|d| + mu)
-                   + sum over hit terms of ln(1 + tf * |C| / (mu * cf_t))
-        qconst   = sum over t in q' of ln(mu * cf_t / |C|)
-
-    QUERY-TERM CONTRACT: q' is the EFFECTIVE query — terms with zero
-    collection frequency carry p(t|C) = 0 (score -inf for every doc)
-    and are dropped, the OR-retrieval convention; ``n_terms`` counts a
-    doc's hits among q'. Candidates are docs with >= 1 hit.
-
-    Scale shape mirrors bm25_topk: the explode is pre-filtered to query
-    terms so |q'| * n_docs rows move at most, collection stats and the
-    |q'|-row cf table ride broadcasts (never a driver action), the
-    top-k cut is TakeOrderedAndProject on the ROUNDED score with doc-id
-    ties, and the rank window runs over k rows only.
-    """
-    q = F.array(*[F.lit(t) for t in query_terms])
-    base = docs.select(F.col(id_col).alias("_doc"), terms.alias("_terms")).select(
-        "_doc", "_terms", F.size("_terms").alias("_len")
-    )
-    stats = base.agg(F.sum("_len").cast("double").alias("_coll_len"))
-    qhits = base.select(
-        "_doc", "_len",
-        F.explode(F.filter("_terms", lambda t: F.array_contains(q, t))).alias("term"),
-    )
-    cfq = qhits.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("_cf"))
-    qagg = cfq.crossJoin(F.broadcast(stats)).agg(
-        F.sum(F.log(F.lit(mu) * F.col("_cf") / F.col("_coll_len"))).alias("_qconst"),
-        F.count(F.lit(1)).alias("_nq"),
-    )
-    hits = qhits.groupBy("_doc", "_len", "term").agg(F.count(F.lit(1)).alias("_tf"))
-    scored = (
-        hits.join(F.broadcast(cfq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_contrib",
-            F.log(
-                F.lit(1.0)
-                + F.col("_tf") * F.col("_coll_len") / (F.lit(mu) * F.col("_cf"))
-            ),
-        )
-        .groupBy("_doc", "_len")
-        .agg(F.sum("_contrib").alias("_hitsum"), F.count(F.lit(1)).alias("n_terms"))
-        .crossJoin(F.broadcast(qagg))
-        .withColumn(
-            "score",
-            F.round(
-                F.col("_qconst")
-                - F.col("_nq") * F.log(F.col("_len") + F.lit(mu))
-                + F.col("_hitsum"),
-                4,
-            ),
-        )
-    )
-    from pyspark.sql import Window
-
-    topk = scored.orderBy(F.col("score").desc(), F.col("_doc")).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col("_doc"))
-    return topk.withColumn("rank", F.row_number().over(w)).select(
-        F.col("_doc").alias(id_col), "score", "n_terms", "rank"
-    )
-
-
 def phrase_search(
     docs: DataFrame,
     id_col: str,

@@ -244,80 +244,6 @@ def weighted_exact_k(
     return grouped_topk(keyed, [group_col], "_skey", id_col, k=k, descending=True)
 
 
-def stratified_reservoir(
-    df: DataFrame,
-    strata_col: str,
-    id_col: str,
-    k: int,
-    seeds: dict[str, str] | None = None,
-    default_seed: str = "0",
-) -> DataFrame:
-    """Exactly min(k, stratum size) rows per stratum, drawn uniformly
-    without replacement by ranking the 60-bit md5 hash of
-    (id, stratum, that stratum's seed) — the batch, shuffle-disciplined
-    equivalent of one reservoir PER STRATUM (r11; NOTES.md parked item,
-    complements exact_k_per_group).
-
-    Per-stratum seeds make the draw MERGE-SAFE: a row's rank key
-    depends only on its own id, its stratum, and that stratum's seed,
-    so re-drawing one stratum (bumping its seed entry) or adding a new
-    stratum cannot perturb any other stratum's sample, and re-running
-    on any superset reproduces the surviving winners (a row only ever
-    drops because a lower-keyed row arrived in ITS stratum). ``seeds``
-    maps stratum value -> seed string; missing strata (and a None map)
-    use ``default_seed``. NULL strata form their own stratum under the
-    default seed, as in groupBy.
-
-    Ranking rides operators/topk.py::grouped_topk (Arrow-local prune,
-    k-bounded merge) rather than a per-stratum window, so one hot
-    stratum never sorts in a single task. Ties (hash collisions) break
-    by id; the whole draw is engine-portable — the DuckDB twin is the
-    same md5/substr/try_cast idiom the registered samplers use, over
-    the same preimage.
-
-    Key preimage (r12, ADVICE fix): each of (id, stratum, seed) is
-    encoded LENGTH-PREFIXED with a NULL tag — ``len(x) ':' x`` for a
-    present value, ``'-'`` for NULL — and the three encodings are
-    concatenated. The encoding is self-delimiting (a parser reads
-    digits to ':' then that many characters; '-' starts no digit), so
-    no (id, stratum) pair can alias another regardless of what ':' or
-    digits the values contain, and a NULL component hashes distinctly
-    from every string including ''. Lengths are codepoint counts,
-    identical in Spark ``length`` and DuckDB ``length``.
-    """
-    from testlog_etl_spark.operators.topk import grouped_topk
-
-    def _lp(c: Column) -> Column:
-        s = c.cast("string")
-        return F.coalesce(
-            F.concat(F.length(s).cast("string"), F.lit(":"), s), F.lit("-")
-        )
-
-    seed_expr = F.lit(default_seed)
-    if seeds:
-        pairs = []
-        for sv, sd in sorted(seeds.items()):
-            pairs += [F.lit(sv), F.lit(sd)]
-        seed_expr = F.coalesce(
-            F.element_at(F.create_map(*pairs), F.col(strata_col).cast("string")),
-            F.lit(default_seed),
-        )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(_lp(F.col(id_col)), _lp(F.col(strata_col)), _lp(seed_expr))
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    keyed = df.withColumn("_rkey", h)
-    picked = grouped_topk(keyed, [strata_col], "_rkey", id_col, k=int(k), descending=False)
-    return picked.select(strata_col, F.col(id_col), F.col("rank").alias("draw_rank"))
-
-
 def temperature_allocation(
     df: DataFrame,
     strata_col: str,

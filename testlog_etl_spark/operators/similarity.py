@@ -384,173 +384,6 @@ def ivf_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def ivf_pq_train(
-    corpus: DataFrame,
-    dim: int,
-    k_coarse: int = 8,
-    m: int = 4,
-    k_cells: int = 8,
-    n_iter: int = 2,
-    c_id: str = "c_id",
-    c_vec: str = "c_vec",
-) -> tuple[list[tuple[int, list[float]]], list[list[tuple[int, list[float]]]]]:
-    """Train the IVF-PQ codebooks once: (coarse centroids, one fine
-    codebook per PQ subspace), both via the grid-snapped deterministic
-    ``kmeans_fit`` replay. At deployment scale this runs ONCE on a
-    corpus sample and the result is passed to every ``ivf_pq_topk``
-    call via ``books=`` — the SCALE.md r12 probe showed training is
-    the whole per-call constant (~10 s at every tier), while the
-    query-time work (codes scan + broadcast distance tables) is cheap
-    and data-proportional."""
-    if dim % m != 0:
-        # checked, not assumed (the hamming_join contract style): a
-        # non-divisible dim would silently drop the trailing dim % m
-        # components from both codebook training and ADC distances.
-        raise ValueError(
-            f"ivf_pq_train: dim={dim} is not divisible by m={m} subspaces"
-        )
-    cast = lambda c: F.col(c).cast("array<double>")  # noqa: E731
-    sd = dim // m
-    coarse = kmeans_fit(
-        corpus, c_vec, k=k_coarse, n_iter=n_iter, id_col=c_id, centroid_quant_bits=20
-    )
-    fine = []
-    for s in range(m):
-        c_sub = corpus.select(
-            F.col(c_id), F.slice(cast(c_vec), 1 + sd * s, sd).alias("_sv")
-        )
-        fine.append(
-            kmeans_fit(
-                c_sub, "_sv", k=k_cells, n_iter=n_iter, id_col=c_id, centroid_quant_bits=20
-            )
-        )
-    return coarse, fine
-
-
-def ivf_pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int,
-    nprobe: int = 2,
-    k_coarse: int = 8,
-    m: int = 4,
-    k_cells: int = 8,
-    n_iter: int = 2,
-    q_id: str = "q_id",
-    c_id: str = "c_id",
-    q_vec: str = "q_vec",
-    c_vec: str = "c_vec",
-    books: tuple[list, list] | None = None,
-) -> DataFrame:
-    """IVF-PQ combined ANN tier (Jegou et al. '11, the composition the
-    two existing tiers were built for): coarse IVF cells prune the
-    candidate set, PQ asymmetric distance ranks the survivors — at
-    100 TB the corpus lives as (coarse cell, m one-byte codes) rows
-    partitioned by cell; a probe reads nprobe partitions of CODES, and
-    the per-query distance tables (|Q| x m x k_cells rows) broadcast.
-    Full-dimension floats are read only at TRAIN time, never at query
-    time.
-
-    Composition invariant (tested): with ``nprobe == k_coarse`` the
-    coarse filter admits every pair, so the result is exactly the pure
-    ADC ranking over the whole corpus. Both kmeans trainings use the
-    grid-snapped deterministic replay (``centroid_quant_bits=20``), so
-    an oracle can replay them bit-identically (the existing
-    ``sim_pq_adc_topk``/IVF oracle bodies compose for r13
-    registration). Ranked on the ROUNDED estimate with id ties.
-
-    ``books``: precomputed ``ivf_pq_train`` output (coarse, fine
-    codebooks). Default None self-trains on ``corpus`` — the
-    registered-query form; a deployment trains once on a sample and
-    reuses (train-once equivalence is test-pinned).
-    """
-    from testlog_etl_spark.operators.topk import grouped_topk
-
-    if books is None:
-        books = ivf_pq_train(
-            corpus,
-            dim,
-            k_coarse=k_coarse,
-            m=m,
-            k_cells=k_cells,
-            n_iter=n_iter,
-            c_id=c_id,
-            c_vec=c_vec,
-        )
-    elif dim % m != 0:
-        raise ValueError(
-            f"ivf_pq_topk: dim={dim} is not divisible by m={m} subspaces"
-        )
-    coarse, fine_books = books
-    cast = lambda c: F.col(c).cast("array<double>")  # noqa: E731
-    sd = dim // m
-
-    # --- coarse tier: corpus cells + per-query probe list (the
-    # ivf_topk shape, minus the query vector ride-along: ADC never
-    # touches full-dimension floats after training)
-    corpus_cells = corpus.select(
-        F.col(c_id), cast(c_vec).alias("_cv")
-    ).withColumn("_cell", _argmin_cell(F.col("_cv"), coarse))
-    ids = const_array([int(i) for i, _ in coarse])
-    cents = const_array([[float(x) for x in c] for _, c in coarse])
-    dists = F.transform(
-        F.sequence(F.lit(1), F.lit(len(coarse))),
-        lambda j: F.struct(
-            sq_dist(cast(q_vec), F.element_at(cents, j)).alias("d"),
-            F.element_at(ids, j).alias("cell"),
-        ),
-    )
-    probes = queries.select(
-        F.col(q_id), F.slice(F.array_sort(dists), 1, int(nprobe)).alias("_p")
-    ).select(q_id, F.explode(F.col("_p.cell")).alias("_cell"))
-    # candidate pairs: ids only — a corpus row has exactly ONE coarse
-    # cell, so the join cannot duplicate a pair
-    candidates = corpus_cells.select(c_id, "_cell").join(F.broadcast(probes), "_cell").select(
-        q_id, c_id
-    )
-
-    # --- fine tier: per-subspace codebooks -> corpus codes + broadcast
-    # query distance tables (the sim_pq_adc_topk shape, scoped to the
-    # candidate set)
-    codes = None
-    qd = None
-    for s in range(m):
-        c_sub = corpus.select(
-            F.col(c_id), F.slice(cast(c_vec), 1 + sd * s, sd).alias("_sv")
-        )
-        book = fine_books[s]
-        part_codes = c_sub.withColumn("_fcell", _argmin_cell(F.col("_sv"), book)).select(
-            c_id, F.lit(s).alias("_sub"), "_fcell"
-        )
-        book_df = corpus.sparkSession.createDataFrame(
-            [(int(i), [float(x) for x in c]) for i, c in book],
-            "_fcell bigint, _centroid array<double>",
-        )
-        part_qd = (
-            queries.select(F.col(q_id), F.slice(cast(q_vec), 1 + sd * s, sd).alias("_qsv"))
-            .crossJoin(F.broadcast(book_df))
-            .select(
-                q_id,
-                F.lit(s).alias("_sub"),
-                "_fcell",
-                sq_dist(F.col("_qsv"), F.col("_centroid")).alias("_qdist"),
-            )
-        )
-        codes = part_codes if codes is None else codes.unionByName(part_codes)
-        qd = part_qd if qd is None else qd.unionByName(part_qd)
-
-    pairs = (
-        candidates.join(codes, c_id)
-        .join(F.broadcast(qd), [q_id, "_sub", "_fcell"])
-        .filter(F.col(q_id) != F.col(c_id))
-        .groupBy(q_id, c_id)
-        .agg(F.round(F.sum("_qdist"), 6).alias("adc"))
-    )
-    top = grouped_topk(pairs, [q_id], "adc", c_id, int(k), descending=False)
-    return top.select(q_id, F.col("rank"), F.col(c_id), F.col("adc"))
-
-
 def random_sign_projection(
     df: DataFrame,
     vec_col: str,

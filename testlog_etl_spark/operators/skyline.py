@@ -18,10 +18,8 @@ Scale shape: local frontiers are tiny for real distributions (the
 frontier of n uniform 2-d points has ~H(n) = O(log n) expected size);
 the merge stage sees at most sum(local frontier sizes) ~ parts *
 O(log rows-per-part). Adversarial inputs (all points on one diagonal)
-degrade the MERGE input toward n -- for that regime use
-``pareto_frontier_2d_bucketed`` (r12): same exact result, but the
-merge is replaced by one bucket-keyed shuffle plus an n_buckets-row
-broadcast, so no single task ever holds the whole frontier.
+degrade the MERGE input toward n, which is also the output size (see
+``pareto_frontier_2d``'s merge-task bound).
 
 Tie semantics (pinned by tests + the NOT-EXISTS oracle): dominance
 requires (x <= , y >=) with at least ONE strict inequality, so exact
@@ -40,8 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def _frontier_pass(x: str, y: str):
@@ -99,80 +96,10 @@ def pareto_frontier_2d(df: DataFrame, x: str, y: str) -> DataFrame:
     O(parts * log rows-per-part) rows, but for ANTI-CORRELATED data
     (x and y trade off along a diagonal) the true frontier, and hence
     the union, is Θ(n): the output itself is that large, so no exact
-    skyline can do better in one task. For that regime use
-    ``pareto_frontier_2d_bucketed`` — the same exact result with the
-    merge distributed over a bucket-keyed shuffle. Exactness under a
+    skyline can do better in one task. Exactness under a
     frontier that is a large fraction of n is pinned by
     tests/test_properties.py::test_skyline_anticorrelated_frontier."""
     schema = df.schema
     local = _frontier_pass(x, y)
     candidates = df.mapInArrow(local, schema)
     return candidates.coalesce(1).mapInArrow(local, schema)
-
-
-def pareto_frontier_2d_bucketed(
-    df: DataFrame, x: str, y: str, n_buckets: int = 256
-) -> DataFrame:
-    """EXACT (min ``x``, max ``y``) Pareto frontier with the merge
-    DISTRIBUTED — the anti-correlated-scale form of
-    ``pareto_frontier_2d`` (r12; closes that operator's merge-task
-    bound). Same tie/null/NaN contract, same output rows.
-
-    Why it is exact, not an approximation: bucket x into ``n_buckets``
-    equal-width bins over the global [min, max]. For p in bucket b and
-    q in bucket b' < b, q.x < p.x STRICTLY (q.x is below b's lower
-    edge), so cross-bucket dominance reduces to q.y >= p.y — a running
-    max of per-bucket ymax over STRICTLY earlier buckets. Same-bucket
-    dominance is handled by the partition-local frontier pass after a
-    bucket-keyed repartition (whole buckets are colocated, so every
-    same-bucket dominator is in-partition). Later buckets can never
-    dominate (their x is >= p's bucket's upper edge > p.x... >= p.x
-    with > on the open side; in all cases not smaller, and equal-x
-    cross-bucket cannot happen with strict bin edges).
-
-    The running ymax is computed from the PRUNED candidates: a bucket's
-    ymax row can only be pruned by an EARLIER bucket's row with y >=
-    ymax, which keeps the running max (over buckets < c) unchanged —
-    so one scan of the data suffices.
-
-    Plan: one 1-row span broadcast (no driver action), one hash
-    shuffle on the bucket key, one n_buckets-row rollup whose running
-    max rides a window over a FIXED-size frame (bounded by
-    construction, the window_lint whitelist category), broadcast back.
-    No task ever holds more than its buckets' share of the frontier.
-    Degenerate span (all x equal) collapses to one bucket — a single
-    partition holds the data, matching the coalesce(1) form's cost."""
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    schema = df.schema
-    local = _frontier_pass(x, y)
-
-    xd = F.col(x).cast("double")
-    span = df.agg(F.min(xd).alias("_lo"), F.max(xd).alias("_hi"))
-    width = (F.col("_hi") - F.col("_lo")) / F.lit(float(n_buckets))
-    bkt = F.when(
-        (F.col("_hi") > F.col("_lo")) & xd.isNotNull() & ~F.isnan(xd),
-        F.least(F.floor((xd - F.col("_lo")) / width), F.lit(n_buckets - 1)),
-    ).otherwise(F.lit(0))
-    bucketed = (
-        df.join(F.broadcast(span))
-        .withColumn("_bkt", bkt.cast("long"))
-        .drop("_lo", "_hi")
-    )
-    pass_schema = bucketed.schema
-    # consumed twice (running-ymax rollup + the final filter join) --
-    # persist so the scan+prune runs once, the neardup-signatures
-    # pattern; MEMORY_AND_DISK holds only the pruned candidates
-    from testlog_etl_spark.util import persist_once
-
-    candidates = persist_once(bucketed.repartition("_bkt").mapInArrow(local, pass_schema))
-
-    rollup = candidates.groupBy("_bkt").agg(F.max(F.col(y).cast("double")).alias("_bymax"))
-    w = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    prev = rollup.select("_bkt", F.max("_bymax").over(w).alias("_prev"))
-    out = (
-        candidates.join(F.broadcast(prev), "_bkt")
-        .filter(F.col("_prev").isNull() | (F.col(y).cast("double") > F.col("_prev")))
-        .drop("_bkt", "_prev")
-    )
-    return out.select(*[f.name for f in schema.fields])

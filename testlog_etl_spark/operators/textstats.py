@@ -170,7 +170,11 @@ def dup_ngram_fraction_of(grams: Column) -> Column:
     signal from the column: the gram-construction subtree is NOT
     common-subexpression-eliminated in interpreted (higher-order
     function) projections, so inlining it k times evaluates it k times
-    (r13; text_repetition measured 21 s inlined vs 9 s from a column)."""
+    (r13; text_repetition measured 21 s inlined vs 9 s from a column).
+
+    Precondition: ``grams`` holds no null elements (``word_ngrams``
+    output never does). A null would count toward the total and as one
+    distinct value."""
     total = F.size(grams)
     distinct = F.size(F.array_distinct(grams))
     return F.when(total > 0, F.lit(1.0) - distinct / total.cast("double")).otherwise(F.lit(0.0))
@@ -199,7 +203,12 @@ def top_ngram_fraction(col: Column, n: int = 2) -> Column:
 
 def top_ngram_fraction_of(grams: Column) -> Column:
     """`top_ngram_fraction` over an already-built gram array column
-    (see dup_ngram_fraction_of for why callers should share the array)."""
+    (see dup_ngram_fraction_of for why callers should share the array).
+
+    Precondition: ``grams`` holds no null elements (``word_ngrams``
+    output never does). The run-length fold starts a new run of 1 at
+    each null, so a null-only array would report 1/total where counting
+    non-null grams reports 0."""
     total = F.size(grams)
     # fold state: (prev gram, current run length, best run length);
     # grams are non-null (concat of non-null tokens), so `g == prev` is

@@ -459,647 +459,3 @@ def coalesce_intervals(
     out.count()
     ranged.unpersist()
     return out
-
-
-def matrix_profile(
-    series: DataFrame,
-    m: int,
-    excl: int | None = None,
-    max_diag: int | None = None,
-    series_col: str = "series",
-    t_col: str = "t",
-    value_col: str = "v",
-    round_dp: int | None = None,
-) -> DataFrame:
-    """Exact z-normalized matrix profile (Yeh et al., ICDM'16) over
-    dense long-form series: for every length-``m`` subsequence
-    ``T[i..i+m)`` of each series, the minimal z-normalized Euclidean
-    distance to any OTHER subsequence of the same series at least
-    ``excl`` apart (default m//2, the standard trivial-match exclusion
-    zone), plus the argmin index. Input rows are
-    ``(series_col, t_col, value_col)`` with ``t`` a dense 0..n-1
-    integer grid per series (gaps would silently misalign windows --
-    callers fill them first, cf. ``downsample_locf``'s dense grid).
-    Output: ``(series_col, t, mp_dist, mp_index)``; a window appears
-    iff it has at least one admissible neighbor.
-
-    Construction (relational SCRIMP; no arrays, no UDF): the dot
-    product QT(i, i+d) = sum_t T[t]*T[t+d] over t in [i, i+m) is, per
-    diagonal d, a length-m sliding sum of the product series
-    P_d(t) = T[t]*T[t+d] -- so ONE self-join on the series key with
-    ``b.t - a.t > excl`` materializes every diagonal's product series,
-    and a single (series, d)-partitioned window turns them all into
-    QT values. Window means/stds come from the same sliding-sum shape
-    on T itself; both engines then evaluate the identical closed form
-    dist^2 = 2m(1 - (QT - m*mu_i*mu_j)/(m*sig_i*sig_j)), correlation
-    clamped to [-1, 1]. All sliding sums are over the raw values --
-    keep ``value_col`` INTEGRAL for the cross-engine exactness
-    contract (integer sums are association-free; float window sums
-    are not, cf. ts_dtw_shape_distance's micro-unit note).
-
-    Zero-variance windows (conventional, matches stumpy): both windows
-    constant -> 0; exactly one constant -> sqrt(m) (the constant
-    window z-normalizes to the zero vector).
-
-    Scale contract: the pair fan-out is Theta(n^2/2) rows PER SERIES
-    -- inherent to the exact profile -- but it is series-length-bound,
-    NOT corpus-bound (the corpus-sized pass is whatever rollup built
-    the series), and its parallel axis is the diagonal: every
-    (series, d) partition is an independent O(n) sliding sum, so a
-    1000-executor run shards one long series across n-m-excl tasks.
-    ``max_diag`` is the documented scale valve (the bounded/local
-    matrix profile): restricting |i-j| <= max_diag caps the fan-out at
-    O(n * max_diag) and keeps every LOCAL motif; the registered-query
-    form keeps it None (exact global profile, the oracle's contract).
-
-    ``round_dp``: when set, distances are rounded to that many
-    decimals BEFORE the argmin (tie broken by smaller index) and in
-    the output -- the cross-engine determinism knob: two engines'
-    IEEE doubles can drift in the last ulp, so ranking on the rounded
-    value pins identical (mp_dist, mp_index) on both.
-    """
-    if m < 2:
-        raise ValueError(f"matrix_profile: window m must be >= 2, got {m}")
-    if excl is None:
-        excl = m // 2
-    if excl < 0:
-        raise ValueError(f"matrix_profile: excl must be >= 0, got {excl}")
-    if max_diag is not None and max_diag <= excl:
-        raise ValueError(
-            f"matrix_profile: max_diag ({max_diag}) must exceed excl ({excl})"
-        )
-
-    s = series.select(
-        F.col(series_col).alias("_s"),
-        F.col(t_col).cast("long").alias("_t"),
-        F.col(value_col).alias("_v"),
-    )
-    s = persist_once(s)
-
-    fm = float(m)
-    ws = Window.partitionBy("_s").orderBy("_t").rowsBetween(0, m - 1)
-    stats0 = s.select(
-        "_s",
-        "_t",
-        F.sum("_v").over(ws).alias("_sm"),
-        F.sum(F.col("_v") * F.col("_v")).over(ws).alias("_sq"),
-        F.count(F.lit(1)).over(ws).alias("_c"),
-    ).filter(F.col("_c") == m)
-    mu = F.col("_sm").cast("double") / F.lit(fm)
-    sig = F.sqrt(
-        F.greatest(
-            F.col("_sq").cast("double") / F.lit(fm) - mu * mu, F.lit(0.0)
-        )
-    )
-    stats = stats0.select("_s", "_t", mu.alias("_mu"), sig.alias("_sig"))
-
-    if max_diag is None:
-        a, b = s.alias("_a"), s.alias("_b")
-        diag = F.col("_b._t") - F.col("_a._t")
-        cond = (F.col("_a._s") == F.col("_b._s")) & (diag > excl)
-        prods = a.join(b, cond).select(
-            F.col("_a._s").alias("_s"),
-            diag.alias("_d"),
-            F.col("_a._t").alias("_t"),
-            (F.col("_a._v") * F.col("_b._v")).alias("_p"),
-        )
-    else:
-        # valve mode is a true BAND join (the point_in_interval_join
-        # bucketing idiom): a plain range predicate on the series-key
-        # join would still ENUMERATE all n^2/2 pairs per series and
-        # filter -- flat at n=16k but Theta(n^2) predicate work at
-        # corpus-span lengths. Bucket t by width max_diag; a row's
-        # admissible partners (t+excl+1 .. t+max_diag) live in its own
-        # or the next bucket, so an EQUI-join on (series, bucket) with
-        # a 2x left-side fan-out generates <= 2*n*max_diag candidates
-        # -- O(n * max_diag) generated, not just retained.
-        w_ = int(max_diag)
-        a2 = s.select(
-            "_s",
-            "_t",
-            "_v",
-            F.explode(
-                F.array(
-                    F.expr(f"_t div {w_}"), F.expr(f"_t div {w_} + 1")
-                )
-            ).alias("_jbk"),
-        )
-        b2 = s.select(
-            F.col("_s").alias("_bs"),
-            F.col("_t").alias("_bt"),
-            F.col("_v").alias("_bv"),
-            F.expr(f"_t div {w_}").alias("_bbk"),
-        )
-        diag = F.col("_bt") - F.col("_t")
-        prods = (
-            a2.join(
-                b2,
-                (F.col("_s") == F.col("_bs")) & (F.col("_jbk") == F.col("_bbk")),
-            )
-            .filter((diag > excl) & (diag <= max_diag))
-            .select(
-                "_s",
-                diag.alias("_d"),
-                "_t",
-                (F.col("_v") * F.col("_bv")).alias("_p"),
-            )
-        )
-    wq = Window.partitionBy("_s", "_d").orderBy("_t").rowsBetween(0, m - 1)
-    qt = (
-        prods.select(
-            "_s",
-            "_d",
-            "_t",
-            F.sum("_p").over(wq).alias("_qt"),
-            F.count(F.lit(1)).over(wq).alias("_c"),
-        )
-        .filter(F.col("_c") == m)
-        .drop("_c")
-    )
-
-    si = stats.select(
-        F.col("_s").alias("_si_s"), F.col("_t").alias("_si_t"),
-        F.col("_mu").alias("_mu_i"), F.col("_sig").alias("_sig_i"),
-    )
-    sj = stats.select(
-        F.col("_s").alias("_sj_s"), F.col("_t").alias("_sj_t"),
-        F.col("_mu").alias("_mu_j"), F.col("_sig").alias("_sig_j"),
-    )
-    # stats is one row per window: n-m+1 rows per series -- broadcast
-    # both probes so the only data-scale exchange stays the diagonal
-    # window's (series, d) hash partitioning
-    joined = qt.join(
-        F.broadcast(si),
-        (F.col("_s") == F.col("_si_s")) & (F.col("_t") == F.col("_si_t")),
-    ).join(
-        F.broadcast(sj),
-        (F.col("_s") == F.col("_sj_s"))
-        & ((F.col("_t") + F.col("_d")) == F.col("_sj_t")),
-    )
-    corr = (
-        F.col("_qt").cast("double") - F.lit(fm) * F.col("_mu_i") * F.col("_mu_j")
-    ) / (F.lit(fm) * F.col("_sig_i") * F.col("_sig_j"))
-    corr_c = F.least(F.lit(1.0), F.greatest(F.lit(-1.0), corr))
-    dist = (
-        F.when((F.col("_sig_i") == 0) & (F.col("_sig_j") == 0), F.lit(0.0))
-        .when((F.col("_sig_i") == 0) | (F.col("_sig_j") == 0), F.sqrt(F.lit(fm)))
-        .otherwise(F.sqrt(F.lit(2.0) * F.lit(fm) * (F.lit(1.0) - corr_c)))
-    )
-    if round_dp is not None:
-        dist = F.round(dist, round_dp)
-    # persist the one-directional edge set: the symmetric union below
-    # would otherwise re-run the whole Theta(n^2) diagonal pipeline for
-    # its second branch
-    edges = persist_once(
-        joined.select(
-            "_s",
-            F.col("_t").alias("_w"),
-            (F.col("_t") + F.col("_d")).alias("_o"),
-            dist.alias("_dist"),
-        )
-    )
-    sym = edges.unionByName(
-        edges.select(
-            "_s",
-            F.col("_o").alias("_w"),
-            F.col("_w").alias("_o"),
-            "_dist",
-        )
-    )
-    # struct-min = partial-aggregable argmin (map-side combine; no
-    # row_number sort shuffle); ties break on the smaller index
-    prof = sym.groupBy("_s", "_w").agg(
-        F.min(F.struct(F.col("_dist"), F.col("_o"))).alias("_m")
-    )
-    return prof.select(
-        F.col("_s").alias(series_col),
-        F.col("_w").alias("t"),
-        F.col("_m._dist").alias("mp_dist"),
-        F.col("_m._o").alias("mp_index"),
-    )
-
-
-def holt_winters_additive(
-    df: DataFrame,
-    p: int,
-    horizon: int,
-    alpha: float = 0.3,
-    beta: float = 0.1,
-    gamma: float = 0.2,
-    series_col: str = "series",
-    t_col: str = "t",
-    value_col: str = "v",
-) -> DataFrame:
-    """Additive Holt-Winters (triple exponential smoothing, Winters
-    1960) per series, forecast ``horizon`` steps ahead: the classic
-    level/trend/seasonal recurrence
-
-        L_t = a*(v_t - S_{t-p}) + (1-a)*(L_{t-1} + B_{t-1})
-        B_t = b*(L_t - L_{t-1}) + (1-b)*B_{t-1}
-        S_t = g*(v_t - L_t) + (1-g)*S_{t-p}
-
-    seeded by the simple two-season init (L0 = mean of season one,
-    B0 = (mean of season two - mean of season one)/p, S_i = v_i - L0)
-    and read out as yhat(h) = L_n + h*B_n + S at phase (n-1+h) mod p.
-    Input is dense long-form ``(series, t 0..n-1, v)``; series shorter
-    than 2p are dropped (not enough data to seed). Output:
-    ``(series, h, yhat, level, trend)``, one row per horizon step.
-
-    Like ts_dtw_shape_distance, the strictly-sequential recurrence runs
-    as ONE SQL aggregate() fold inside whole-stage codegen — the
-    accumulator is (level, trend, seasonal ring of p doubles); no UDF,
-    no Python, no shuffle beyond the per-series collect. Cross-engine
-    exactness: keep ``value_col`` INTEGRAL (the init means are then
-    exact), smoothing constants are injected as repr literals parsed
-    identically by both engines, and the oracle's recursive CTE
-    executes the same operation order, so outputs match bit-exactly
-    before the final rounding.
-
-    Scale contract: one keyed shuffle to assemble each series (the
-    per-series array is series-length-bounded — this is a per-entity
-    forecaster, not a corpus-length one), then O(n) fold work per
-    series with no further exchange; a million entities = a million
-    independent constant-size rows.
-    """
-    if p < 2:
-        raise ValueError(f"holt_winters_additive: period p must be >= 2, got {p}")
-    if horizon < 1:
-        raise ValueError(
-            f"holt_winters_additive: horizon must be >= 1, got {horizon}"
-        )
-    for nm, x in (("alpha", alpha), ("beta", beta), ("gamma", gamma)):
-        if not 0.0 < x < 1.0:
-            raise ValueError(f"holt_winters_additive: {nm} must be in (0,1), got {x}")
-
-    al, be, ga = repr(float(alpha)), repr(float(beta)), repr(float(gamma))
-    oma, omb, omg = (
-        repr(1.0 - float(alpha)),
-        repr(1.0 - float(beta)),
-        repr(1.0 - float(gamma)),
-    )
-    arrs = (
-        df.select(
-            F.col(series_col).alias("_s"),
-            F.col(t_col).cast("long").alias("_t"),
-            F.col(value_col).cast("double").alias("_x"),
-        )
-        .groupBy("_s")
-        .agg(F.array_sort(F.collect_list(F.struct("_t", "_x")))._x.alias("_v"))
-        .filter(F.size("_v") >= 2 * p)
-    )
-    pd_ = f"cast({p} as double)"
-    init = arrs.select(
-        "_s",
-        "_v",
-        F.expr(
-            f"aggregate(slice(_v, 1, {p}), cast(0.0 as double), (a, x) -> a + x)"
-            f" / {pd_}"
-        ).alias("_l0"),
-    ).select(
-        "_s",
-        "_v",
-        "_l0",
-        F.expr(
-            f"(aggregate(slice(_v, {p + 1}, {p}), cast(0.0 as double),"
-            f" (a, x) -> a + x) / {pd_} - _l0) / {pd_}"
-        ).alias("_b0"),
-        F.expr(f"transform(slice(_v, 1, {p}), x -> x - _l0)").alias("_ss0"),
-    )
-    # L_t appears (textually) three times in the step -- SQL lambdas
-    # can't bind intermediates -- but an identical expression tree
-    # yields the identical double, so this matches the oracle's
-    # bound-once form exactly
-    lnew = (
-        f"({al} * (element_at(_v, t + 1) - element_at(acc.ss, (t % {p}) + 1))"
-        f" + {oma} * (acc.lv + acc.tr))"
-    )
-    fold = f"""
-aggregate(
-  sequence({p}, size(_v) - 1),
-  named_struct('lv', _l0, 'tr', _b0, 'ss', _ss0),
-  (acc, t) -> named_struct(
-    'lv', {lnew},
-    'tr', {be} * ({lnew} - acc.lv) + {omb} * acc.tr,
-    'ss', concat(
-      slice(acc.ss, 1, t % {p}),
-      array({ga} * (element_at(_v, t + 1) - {lnew})
-            + {omg} * element_at(acc.ss, (t % {p}) + 1)),
-      slice(acc.ss, (t % {p}) + 2, {p}))
-  )
-)
-"""
-    fin = init.withColumn("_hw", F.expr(fold))
-    return (
-        fin.select(
-            "_s",
-            F.col("_hw.lv").alias("_lv"),
-            F.col("_hw.tr").alias("_tr"),
-            F.col("_hw.ss").alias("_ss"),
-            F.size("_v").alias("_n"),
-            F.explode(F.sequence(F.lit(1), F.lit(horizon))).alias("h"),
-        )
-        .select(
-            F.col("_s").alias(series_col),
-            F.col("h").cast("int").alias("h"),
-            (
-                F.col("_lv")
-                + F.col("h").cast("double") * F.col("_tr")
-                + F.expr(f"element_at(_ss, ((_n - 1 + h) % {p}) + 1)")
-            ).alias("yhat"),
-            F.col("_lv").alias("level"),
-            F.col("_tr").alias("trend"),
-        )
-    )
-
-
-def pattern_search(
-    series: DataFrame,
-    query: DataFrame,
-    m: int,
-    series_col: str = "series",
-    t_col: str = "t",
-    value_col: str = "v",
-    q_t_col: str = "qt",
-    q_value_col: str = "qv",
-    top_k: int | None = None,
-    round_dp: int | None = None,
-) -> DataFrame:
-    """Z-normalized subsequence search (the MASS readout, Mueen et al.
-    2015): the distance of EVERY length-``m`` window of every series to
-    ONE shared query pattern — "where does this shape occur?", the
-    query-driven sibling of ``matrix_profile`` (same z-norm distance,
-    same zero-variance conventions: both flat -> 0, exactly one flat ->
-    sqrt(m)). ``query`` is dense long-form ``(q_t_col 0..m-1,
-    q_value_col)``; windows are ranked per series by (distance, t) when
-    ``top_k`` is set, else all windows return. Output:
-    ``(series, t, dist[, rank])``.
-
-    Construction: QT(i) = sum_k T[i+k]*Q[k] comes from ONE
-    broadcast-join of the series against the m-row query (product rows
-    keyed by window start i = t - k), one (series, i) rollup — O(n*m)
-    work, map-side combined, no window function on the product stream.
-    Window stats are the same sliding integer sums as matrix_profile;
-    query stats are a broadcast 1-row aggregate. Keep values INTEGRAL
-    for the cross-engine exactness contract.
-
-    Scale contract: everything is one pass over the series table plus
-    an m-row broadcast — no self-join, no quadratic term; the top-k cut
-    is a per-series window over n-m+1 rows (series-length-bounded).
-    """
-    if m < 2:
-        raise ValueError(f"pattern_search: window m must be >= 2, got {m}")
-    if top_k is not None and top_k < 1:
-        raise ValueError(f"pattern_search: top_k must be >= 1, got {top_k}")
-
-    fm = float(m)
-    s = series.select(
-        F.col(series_col).alias("_s"),
-        F.col(t_col).cast("long").alias("_t"),
-        F.col(value_col).alias("_x"),
-    )
-    q = query.select(
-        F.col(q_t_col).cast("long").alias("_k"),
-        F.col(q_value_col).alias("_q"),
-    )
-    # checked, not assumed (1-row bounded guard; collect_lint whitelist):
-    # a query with MORE than m rows would otherwise score tail-boundary
-    # windows against a products-count coincidence (pc == m met by the
-    # wrong m products), and duplicate/missing q_t indexes would
-    # double-count or drop products silently
-    chk = q.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct("_k").alias("nd"),
-        F.min("_k").alias("lo"),
-        F.max("_k").alias("hi"),
-    ).collect()[0]
-    if not (chk.n == m and chk.nd == m and chk.lo == 0 and chk.hi == m - 1):
-        raise ValueError(
-            "pattern_search: query must be dense 0..m-1 with exactly "
-            f"m={m} rows (got n={chk.n}, distinct={chk.nd}, "
-            f"range=[{chk.lo}, {chk.hi}])"
-        )
-    qstats = q.agg(
-        F.sum("_q").alias("_qs"),
-        F.sum(F.col("_q") * F.col("_q")).alias("_qq"),
-    )
-    qmu = F.col("_qs").cast("double") / F.lit(fm)
-    qsig = F.sqrt(
-        F.greatest(F.col("_qq").cast("double") / F.lit(fm) - qmu * qmu, F.lit(0.0))
-    )
-
-    ws = Window.partitionBy("_s").orderBy("_t").rowsBetween(0, m - 1)
-    stats = (
-        s.select(
-            "_s",
-            "_t",
-            F.sum("_x").over(ws).alias("_sm"),
-            F.sum(F.col("_x") * F.col("_x")).over(ws).alias("_sq"),
-            F.count(F.lit(1)).over(ws).alias("_c"),
-        )
-        .filter(F.col("_c") == m)
-        .drop("_c")
-    )
-    mu = F.col("_sm").cast("double") / F.lit(fm)
-    sig = F.sqrt(
-        F.greatest(F.col("_sq").cast("double") / F.lit(fm) - mu * mu, F.lit(0.0))
-    )
-
-    prods = (
-        s.join(F.broadcast(q))
-        .select("_s", (F.col("_t") - F.col("_k")).alias("_i"), (F.col("_x") * F.col("_q")).alias("_p"))
-        .filter(F.col("_i") >= 0)
-        .groupBy("_s", "_i")
-        .agg(F.sum("_p").alias("_qt"), F.count(F.lit(1)).alias("_pc"))
-        .filter(F.col("_pc") == m)
-    )
-    joined = (
-        prods.join(
-            stats.select("_s", F.col("_t").alias("_i"), mu.alias("_mu"), sig.alias("_sig")),
-            ["_s", "_i"],
-        )
-        .crossJoin(F.broadcast(qstats.select(qmu.alias("_qmu"), qsig.alias("_qsig"))))
-    )
-    corr = (
-        F.col("_qt").cast("double") - F.lit(fm) * F.col("_mu") * F.col("_qmu")
-    ) / (F.lit(fm) * F.col("_sig") * F.col("_qsig"))
-    corr_c = F.least(F.lit(1.0), F.greatest(F.lit(-1.0), corr))
-    dist = (
-        F.when((F.col("_sig") == 0) & (F.col("_qsig") == 0), F.lit(0.0))
-        .when((F.col("_sig") == 0) | (F.col("_qsig") == 0), F.sqrt(F.lit(fm)))
-        .otherwise(F.sqrt(F.lit(2.0) * F.lit(fm) * (F.lit(1.0) - corr_c)))
-    )
-    if round_dp is not None:
-        dist = F.round(dist, round_dp)
-    out = joined.select(
-        F.col("_s").alias(series_col), F.col("_i").alias("t"), dist.alias("dist")
-    )
-    if top_k is None:
-        return out
-    wr = Window.partitionBy(series_col).orderBy("dist", "t")
-    return (
-        out.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= top_k)
-        .select(series_col, "t", "dist", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def matrix_profile_ab(
-    series: DataFrame,
-    m: int,
-    max_diag: int | None = None,
-    series_col: str = "series",
-    t_col: str = "t",
-    value_col: str = "v",
-    round_dp: int | None = None,
-) -> DataFrame:
-    """Matrix-profile AB-join across series (Yeh et al., ICDM'16 §AB):
-    for every UNORDERED pair of distinct series in the frame, the
-    minimal z-normalized distance between any length-``m`` window of
-    one and any window of the other, plus the aligned window starts —
-    "which streams share a shape, and exactly where". Same distance and
-    zero-variance conventions as ``matrix_profile`` (no exclusion zone:
-    cross-series matches are never trivial). Output:
-    ``(series_a, series_b, t_a, t_b, dist)`` with series_a < series_b
-    and ties broken on (dist, t_a, t_b) after ``round_dp`` rounding.
-
-    Construction: for ORDERED pairs (A, B) and non-negative lags
-    d = j - i, QT(i, i+d) is the length-m sliding sum of the product
-    series A[t]*B[t+d] — one equi-join of the frame against itself on
-    the series-pair inequality plus lag bounds, one
-    (A, B, d)-partitioned window; the two orientations of each
-    unordered pair cover negative lags by symmetry. Per-window stats
-    are computed ONCE per series and broadcast to both probe sides.
-
-    Scale contract: candidates are Theta(n^2/2) per ORDERED series
-    pair — series-length-bounded, diagonal-parallel, exactly the
-    ``matrix_profile`` story with the pair count as the second explicit
-    axis (callers bound which series land in the frame); ``max_diag``
-    caps the |lag| between aligned windows and bounds candidates at
-    O(n * max_diag) per pair via the same bucketed band join as the
-    self-join valve.
-    """
-    if m < 2:
-        raise ValueError(f"matrix_profile_ab: window m must be >= 2, got {m}")
-    if max_diag is not None and max_diag < 0:
-        raise ValueError(
-            f"matrix_profile_ab: max_diag must be >= 0, got {max_diag}"
-        )
-
-    fm = float(m)
-    s = series.select(
-        F.col(series_col).alias("_s"),
-        F.col(t_col).cast("long").alias("_t"),
-        F.col(value_col).alias("_v"),
-    )
-    s = persist_once(s)
-
-    ws = Window.partitionBy("_s").orderBy("_t").rowsBetween(0, m - 1)
-    stats0 = s.select(
-        "_s",
-        "_t",
-        F.sum("_v").over(ws).alias("_sm"),
-        F.sum(F.col("_v") * F.col("_v")).over(ws).alias("_sq"),
-        F.count(F.lit(1)).over(ws).alias("_c"),
-    ).filter(F.col("_c") == m)
-    mu = F.col("_sm").cast("double") / F.lit(fm)
-    sig = F.sqrt(
-        F.greatest(F.col("_sq").cast("double") / F.lit(fm) - mu * mu, F.lit(0.0))
-    )
-    stats = stats0.select("_s", "_t", mu.alias("_mu"), sig.alias("_sig"))
-
-    if max_diag is None:
-        b2 = s.select(
-            F.col("_s").alias("_bs"), F.col("_t").alias("_bt"), F.col("_v").alias("_bv")
-        )
-        lag = F.col("_bt") - F.col("_t")
-        paired = s.join(b2, (F.col("_s") != F.col("_bs")) & (lag >= 0))
-    else:
-        w_ = max(int(max_diag), 1)
-        a2 = s.select(
-            "_s",
-            "_t",
-            "_v",
-            F.explode(
-                F.array(F.expr(f"_t div {w_}"), F.expr(f"_t div {w_} + 1"))
-            ).alias("_jbk"),
-        )
-        b2 = s.select(
-            F.col("_s").alias("_bs"),
-            F.col("_t").alias("_bt"),
-            F.col("_v").alias("_bv"),
-            F.expr(f"_t div {w_}").alias("_bbk"),
-        )
-        lag = F.col("_bt") - F.col("_t")
-        paired = a2.join(
-            b2,
-            (F.col("_s") != F.col("_bs")) & (F.col("_jbk") == F.col("_bbk")),
-        ).filter((lag >= 0) & (lag <= max_diag))
-    prods = paired.select(
-        "_s",
-        "_bs",
-        lag.alias("_d"),
-        "_t",
-        (F.col("_v") * F.col("_bv")).alias("_p"),
-    )
-
-    wq = Window.partitionBy("_s", "_bs", "_d").orderBy("_t").rowsBetween(0, m - 1)
-    qt = (
-        prods.select(
-            "_s",
-            "_bs",
-            "_d",
-            "_t",
-            F.sum("_p").over(wq).alias("_qt"),
-            F.count(F.lit(1)).over(wq).alias("_c"),
-        )
-        .filter(F.col("_c") == m)
-        .drop("_c")
-    )
-    si = stats.select(
-        F.col("_s").alias("_si_s"), F.col("_t").alias("_si_t"),
-        F.col("_mu").alias("_mu_i"), F.col("_sig").alias("_sig_i"),
-    )
-    sj = stats.select(
-        F.col("_s").alias("_sj_s"), F.col("_t").alias("_sj_t"),
-        F.col("_mu").alias("_mu_j"), F.col("_sig").alias("_sig_j"),
-    )
-    joined = qt.join(
-        F.broadcast(si),
-        (F.col("_s") == F.col("_si_s")) & (F.col("_t") == F.col("_si_t")),
-    ).join(
-        F.broadcast(sj),
-        (F.col("_bs") == F.col("_sj_s"))
-        & ((F.col("_t") + F.col("_d")) == F.col("_sj_t")),
-    )
-    corr = (
-        F.col("_qt").cast("double") - F.lit(fm) * F.col("_mu_i") * F.col("_mu_j")
-    ) / (F.lit(fm) * F.col("_sig_i") * F.col("_sig_j"))
-    corr_c = F.least(F.lit(1.0), F.greatest(F.lit(-1.0), corr))
-    dist = (
-        F.when((F.col("_sig_i") == 0) & (F.col("_sig_j") == 0), F.lit(0.0))
-        .when((F.col("_sig_i") == 0) | (F.col("_sig_j") == 0), F.sqrt(F.lit(fm)))
-        .otherwise(F.sqrt(F.lit(2.0) * F.lit(fm) * (F.lit(1.0) - corr_c)))
-    )
-    if round_dp is not None:
-        dist = F.round(dist, round_dp)
-    # normalize each orientation to (lo, hi) with the window starts
-    # following their series; the groupBy min then folds the two
-    # orientations of every unordered pair (negative lags by symmetry)
-    lo_first = F.col("_s") < F.col("_bs")
-    edges = joined.select(
-        F.when(lo_first, F.col("_s")).otherwise(F.col("_bs")).alias("_pa"),
-        F.when(lo_first, F.col("_bs")).otherwise(F.col("_s")).alias("_pb"),
-        F.when(lo_first, F.col("_t")).otherwise(F.col("_t") + F.col("_d")).alias("_ta"),
-        F.when(lo_first, F.col("_t") + F.col("_d")).otherwise(F.col("_t")).alias("_tb"),
-        dist.alias("_dist"),
-    )
-    best = edges.groupBy("_pa", "_pb").agg(
-        F.min(F.struct(F.col("_dist"), F.col("_ta"), F.col("_tb"))).alias("_m")
-    )
-    return best.select(
-        F.col("_pa").alias("series_a"),
-        F.col("_pb").alias("series_b"),
-        F.col("_m._ta").alias("t_a"),
-        F.col("_m._tb").alias("t_b"),
-        F.col("_m._dist").alias("dist"),
-    )

@@ -115,14 +115,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     return {name: load_table(spark, sf_dir, name) for name in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
-    """Register each table as a temp view (for the SQL surface)."""
-    dfs = load_tables(spark, sf_dir, names)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 def register_duck_views(con, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> None:
     """Register every driver table as a DuckDB view over its parquet --
     the one shared definition of the oracle-side table surface (used by

@@ -1325,227 +1325,6 @@ def test_bloom_no_false_negatives_and_join_equivalence(spark):
             bloom_prefiltered_join(probe, build, ["k"], how=bad)
 
 
-def test_ivf_pq_topk_rejects_indivisible_dim(spark):
-    """r12 ADVICE fix: dim % m != 0 must raise (checked, not assumed --
-    the hamming_join contract style) instead of silently dropping the
-    trailing dim % m components from training and ADC distances."""
-    import pytest as _pytest
-
-    from testlog_etl_spark.operators.similarity import ivf_pq_topk
-
-    df = spark.createDataFrame(
-        [(1, [0.0] * 63)], "c_id bigint, c_vec array<double>"
-    )
-    q = spark.createDataFrame([(1, [0.0] * 63)], "q_id bigint, q_vec array<double>")
-    with _pytest.raises(ValueError, match="not divisible"):
-        ivf_pq_topk(q, df, dim=63, k=1, m=4)
-
-
-@pytest.mark.slow
-def test_ivf_pq_topk_matches_numpy_replay(spark, sf_dir):
-    """r11 (NOTES.md parked tier, unregistered until r13): IVF-PQ
-    composition against a full numpy replay of the same deterministic
-    codebooks -- coarse probes, fine codes, ADC tables, rounded ranking.
-    With nprobe == k_coarse the coarse filter is a no-op and the result
-    must equal the pure-ADC ranking; with nprobe=2 it must equal the
-    probe-filtered ranking -- both derived independently in numpy from
-    kmeans_fit's centroids (assignment/tie rules re-implemented, not
-    reused)."""
-    import math
-
-    import numpy as np
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-
-    rows = sorted((r["c_id"], np.array(r["c_vec"], dtype=np.float64)) for r in corpus.collect())
-    ids = np.array([i for i, _ in rows])
-    V = np.stack([v for _, v in rows])
-    dim, m, k_cells, k_coarse, n_iter = 64, 4, 8, 8, 2
-    sd = dim // m
-
-    from testlog_etl_spark.operators.similarity import ivf_pq_topk, kmeans_fit
-
-    def assign(X, cents):
-        # _argmin_cell tie rule: smallest distance, then smallest cell id
-        C = np.stack([np.array(c, dtype=np.float64) for _, c in cents])
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        return d, d.argmin(axis=1)  # argmin takes the FIRST (smallest cell) on ties
-
-    coarse = kmeans_fit(corpus, "c_vec", k=k_coarse, n_iter=n_iter, id_col="c_id", centroid_quant_bits=20)
-    dcoarse, coarse_cell = assign(V, coarse)
-    books = []
-    for s in range(m):
-        sub = corpus.select(
-            "c_id", F.slice(F.col("c_vec").cast("array<double>"), 1 + sd * s, sd).alias("_sv")
-        )
-        books.append(kmeans_fit(sub, "_sv", k=k_cells, n_iter=n_iter, id_col="c_id", centroid_quant_bits=20))
-
-    def reference(nprobe, k):
-        out = {}
-        qmask = ids < 8
-        for qi in np.flatnonzero(qmask):
-            probe_cells = np.argsort(dcoarse[qi], kind="stable")[:nprobe]
-            cand = np.flatnonzero(np.isin(coarse_cell, probe_cells))
-            scores = []
-            for ci in cand:
-                if ids[ci] == ids[qi]:
-                    continue
-                adc = 0.0
-                for s in range(m):
-                    _, codes = assign(V[:, sd * s : sd * (s + 1)], books[s])
-                    C = np.array(books[s][codes[ci]][1])
-                    adc += float(((V[qi, sd * s : sd * (s + 1)] - C) ** 2).sum())
-                scores.append((round(adc, 6), int(ids[ci])))
-            scores.sort()
-            out[int(ids[qi])] = [(r + 1, c, a) for r, (a, c) in enumerate(scores[:k])]
-        return out
-
-    for nprobe in (k_coarse, 2):
-        got_df = ivf_pq_topk(queries, corpus, dim=dim, k=5, nprobe=nprobe,
-                             k_coarse=k_coarse, m=m, k_cells=k_cells, n_iter=n_iter)
-        got = {}
-        for r in got_df.collect():
-            got.setdefault(r["q_id"], []).append((r["rank"], r["c_id"], r["adc"]))
-        for q in got:
-            got[q].sort()
-        want = reference(nprobe, 5)
-        assert got == want, (nprobe, got, want)
-
-
-# _ivf_pq_oracle_sql moved to queries/r13_pack.py::ivf_pq_oracle_sql for
-# the r13 registration (r12); imported back here so this differential
-# keeps guarding the operator against the SAME oracle text the
-# registration will carry.
-from testlog_etl_spark.queries.r13_pack import ivf_pq_oracle_sql as _ivf_pq_oracle_sql
-
-
-@pytest.mark.slow
-def test_ivf_pq_topk_matches_duckdb_replay(spark, sf_dir):
-    """Cross-engine differential for the unregistered IVF-PQ tier: the
-    composed DuckDB replay (coarse kmeans + probes, per-subspace
-    codebooks, candidate-filtered ADC) must reproduce ivf_pq_topk
-    exactly -- the r13 registration oracle, validated early."""
-    import duckdb
-
-    from testlog_etl_spark.operators.similarity import ivf_pq_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    got_df = ivf_pq_topk(queries, corpus, dim=64, k=5, nprobe=2)
-    got = sorted(
-        (r["q_id"], r["rank"], r["c_id"], round(r["adc"], 6)) for r in got_df.collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
-    )
-    want = sorted(
-        (q, rk, c, round(a, 6)) for q, rk, c, a in con.execute(_ivf_pq_oracle_sql()).fetchall()
-    )
-    assert got == want
-
-
-def test_stratified_reservoir_matches_python_model_and_duckdb(spark):
-    """r11 (NOTES.md parked item): per-stratum-seeded reservoir — the
-    draw must equal an independent Python replay of the hash ranking,
-    and the DuckDB md5 idiom must produce the identical keys (the r13
-    oracle's engine-portability)."""
-    import hashlib
-
-    import duckdb
-
-    from testlog_etl_spark.operators.sampling import stratified_reservoir
-
-    rows = [(f"d{i}", ["news", "web", "code", None][i % 4]) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id string, source string")
-    seeds = {"news": "s1", "web": "s2"}
-
-    def lp(x):
-        # length-prefixed null-tagged component (r12 ADVICE fix): keys
-        # cannot alias across (id, stratum) boundaries and NULL is
-        # distinct from '' and from the string 'NULL'
-        return "-" if x is None else f"{len(x)}:{x}"
-
-    def key(doc, src, seed):
-        base = lp(doc) + lp(src) + lp(seed)
-        return int(hashlib.md5(base.encode()).hexdigest()[:15], 16)
-
-    def model(data, k):
-        by = {}
-        for doc, src in data:
-            sd = seeds.get(src, "0")
-            by.setdefault(src, []).append((key(doc, src, sd), doc))
-        out = {}
-        for src, lst in by.items():
-            lst.sort()
-            out[src] = [(doc, r + 1) for r, (_, doc) in enumerate(lst[:k])]
-        return out
-
-    got = {}
-    for r in stratified_reservoir(df, "source", "doc_id", k=3, seeds=seeds).collect():
-        got.setdefault(r["source"], []).append((r["doc_id"], r["draw_rank"]))
-    for src in got:
-        got[src].sort(key=lambda t: t[1])
-    assert got == model(rows, 3)
-
-    # merge-safety: bumping ONE stratum's seed leaves the others intact
-    got2 = {}
-    for r in stratified_reservoir(
-        df, "source", "doc_id", k=3, seeds={**seeds, "web": "s2-next"}
-    ).collect():
-        got2.setdefault(r["source"], []).append((r["doc_id"], r["draw_rank"]))
-    for src in got2:
-        got2[src].sort(key=lambda t: t[1])
-    assert got2["news"] == got["news"]
-    assert got2["code"] == got["code"]
-    assert got2[None] == got[None]
-
-    # adding a NEW stratum cannot perturb existing draws
-    got3 = {}
-    extra = [(f"x{i}", "books") for i in range(10)]
-    df3 = spark.createDataFrame(rows + extra, "doc_id string, source string")
-    for r in stratified_reservoir(df3, "source", "doc_id", k=3, seeds=seeds).collect():
-        got3.setdefault(r["source"], []).append((r["doc_id"], r["draw_rank"]))
-    for src in got3:
-        got3[src].sort(key=lambda t: t[1])
-    assert {s: v for s, v in got3.items() if s != "books"} == got
-    assert len(got3["books"]) == 3
-
-    # DuckDB twin: same keys from the registered samplers' md5 idiom
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t (doc_id VARCHAR, source VARCHAR)")
-    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
-    want = {}
-    for src, doc, rk in con.execute(
-        """
-        SELECT source, doc_id, rk FROM (
-          SELECT source, doc_id,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY source
-                   ORDER BY try_cast(('0x' || substr(md5(
-                     coalesce(length(doc_id)::VARCHAR || ':' || doc_id, '-')
-                     || coalesce(length(source)::VARCHAR || ':' || source, '-')
-                     || coalesce(length(sd)::VARCHAR || ':' || sd, '-')
-                   ), 1, 15)) AS BIGINT), doc_id) AS rk
-          FROM (SELECT *,
-                  CASE source WHEN 'news' THEN 's1' WHEN 'web' THEN 's2' ELSE '0' END AS sd
-                FROM t)
-        ) WHERE rk <= 3
-        """
-    ).fetchall():
-        want.setdefault(src, []).append((doc, rk))
-    for src in want:
-        want[src].sort(key=lambda t: t[1])
-    assert got == want
-
-
 def test_corpus_scale_profile_matches_signatures():
     """r12 (VERDICT r11 #2): CORPUS_SCALE_PROFILE must stay valid
     against the real operator signatures -- every profiled name is a
@@ -1567,32 +1346,8 @@ def test_corpus_scale_profile_matches_signatures():
             assert params[k].default != v, (name, k, "profile value must differ from default")
 
 
-@pytest.mark.slow
-def test_ivf_pq_train_once_books_equivalence(spark, sf_dir):
-    """r12: passing precomputed ivf_pq_train books must reproduce the
-    self-training path exactly -- the deployment form (train once on a
-    sample, reuse per query batch; SCALE.md r12 shows training is the
-    whole per-call constant)."""
-    from testlog_etl_spark.operators.similarity import ivf_pq_topk, ivf_pq_train
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    books = ivf_pq_train(corpus, dim=64)
-    a = sorted(
-        tuple(r)
-        for r in ivf_pq_topk(queries, corpus, dim=64, k=3, nprobe=2, books=books).collect()
-    )
-    b = sorted(
-        tuple(r) for r in ivf_pq_topk(queries, corpus, dim=64, k=3, nprobe=2).collect()
-    )
-    assert a == b and len(a) == 12
-
-
 def test_corpus_scale_profile_applies_end_to_end(spark):
-    """r12 (r14 NOTES item, pulled forward): turning on the dedup
+    """r12: turning on the dedup
     valves FROM THE PROFILE -- **CORPUS_SCALE_PROFILE[tier] -- must
     reproduce the hand-set valve behavior: boilerplate emits exactly
     the k-1 chain edges (profile ships chain_oversized=True for the

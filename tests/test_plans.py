@@ -6,8 +6,6 @@ correctness alone doesn't prove them."""
 
 from __future__ import annotations
 
-import pytest
-
 import contextlib
 import io
 
@@ -1010,207 +1008,6 @@ def test_jx_quantiles_never_use_buffering_percentile(spark):
         plan = _q(name)(spark, SF_SMALL)._jdf.queryExecution().optimizedPlan().toString()
         assert "percentile(" not in plan, name
         assert "median(" not in plan, name
-
-
-@pytest.mark.slow
-def test_ivf_pq_candidate_exchange_carries_no_vectors(spark):
-    """r11: ivf_pq_topk's whole point is that query time reads CODES --
-    the candidate equi-join must carry ids/cells only, with no
-    cartesian degeneration, and the only full-vector expressions in the
-    plan are the train-time/assignment projections (never under an
-    Exchange feeding the pair join)."""
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators.similarity import ivf_pq_topk
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    df = ivf_pq_topk(queries, corpus, dim=64, k=3, nprobe=2)
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    # the ADC pair join hashes on (q_id, _sub, _fcell) -- the code keys
-    assert "_fcell" in plan and "_sub" in plan
-    # no exchange partitions on (or carries) the embedding column: scan
-    # projections may read it, but every Exchange row is id/cell/dist
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "c_vec" not in line and "embedding" not in line, line
-
-
-def test_skyline_bucketed_merge_is_distributed(spark):
-    """r12: pareto_frontier_2d_bucketed must plan ONE hash exchange on
-    the bucket key for the data path (no coalesce(1) merge task), with
-    the cross-bucket running-ymax joining back as a BROADCAST -- the
-    shape that removes the frontier-sized single task. The span and
-    rollup sides are 1-row/n_buckets-row; the data never sorts
-    globally and never cartesian-joins."""
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators.skyline import pareto_frontier_2d_bucketed
-
-    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").select(
-        F.col("l_extendedprice").alias("x"), F.col("l_quantity").cast("double").alias("y")
-    )
-    df = pareto_frontier_2d_bucketed(li, "x", "y", n_buckets=16)
-    plan = plan_of(df)
-    low = plan.lower()
-    assert "coalesce" not in low
-    assert "cartesianproduct" not in low
-    # the 1-row span attaches via BroadcastNestedLoopJoin (the standard
-    # no-condition broadcast of a 1-row aggregate; timeseries does the
-    # same) -- what must NOT appear is a nested-loop over two data-scale
-    # sides, which CartesianProduct above would betray.
-    # the only non-broadcast exchange over the DATA is the bucket hash
-    assert "hashpartitioning(_bkt" in plan, plan
-    assert "BroadcastExchange" in plan  # prev-ymax and span ride broadcasts
-
-
-def test_dsir_bucket_table_broadcasts(spark):
-    """dsir_importance's B-row log-ratio table must BROADCAST onto the
-    exploded tokens (never a corpus-to-corpus shuffle join), and no
-    cartesian may appear; the only data-scale exchange is the doc-id
-    rollup's hash partitioning."""
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators import textstats
-    from testlog_etl_spark.operators.filtering import dsir_importance
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    df = dsir_importance(
-        docs, "doc_id", textstats.tokens(F.col("text")),
-        F.col("lang") == "en", n_buckets=64,
-    )
-    plan = plan_of(df)
-    low = plan.lower()
-    assert "cartesianproduct" not in low
-    assert "BroadcastExchange" in plan  # ratios + totals ride broadcasts
-    # the token->ratio join is broadcast hash on the bucket key
-    assert "broadcasthashjoin" in low
-    # doc rollup is partial-aggregated (map-side combine before shuffle)
-    assert low.count("hashaggregate") >= 2
-
-
-def test_query_likelihood_stats_broadcast_topk_take_ordered(spark):
-    """query_likelihood_topk: collection stats / cf / qconst ride
-    broadcasts (never a driver action), the top-k cut plans as
-    TakeOrderedAndProject (no global sort), no cartesian over two
-    data-scale sides."""
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators import textstats
-    from testlog_etl_spark.operators.postings import query_likelihood_topk
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    df = query_likelihood_topk(
-        docs, "doc_id", textstats.tokens(F.col("text")), ["spark", "dup"], k=10
-    )
-    plan = plan_of(df)
-    low = plan.lower()
-    assert "cartesianproduct" not in low
-    assert "BroadcastExchange" in plan
-    assert "takeorderedandproject" in low
-
-
-def test_matrix_profile_diagonal_axis_and_bounded_broadcasts(spark):
-    """ts_matrix_profile: the Theta(n^2) work must ride the (series,
-    diagonal) hash partitioning (the parallel axis), window stats must
-    broadcast onto it (series-length-bounded, never a data-scale
-    shuffle join), the one-directional edge set must be persisted so
-    the symmetric union doesn't re-run the diagonal pipeline, and no
-    cartesian over two unbounded sides may appear."""
-    from testlog_etl_spark.queries.r14_pack import ts_matrix_profile
-
-    df = ts_matrix_profile(spark, SF_SMALL)
-    plan = plan_of(df)
-    low = plan.lower()
-    assert "cartesianproduct" not in low
-    # diagonal-partitioned sliding-sum window: hash exchange on (_s, _d)
-    assert "hashpartitioning(_s" in low and "_d" in low, plan
-    # stats probes ride broadcast hash joins
-    assert "broadcasthashjoin" in low
-    # serie + edges persists surface as cache scans
-    assert "inmemorytablescan" in low
-    # argmin is an aggregate (partial-aggregable struct-min), not a
-    # row_number sort: at least one hashaggregate pair past the union
-    assert low.count("hashaggregate") >= 2
-
-
-def test_holt_winters_fold_is_jvm_side_no_cartesian(spark):
-    """ts_holt_winters_forecast: the recurrence must run as a SQL
-    aggregate() fold (no Python UDF in the plan), the per-series
-    assembly is an aggregate (ObjectHashAggregate for collect_list),
-    1-row span/min bounds ride broadcasts, and no cartesian over two
-    unbounded sides appears."""
-    from testlog_etl_spark.queries.r14_pack import ts_holt_winters_forecast
-
-    df = ts_holt_winters_forecast(spark, SF_SMALL)
-    plan = plan_of(df)
-    low = plan.lower()
-    assert "cartesianproduct" not in low
-    assert "batchevalpython" not in low and "arrowevalpython" not in low
-    assert "objecthashaggregate" in low  # collect_list assembly
-    assert "broadcastexchange" in low  # d0 / max-t 1-row bounds
-
-
-def test_pattern_search_broadcast_query_no_selfjoin(spark):
-    """ts_pattern_search: the query pattern rides a BROADCAST onto the
-    series (m-row side — never a data-scale shuffle join and no
-    quadratic self-join), the QT rollup partial-aggregates, and the
-    top-k cut is the only per-series window sort."""
-    from testlog_etl_spark.queries.r14_pack import ts_pattern_search
-
-    df = ts_pattern_search(spark, SF_SMALL)
-    plan = plan_of(df)
-    low = plan.lower()
-    assert "cartesianproduct" not in low
-    assert "broadcastexchange" in low
-    assert "batchevalpython" not in low and "arrowevalpython" not in low
-    assert low.count("hashaggregate") >= 2  # map-side combined QT rollup
-
-
-def test_matrix_profile_valve_is_equi_band_join(spark):
-    """With max_diag set, pair generation must be the bucketed BAND
-    join (equi-join on (series, bucket) with a 2x fan-out) — never a
-    nested-loop/cartesian whose predicate still enumerates all n^2
-    pairs per series."""
-    from testlog_etl_spark.operators.timeseries import matrix_profile
-
-    df = spark.createDataFrame(
-        [("s", t, t % 5) for t in range(60)], "series string, t long, v long"
-    )
-    plan = plan_of(matrix_profile(df, m=6, excl=3, max_diag=12, round_dp=6))
-    low = plan.lower()
-    assert "nestedloop" not in low and "cartesianproduct" not in low
-    assert "_jbk" in plan  # the bucket fan-out key reaches the join
-
-
-def test_matrix_profile_ab_pair_lag_axis(spark):
-    """ts_matrix_profile_ab full mode: the pair generator is the honest
-    all-lags cross product — BOTH sides are the series-length-bounded
-    serie cache (the Theta(n^2)-per-pair contract), never a corpus
-    table — and the sliding sums ride the (pair, lag) hash axis with
-    broadcast stats probes. The lag VALVE must plan as the equi band
-    join with no nested-loop/cartesian at all."""
-    from testlog_etl_spark.operators.timeseries import matrix_profile_ab
-    from testlog_etl_spark.queries.r14_pack import ts_matrix_profile_ab
-
-    plan = plan_of(ts_matrix_profile_ab(spark, SF_SMALL))
-    low = plan.lower()
-    assert "broadcasthashjoin" in low
-    assert "hashpartitioning(_s" in low and "_bs" in low  # (pair, lag) axis
-    assert "inmemorytablescan" in low  # serie cache feeds both cross sides
-
-    df = spark.createDataFrame(
-        [(f"s{k}", t, (t * (k + 2)) % 5) for k in range(2) for t in range(40)],
-        "series string, t long, v long",
-    )
-    vplan = plan_of(matrix_profile_ab(df, m=6, max_diag=10, round_dp=6))
-    vlow = vplan.lower()
-    assert "cartesianproduct" not in vlow and "nestedloop" not in vlow
-    assert "_jbk" in vplan  # bucket fan-out key reaches the equi join
 
 
 def test_idempotent_sink_dedupe_reuses_aggregate_exchange(spark):

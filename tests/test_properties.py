@@ -914,20 +914,19 @@ def test_minhash_chain_valve_keeps_duplicate_clusters_connected_fuzz(sizes, cap)
         assert len(roots) == 1, (sizes, cap, ci, pairs)
 
 
-# --- r11: cross-engine Unicode fold prototype (NOTES.md parked
-# "Unicode-normalization dedup tier"). Spark has no NFC intrinsic, so
+# --- r11: cross-engine Unicode fold prototype. Spark has no NFC intrinsic, so
 # the fold is an EXPLICIT translate map applied identically on both
 # engines: precomposed Latin letters -> ASCII base, combining marks
 # (U+0300-U+036F) -> deleted, A-Z -> a-z. translate is codepoint-wise
 # on both engines, so fold(NFC form) == fold(NFD form) by construction
-# -- the both-engine-identical fold the r13 dedup oracle needs.
+# -- a both-engine-identical fold a dedup oracle can share.
 #
 # Repertoire contract (found by this fuzz's first run): the NFC/NFD
 # invariant holds ONLY over the map's covered repertoire -- an
 # UNCOVERED precomposed char (hypothesis composed Z+U+0301 -> 'Ź')
 # stays unfolded in NFC form while its NFD form folds to the base
-# letter. Cross-engine equality is unconditional; the r13 dedup tier
-# must state its covered repertoire (or extend the map), so the fuzz
+# letter. Cross-engine equality is unconditional; a dedup tier on this
+# fold must state its covered repertoire (or extend the map), so the fuzz
 # alphabet below is the covered set plus combining marks whose
 # compositions stay inside it.
 
@@ -989,13 +988,12 @@ def test_unicode_fold_cross_engine_and_nfc_nfd_invariant_fuzz(texts):
         assert got[3 * i] == got[3 * i + 1], (texts[i], got[3 * i], got[3 * i + 1])
 
 
-# --- r11: scoped grapheme-length parity (NOTES.md parked "grapheme-
-# aware text length profile"). Over text WITHOUT ZWJ sequences,
+# --- r11: scoped grapheme-length parity. Over text WITHOUT ZWJ sequences,
 # regional indicators, or Hangul jamo, an extended grapheme cluster is
 # exactly a base codepoint plus its combining marks -- so the count is
 # JVM-side expressible with NO kernel: length after stripping
 # \p{Mn}\p{Me}. DuckDB's native length_grapheme must agree on that
-# repertoire; that pair is the r13 oracle. Second contract found by
+# repertoire; that pair is the cross-engine oracle. Second contract found by
 # this fuzz's first run: a LEADING mark run has no base to attach to
 # and forms one degenerate cluster of its own (UAX#29 GB9 only glues
 # marks to a PRECEDING char), hence the +1 start-of-string term.
@@ -1067,10 +1065,7 @@ def test_skyline_anticorrelated_frontier(m, extra):
     Dominated filler (x >= 0, y <= 0 is beaten by the diagonal's
     (0, m) corner... not necessarily -- the model decides) fuzzes the
     pruning around the diagonal."""
-    from testlog_etl_spark.operators.skyline import (
-        pareto_frontier_2d,
-        pareto_frontier_2d_bucketed,
-    )
+    from testlog_etl_spark.operators.skyline import pareto_frontier_2d
 
     spark = _spark()
     # perfect anti-correlation: (i, m - i) for i in 0..m-1 -- every
@@ -1091,277 +1086,3 @@ def test_skyline_anticorrelated_frontier(m, extra):
     ).repartition(5)
     got = sorted(r["id"] for r in pareto_frontier_2d(df, "x", "y").collect())
     assert got == want, (m, extra, got, want)
-    # the distributed-merge form must produce the IDENTICAL exact
-    # frontier, at several bucketings incl. degenerate (1 bucket) and
-    # more buckets than points
-    for nb in (1, 4, 1000):
-        got_b = sorted(
-            r["id"] for r in pareto_frontier_2d_bucketed(df, "x", "y", n_buckets=nb).collect()
-        )
-        assert got_b == want, (m, nb, extra, got_b, want)
-
-
-@pytest.mark.slow
-def test_ivf_pq_degenerate_codebooks_and_small_corpus():
-    """ivf_pq_topk edge cases ahead of the r13 registration: (a) an
-    all-identical corpus (every kmeans update collapses onto one point;
-    ADC distance ties everywhere -> id-order ranking), (b) a corpus
-    SMALLER than k_coarse/k_cells (codebooks seed from fewer rows than
-    k -- cells beyond the data are empty), (c) nprobe larger than the
-    number of non-empty cells. All must run and rank by (adc, id) with
-    no self-pairs and <= k rows per query."""
-    from testlog_etl_spark.operators.similarity import ivf_pq_topk
-
-    spark = _spark()
-
-    # (a) identical vectors: every pair's ADC estimate ties at 0
-    same = spark.createDataFrame(
-        [(i, [1.0] * 8) for i in range(6)], "c_id bigint, c_vec array<double>"
-    )
-    q = same.selectExpr("c_id as q_id", "c_vec as q_vec").filter("q_id < 2")
-    got = [
-        (r["q_id"], r["rank"], r["c_id"], r["adc"])
-        for r in ivf_pq_topk(q, same, dim=8, k=3, nprobe=2, k_coarse=4, m=2, k_cells=4)
-        .orderBy("q_id", "rank")
-        .collect()
-    ]
-    for qid in (0, 1):
-        mine = [t for t in got if t[0] == qid]
-        assert len(mine) == 3
-        # ties broken by id ascending, self excluded
-        expect_ids = [c for c in range(6) if c != qid][:3]
-        assert [t[2] for t in mine] == expect_ids, mine
-        assert all(t[3] == 0.0 for t in mine), mine
-
-    # (b)+(c): corpus smaller than k_coarse, nprobe > populated cells
-    tiny = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, [8.0, 8.0])],
-        "c_id bigint, c_vec array<double>",
-    )
-    qt = tiny.selectExpr("c_id as q_id", "c_vec as q_vec")
-    rows = [
-        (r["q_id"], r["rank"], r["c_id"])
-        for r in ivf_pq_topk(qt, tiny, dim=2, k=5, nprobe=8, k_coarse=8, m=1, k_cells=8)
-        .orderBy("q_id", "rank")
-        .collect()
-    ]
-    # nprobe == k_coarse-cap -> pure ADC over everything: each query
-    # sees BOTH other points, nearest (by codebook cell distance) first
-    by_q = {}
-    for qid, rk, cid in rows:
-        by_q.setdefault(qid, []).append(cid)
-        assert cid != qid
-    assert by_q[0] == [1, 2]  # 0 is nearer cell 1 than cell 8
-    assert by_q[2] == [1, 0]
-    assert set(by_q) == {0, 1, 2}
-
-
-_fold_alphabet = st.sampled_from(
-    list("aAzZ mM:|") + ["́", "̈", "İ", "ı", "ß", "ẞ", "İ", "𝔸", "한"]
-)
-_fold_texts = st.lists(
-    st.text(alphabet=_fold_alphabet, max_size=12), min_size=1, max_size=8
-)
-
-
-@pytest.mark.slow
-@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
-@given(_fold_texts)
-def test_unicode_fold_cross_engine_fuzz(texts):
-    """The dedup fold contract (queries/r13_pack.py::dedup_unicode_fold)
-    under ADVERSARIAL input: the fold is an explicit ASCII codepoint
-    map (translate A..Z -> a..z) + space-run collapse + trim, so its
-    md5 must be ENGINE-IDENTICAL on any Unicode string -- including the
-    exact codepoints where engine lower() diverges (U+0130 Turkish I,
-    ß/ẞ full-vs-simple case mapping, pinned r09), combining marks, and
-    astral-plane letters the fold must pass through untouched."""
-    import duckdb
-
-    spark = _spark()
-    UP = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-    LO = "abcdefghijklmnopqrstuvwxyz"
-    rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "i long, t string")
-    folded = F.trim(F.regexp_replace(F.translate("t", UP, LO), " +", " "))
-    got = {r["i"]: r["fp"] for r in df.select("i", F.md5(folded).alias("fp")).collect()}
-    con = duckdb.connect()
-    want = {
-        i: fp
-        for i, fp in con.execute(
-            f"""SELECT i, md5(trim(regexp_replace(translate(t, '{UP}', '{LO}'),
-                                                 ' +', ' ', 'g'))) AS fp
-               FROM (SELECT unnest(?) AS i, unnest(?) AS t)""",
-            [[r[0] for r in rows], [r[1] for r in rows]],
-        ).fetchall()
-    }
-    assert got == want, (texts, got, want)
-
-
-_rsv_tok = st.sampled_from(["a", "b", "1", ":", "::", "x:1", "", "2:x"])
-_rsv_rows = st.lists(
-    st.tuples(_rsv_tok, st.one_of(st.none(), _rsv_tok)), min_size=1, max_size=30
-)
-
-
-@pytest.mark.slow
-@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(_rsv_rows)
-def test_stratified_reservoir_key_encoding_fuzz(pairs):
-    """r12 ADVICE-fix fuzz: with ids/strata full of ':' and digits (the
-    exact aliasing ingredients), empty strings, and NULL strata, the
-    draw must equal a Python replay of the LENGTH-PREFIXED null-tagged
-    key -- any aliasing between (id, stratum) encodings or NULL-vs-''
-    conflation diverges immediately."""
-    import hashlib
-
-    from testlog_etl_spark.operators.sampling import stratified_reservoir
-
-    # ids must be unique for a deterministic model (ties break by id)
-    rows = [(f"{i}|{idv}", src) for i, (idv, src) in enumerate(pairs)]
-    spark = _spark()
-    df = spark.createDataFrame(rows, "doc_id string, src string")
-    seeds = {"a": "s1", ":": "s2"}
-
-    def lp(x):
-        return "-" if x is None else f"{len(x)}:{x}"
-
-    def key(doc, src):
-        sd = seeds.get(src, "0") if src is not None else "0"
-        return int(
-            hashlib.md5((lp(doc) + lp(src) + lp(sd)).encode()).hexdigest()[:15], 16
-        )
-
-    by = {}
-    for doc, src in rows:
-        by.setdefault(src, []).append((key(doc, src), doc))
-    want = {}
-    for src, lst in by.items():
-        lst.sort()
-        want[src] = [(doc, r + 1) for r, (_, doc) in enumerate(lst[:2])]
-
-    got = {}
-    for r in stratified_reservoir(df, "src", "doc_id", k=2, seeds=seeds).collect():
-        got.setdefault(r["src"], []).append((r["doc_id"], r["draw_rank"]))
-    for src in got:
-        got[src].sort(key=lambda t: t[1])
-    assert got == want, (rows, got, want)
-
-
-@pytest.mark.slow
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    st.lists(  # 1-2 series of small ints (small universe -> zero-variance
-        st.lists(st.integers(0, 4), min_size=10, max_size=26),  # windows and
-        min_size=1,                                             # rounded ties
-        max_size=2,
-    ),
-    st.integers(3, 5),          # m
-    st.integers(0, 2),          # excl
-    st.one_of(st.none(), st.integers(4, 9)),  # max_diag valve
-)
-def test_matrix_profile_matches_model_fuzz(serieses, m, excl, max_diag):
-    """matrix_profile == the O(n^2 m) textbook z-norm profile under any
-    (m, excl, max_diag) geometry and multiple series at once: per-window
-    min distance AND argmin with the rounded-dist/smaller-index tie rule;
-    series never cross-contaminate; a window appears iff it has an
-    admissible neighbor."""
-    import math as _math
-
-    from testlog_etl_spark.operators.timeseries import matrix_profile
-
-    if max_diag is not None and max_diag <= excl:
-        max_diag = excl + 1
-
-    def profile(v):
-        nw = len(v) - m + 1
-
-        def st_(w):
-            mu = sum(w) / m
-            return mu, _math.sqrt(max(sum(x * x for x in w) / m - mu * mu, 0.0))
-
-        def dist(i, j):
-            (mi, si), (mj, sj) = st_(v[i : i + m]), st_(v[j : j + m])
-            if si == 0 and sj == 0:
-                return 0.0
-            if si == 0 or sj == 0:
-                return _math.sqrt(m)
-            qt = sum(a * b for a, b in zip(v[i : i + m], v[j : j + m]))
-            corr = max(-1.0, min(1.0, (qt - m * mi * mj) / (m * si * sj)))
-            return _math.sqrt(2 * m * (1 - corr))
-
-        out = {}
-        for i in range(nw):
-            cands = [
-                (round(dist(i, j), 6), j)
-                for j in range(nw)
-                if abs(j - i) > excl
-                and (max_diag is None or abs(j - i) <= max_diag)
-            ]
-            if cands:
-                out[i] = min(cands)
-        return out
-
-    exp = {
-        (f"s{k}", i): best
-        for k, v in enumerate(serieses)
-        for i, best in profile(v).items()
-    }
-    rows = [
-        (f"s{k}", t, x)
-        for k, v in enumerate(serieses)
-        for t, x in enumerate(v)
-    ]
-    spark = _spark()
-    df = spark.createDataFrame(rows, "series string, t long, v long")
-    got = {
-        (r.series, r.t): (r.mp_dist, r.mp_index)
-        for r in matrix_profile(
-            df, m=m, excl=excl, max_diag=max_diag, round_dp=6
-        ).collect()
-    }
-    assert set(got) == set(exp)
-    for key, (d, j) in exp.items():
-        assert abs(got[key][0] - d) < 1e-9, (key, got[key], (d, j))
-        assert got[key][1] == j, (key, got[key], (d, j))
-
-
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    st.lists(st.integers(0, 50), min_size=14, max_size=30),
-    st.integers(2, 5),  # p
-    st.integers(1, 4),  # horizon
-    st.tuples(  # smoothing constants away from the (0,1) boundary
-        st.floats(0.05, 0.95), st.floats(0.05, 0.95), st.floats(0.05, 0.95)
-    ),
-)
-def test_holt_winters_matches_model_fuzz(v, p, h, consts):
-    """holt_winters_additive == the textbook recurrence for any period,
-    horizon, and smoothing constants; series shorter than 2p vanish."""
-    from testlog_etl_spark.operators.timeseries import holt_winters_additive
-
-    a, b, g = consts
-    spark = _spark()
-    df = spark.createDataFrame(
-        [("s", t, x) for t, x in enumerate(v)], "series string, t long, v long"
-    )
-    out = holt_winters_additive(
-        df, p=p, horizon=h, alpha=a, beta=b, gamma=g
-    ).collect()
-    if len(v) < 2 * p:
-        assert out == []
-        return
-
-    lv = sum(v[:p]) / p
-    tr = (sum(v[p : 2 * p]) / p - sum(v[:p]) / p) / p
-    ss = [x - lv for x in v[:p]]
-    for t in range(p, len(v)):
-        ph = t % p
-        lnew = a * (v[t] - ss[ph]) + (1.0 - a) * (lv + tr)
-        tr = b * (lnew - lv) + (1.0 - b) * tr
-        ss[ph] = g * (v[t] - lnew) + (1.0 - g) * ss[ph]
-        lv = lnew
-    got = {r.h: r.yhat for r in out}
-    assert set(got) == set(range(1, h + 1))
-    for k in range(1, h + 1):
-        exp = lv + k * tr + ss[(len(v) - 1 + k) % p]
-        assert abs(got[k] - exp) <= 1e-7 * max(1.0, abs(exp)), (k, got[k], exp)

@@ -1,62 +1,17 @@
-"""Differential gate for the UNREGISTERED r13 registration pack
-(queries/r13_pack.py): each parked operator's query wrapper must match
-its DuckDB oracle at the driver's sf=0.01 exactly — the same compare
-tests/test_differential.py applies to the frozen registry — so that
-r13's registration commit is mechanical and lands pre-verified.
-
-Also pins the freeze itself: none of the pack names may appear in
-suite.REGISTRY until the drain window completes (COVERAGE.md policy).
-"""
+"""The staged r13 registration pack is retired. Pins what its freeze
+guarded: the registry holds 526 cases, each defined in a query module
+that suite._load_all imports, so no staged module feeds the registry."""
 
 from __future__ import annotations
 
-import pytest
-
-from tests.conftest import SF_ORACLE, register_duck_views
-from tests.test_differential import _rowset
-
-
-# oracle cases over the driver's pytest budget (measured r13 durations);
-# the full battery (SPARK_JX_FULL_TESTS=1) still runs them
-_SLOW_PACK = {"stream_watermark_lag_audit", "sim_ivf_pq_topk"}
-
-
-def _pack():
-    from testlog_etl_spark.queries.r13_pack import R13_PACK
-
-    return [
-        pytest.param(n, e, marks=pytest.mark.slow) if n in _SLOW_PACK else (n, e)
-        for n, e in sorted(R13_PACK.items())
-    ]
+from tests.test_smoke import loaded_query_modules
 
 
 def test_pack_is_not_registered():
     from testlog_etl_spark import suite
-    from testlog_etl_spark.queries.r13_pack import R13_PACK
 
     suite.queries()  # force full load
-    leaked = sorted(set(R13_PACK) & set(suite.REGISTRY))
-    assert not leaked, f"registry frozen at 526 through r12; leaked: {leaked}"
+    allowed = {f"testlog_etl_spark.queries.{m}" for m in loaded_query_modules()}
+    stray = sorted({c.fn.__module__ for c in suite.REGISTRY.values()} - allowed)
+    assert not stray, f"cases registered from modules outside _load_all: {stray}"
     assert len(suite.REGISTRY) == 526
-
-
-@pytest.mark.parametrize("name,entry", _pack(), ids=lambda x: x if isinstance(x, str) else "")
-def test_pack_matches_oracle(name, entry, spark, duck):
-    fn, oracle, _doc = entry
-    register_duck_views(duck, SF_ORACLE)
-
-    sdf = fn(spark, SF_ORACLE)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-
-    rel = duck.execute(oracle)
-    d_cols = [d[0] for d in rel.description]
-    d_rows = rel.fetchall()
-
-    assert sorted(s_cols) == sorted(d_cols), f"{name}: column names differ"
-    assert len(s_rows) == len(d_rows), f"{name}: rows {len(s_rows)} != {len(d_rows)}"
-    s_set = _rowset(s_cols, s_rows)
-    d_set = _rowset(d_cols, d_rows)
-    if s_set != d_set:
-        diffs = [(a, b) for a, b in zip(s_set, d_set) if a != b][:5]
-        pytest.fail(f"{name}: value mismatch; first diffs (spark, duck): {diffs}")

@@ -1,825 +1,19 @@
-"""Differential gate for the UNREGISTERED r14 registration pack
-(queries/r14_pack.py): each new operator's query wrapper must match its
-DuckDB oracle at the driver's sf=0.01 exactly — the same compare
-tests/test_differential.py applies to the frozen registry — so the
-eventual registration commit is mechanical and lands pre-verified.
-
-Also pins the freeze itself (registry stays 526 with neither pack
-registered) and unit-pins the two new operators against pure-Python
-replays: Dirichlet query-likelihood scores and DSIR importance weights
-recomputed from first principles on collected token bags.
-"""
+"""The staged r14 registration pack is retired. Pins what its freeze
+guarded: importing every module of the queries package, listed in
+suite._load_all or not, registers nothing past the 526 cases."""
 
 from __future__ import annotations
 
-import math
-
-import pytest
-
-from tests.conftest import SF_ORACLE, register_duck_views
-from tests.test_differential import _rowset
-
-
-# oracle cases over the driver's pytest budget (measured r13 durations);
-# the full battery (SPARK_JX_FULL_TESTS=1) still runs them
-_SLOW_PACK = {
-    "ts_matrix_profile",
-    "ts_matrix_profile_ab",
-    "multimodal_ahash_dedup",
-    "corpus_dsir_importance",
-}
-
-
-def _pack():
-    from testlog_etl_spark.queries.r14_pack import R14_PACK
-
-    return [
-        pytest.param(n, e, marks=pytest.mark.slow) if n in _SLOW_PACK else (n, e)
-        for n, e in sorted(R14_PACK.items())
-    ]
+import importlib
+import pathlib
 
 
 def test_pack_is_not_registered():
-    from testlog_etl_spark import suite
-    from testlog_etl_spark.queries.r13_pack import R13_PACK
-    from testlog_etl_spark.queries.r14_pack import R14_PACK
+    from testlog_etl_spark import queries, suite
 
     suite.queries()  # force full load
-    leaked = sorted((set(R14_PACK) | set(R13_PACK)) & set(suite.REGISTRY))
-    assert not leaked, f"registry frozen at 526 through r12; leaked: {leaked}"
+    before = set(suite.REGISTRY)
+    for p in sorted(pathlib.Path(queries.__file__).parent.glob("[!_]*.py")):
+        importlib.import_module(f"testlog_etl_spark.queries.{p.stem}")
+    assert sorted(set(suite.REGISTRY) - before) == []
     assert len(suite.REGISTRY) == 526
-    assert not set(R14_PACK) & set(R13_PACK)
-
-
-@pytest.mark.parametrize("name,entry", _pack(), ids=lambda x: x if isinstance(x, str) else "")
-def test_pack_matches_oracle(name, entry, spark, duck):
-    fn, oracle, _doc = entry
-    register_duck_views(duck, SF_ORACLE)
-
-    sdf = fn(spark, SF_ORACLE)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-
-    rel = duck.execute(oracle)
-    d_cols = [d[0] for d in rel.description]
-    d_rows = rel.fetchall()
-
-    assert sorted(s_cols) == sorted(d_cols), f"{name}: column names differ"
-    assert len(s_rows) == len(d_rows), f"{name}: rows {len(s_rows)} != {len(d_rows)}"
-    s_set = _rowset(s_cols, s_rows)
-    d_set = _rowset(d_cols, d_rows)
-    if s_set != d_set:
-        diffs = [(a, b) for a, b in zip(s_set, d_set) if a != b][:5]
-        pytest.fail(f"{name}: value mismatch; first diffs (spark, duck): {diffs}")
-
-
-# ---------------------------------------------------------------------------
-# operator unit pins vs pure-Python replays
-# ---------------------------------------------------------------------------
-
-_CORPUS = [
-    (1, "the cat sat on the mat"),
-    (2, "the dog sat"),
-    (3, "cat dog cat"),
-    (4, "a lone document about nothing relevant"),
-    (5, "the the the the"),
-    (6, "dog mat dog mat cat"),
-]
-
-
-def test_query_likelihood_matches_python_replay(spark):
-    """query_likelihood_topk == the textbook Dirichlet QL score computed
-    directly (no hit-only decomposition) in Python, including the
-    effective-query drop of a zero-cf term."""
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators import textstats
-    from testlog_etl_spark.operators.postings import query_likelihood_topk
-
-    mu = 10.0
-    q = ["cat", "dog", "nosuchterm"]
-    docs = spark.createDataFrame(_CORPUS, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.score, r.n_terms, r.rank)
-        for r in query_likelihood_topk(
-            docs, "doc_id", textstats.tokens(F.col("text")), q, k=10, mu=mu
-        ).collect()
-    }
-
-    bags = {i: t.split() for i, t in _CORPUS}
-    coll = sum(len(b) for b in bags.values())
-    cf = {t: sum(b.count(t) for b in bags.values()) for t in q}
-    eff = [t for t in q if cf[t] > 0]
-    assert set(eff) == {"cat", "dog"}
-    exp = {}
-    for i, b in bags.items():
-        hits = [t for t in eff if t in b]
-        if not hits:
-            continue
-        score = sum(
-            math.log((b.count(t) + mu * cf[t] / coll) / (len(b) + mu)) for t in eff
-        )
-        exp[i] = (round(score, 4), len(hits))
-    assert set(got) == set(exp)
-    for i, (score, n_terms) in exp.items():
-        assert got[i][0] == pytest.approx(score, abs=1e-9), i
-        assert got[i][1] == n_terms, i
-    # ranks follow (score desc, doc_id) over the expected scores
-    order = sorted(exp, key=lambda i: (-exp[i][0], i))
-    for rank, i in enumerate(order, 1):
-        assert got[i][2] == rank
-
-
-def test_dsir_importance_matches_python_replay(spark):
-    """dsir_importance == the Laplace-smoothed hashed-unigram log-ratio
-    computed in Python from the SAME xxhash64 buckets (collected once
-    from Spark so the replay shares the hash)."""
-    from pyspark.sql import functions as F
-
-    from testlog_etl_spark.operators import textstats
-    from testlog_etl_spark.operators.filtering import dsir_importance
-
-    B = 16
-    docs = spark.createDataFrame(_CORPUS, "doc_id long, text string")
-    tgt = F.col("doc_id") <= 2  # docs 1-2 are the "target domain"
-    got = {
-        r.doc_id: (r.is_target, r.n_tokens, r.imp_weight, r.imp_per_token)
-        for r in dsir_importance(
-            docs, "doc_id", textstats.tokens(F.col("text")), tgt, n_buckets=B
-        ).collect()
-    }
-
-    vocab = sorted({t for _, txt in _CORPUS for t in txt.split()})
-    hrows = spark.createDataFrame([(t,) for t in vocab], "term string").select(
-        "term", F.pmod(F.xxhash64("term"), F.lit(B)).alias("bkt")
-    )
-    bkt = {r.term: r.bkt for r in hrows.collect()}
-
-    raw: dict[int, int] = {}
-    tgt_cnt: dict[int, int] = {}
-    for i, txt in _CORPUS:
-        for t in txt.split():
-            raw[bkt[t]] = raw.get(bkt[t], 0) + 1
-            if i <= 2:
-                tgt_cnt[bkt[t]] = tgt_cnt.get(bkt[t], 0) + 1
-    t_raw, t_tgt = sum(raw.values()), sum(tgt_cnt.values())
-    lr = {
-        b: math.log((tgt_cnt.get(b, 0) + 1) / (t_tgt + B))
-        - math.log((raw[b] + 1) / (t_raw + B))
-        for b in raw
-    }
-    for i, txt in _CORPUS:
-        toks = txt.split()
-        w = sum(lr[bkt[t]] for t in toks)
-        is_t, n, iw, ipt = got[i]
-        assert is_t == (i <= 2), i
-        assert n == len(toks), i
-        assert iw == pytest.approx(round(w, 4), abs=1e-9), i
-        assert ipt == pytest.approx(round(w / len(toks), 6), abs=1e-9), i
-
-
-def test_rbo_curve_matches_python_replay(spark, duck):
-    """The registered-shape RBO curve equals a direct Python RBO
-    computation over the same two rankings (prefix-set intersection per
-    depth, explicit geometric weights)."""
-    register_duck_views(duck, SF_ORACLE)
-    from testlog_etl_spark.queries.r14_pack import _RBO_D, _RBO_P, eval_rank_biased_overlap
-
-    rows = eval_rank_biased_overlap(spark, SF_ORACLE).collect()
-    assert len(rows) == _RBO_D
-
-    # independent rankings from DuckDB (same keys, same tie-breaks)
-    a = [
-        r[0]
-        for r in duck.execute(
-            "SELECT doc_id FROM documents ORDER BY strlen(text) DESC, doc_id LIMIT ?",
-            [_RBO_D],
-        ).fetchall()
-    ]
-    b = [
-        r[0]
-        for r in duck.execute(
-            "SELECT doc_id FROM documents ORDER BY "
-            "length(list_filter(string_split(trim(text), ' '), x -> x <> '')) DESC, doc_id "
-            "LIMIT ?",
-            [_RBO_D],
-        ).fetchall()
-    ]
-    rbo = 0.0
-    for r in rows:
-        d = r.depth
-        ov = len(set(a[:d]) & set(b[:d]))
-        agree = ov / d
-        rbo += (1 - _RBO_P) * _RBO_P ** (d - 1) * agree
-        assert r.overlap == ov, d
-        assert r.agreement == pytest.approx(round(agree, 6), abs=1e-9), d
-        assert r.rbo_prefix == pytest.approx(rbo, abs=2e-6), d
-    # RBO prefix is monotone nondecreasing and bounded by 1
-    vals = [r.rbo_prefix for r in rows]
-    assert all(x <= y + 1e-12 for x, y in zip(vals, vals[1:]))
-    assert vals[-1] <= 1.0 + 1e-12
-
-
-def test_rbo_curve_fuzz_random_rankings(spark):
-    """rbo_curve == the direct prefix-set-intersection RBO on random
-    ranking pairs, across depths, persistence values, and overlap
-    regimes (identical, disjoint, partial)."""
-    import random
-
-    from testlog_etl_spark.operators.rankeval import rbo_curve
-
-    rng = random.Random(5150)
-    for trial in range(6):
-        n_ids = rng.randint(1, 40)
-        depth = rng.randint(1, n_ids)
-        p = rng.choice([0.5, 0.9, 0.98])
-        ids = list(range(100, 100 + n_ids))
-        pa, pb = ids[:], ids[:]
-        rng.shuffle(pa)
-        rng.shuffle(pb)
-        if trial == 3:
-            pb = pa[:]  # identical rankings: curve must sit at agreement 1
-        if trial == 4:
-            pb = [i + 1000 for i in pa]  # disjoint ids: all-zero curve
-        a = spark.createDataFrame(
-            [(x, r + 1) for r, x in enumerate(pa[:depth])], "doc_id long, rank int"
-        )
-        b = spark.createDataFrame(
-            [(x, r + 1) for r, x in enumerate(pb[:depth])], "doc_id long, rank int"
-        )
-        rows = rbo_curve(a, b, "doc_id", depth=depth, p=p).orderBy("depth").collect()
-        assert len(rows) == depth
-        rbo = 0.0
-        for r in rows:
-            d = r.depth
-            ov = len(set(pa[:d]) & set(pb[:d]))
-            rbo += (1 - p) * p ** (d - 1) * (ov / d)
-            assert r.overlap == ov, (trial, d)
-            assert r.agreement == pytest.approx(ov / d, abs=1e-12), (trial, d)
-            assert r.rbo_prefix == pytest.approx(rbo, abs=1e-12), (trial, d)
-        if trial == 3:
-            assert all(r.agreement == 1.0 for r in rows)
-        if trial == 4:
-            assert all(r.overlap == 0 for r in rows)
-
-
-def test_rbo_curve_rejects_bad_params(spark):
-    from testlog_etl_spark.operators.rankeval import rbo_curve
-
-    df = spark.createDataFrame([(1, 1)], "doc_id long, rank int")
-    with pytest.raises(ValueError):
-        rbo_curve(df, df, "doc_id", depth=0)
-    with pytest.raises(ValueError):
-        rbo_curve(df, df, "doc_id", depth=5, p=1.0)
-
-
-def test_matrix_profile_matches_bruteforce(spark):
-    """matrix_profile == the O(n^2 m) textbook z-norm profile computed
-    directly in Python, including both zero-variance conventions (a
-    constant stretch is planted) and the rounded-distance/smaller-index
-    tie rule; the max_diag valve never beats the global minimum."""
-    import random
-
-    from testlog_etl_spark.operators.timeseries import matrix_profile
-
-    rng = random.Random(42)
-    n, m, excl = 40, 6, 3
-    v = [rng.randint(0, 5) for _ in range(n)]
-    for i in range(12, 20):
-        v[i] = 3  # constant stretch -> sig=0 windows
-
-    def znorm_dist(i, j):
-        wi, wj = v[i : i + m], v[j : j + m]
-
-        def st(w):
-            mu = sum(w) / m
-            return mu, math.sqrt(max(sum(x * x for x in w) / m - mu * mu, 0.0))
-
-        mi, si = st(wi)
-        mj, sj = st(wj)
-        if si == 0 and sj == 0:
-            return 0.0
-        if si == 0 or sj == 0:
-            return math.sqrt(m)
-        qt = sum(a * b for a, b in zip(wi, wj))
-        corr = max(-1.0, min(1.0, (qt - m * mi * mj) / (m * si * sj)))
-        return math.sqrt(2 * m * (1 - corr))
-
-    exp = {}
-    for i in range(n - m + 1):
-        cands = [
-            (round(znorm_dist(i, j), 6), j)
-            for j in range(n - m + 1)
-            if abs(j - i) > excl
-        ]
-        exp[i] = min(cands)
-
-    df = spark.createDataFrame(
-        [("s", t, x) for t, x in enumerate(v)], "series string, t long, v long"
-    )
-    got = {
-        r.t: (r.mp_dist, r.mp_index)
-        for r in matrix_profile(df, m=m, excl=excl, round_dp=6).collect()
-    }
-    assert set(got) == set(exp)
-    for i, (d, j) in exp.items():
-        assert got[i][0] == pytest.approx(d, abs=1e-9), i
-        assert got[i][1] == j, i
-
-    local = {
-        r.t: r.mp_dist
-        for r in matrix_profile(
-            df, m=m, excl=excl, max_diag=10, round_dp=6
-        ).collect()
-    }
-    assert set(local) == set(exp)
-    for i, d in local.items():
-        assert d >= exp[i][0] - 1e-9, i
-
-
-def test_matrix_profile_arg_guards():
-    from testlog_etl_spark.operators.timeseries import matrix_profile
-
-    with pytest.raises(ValueError):
-        matrix_profile(None, m=1)
-    with pytest.raises(ValueError):
-        matrix_profile(None, m=8, excl=-1)
-    with pytest.raises(ValueError):
-        matrix_profile(None, m=8, excl=4, max_diag=4)
-
-
-def test_holt_winters_matches_python_replay(spark):
-    """holt_winters_additive == the textbook additive HW recurrence run
-    directly in Python (same two-season init, same readout), on a
-    series with trend + weekly season + a short-series sibling that
-    must be DROPPED (n < 2p)."""
-    from testlog_etl_spark.operators.timeseries import holt_winters_additive
-
-    p, h, a, b, g = 7, 5, 0.3, 0.1, 0.2
-    season = [5, 1, 0, 2, 9, 4, 3]
-    v = [10 + 2 * t + season[t % p] + (t * 3) % 5 for t in range(23)]
-
-    lv = sum(v[:p]) / p
-    tr = (sum(v[p : 2 * p]) / p - sum(v[:p]) / p) / p
-    ss = [x - lv for x in v[:p]]
-    for t in range(p, len(v)):
-        ph = t % p
-        lnew = a * (v[t] - ss[ph]) + (1 - a) * (lv + tr)
-        tr = b * (lnew - lv) + (1 - b) * tr
-        ss[ph] = g * (v[t] - lnew) + (1 - g) * ss[ph]
-        lv = lnew
-    exp = {
-        k: lv + k * tr + ss[(len(v) - 1 + k) % p] for k in range(1, h + 1)
-    }
-
-    rows = [("long", t, x) for t, x in enumerate(v)] + [
-        ("short", t, 1) for t in range(2 * p - 1)
-    ]
-    df = spark.createDataFrame(rows, "series string, t long, v long")
-    out = holt_winters_additive(
-        df, p=p, horizon=h, alpha=a, beta=b, gamma=g
-    ).collect()
-    assert {r.series for r in out} == {"long"}  # short series dropped
-    got = {r.h: (r.yhat, r.level, r.trend) for r in out}
-    assert set(got) == set(exp)
-    for k, yhat in exp.items():
-        assert got[k][0] == pytest.approx(yhat, abs=1e-9), k
-        assert got[k][1] == pytest.approx(lv, abs=1e-9)
-        assert got[k][2] == pytest.approx(tr, abs=1e-9)
-
-
-def test_holt_winters_arg_guards():
-    from testlog_etl_spark.operators.timeseries import holt_winters_additive
-
-    for kwargs in (
-        dict(p=1, horizon=3),
-        dict(p=7, horizon=0),
-        dict(p=7, horizon=3, alpha=0.0),
-        dict(p=7, horizon=3, beta=1.0),
-        dict(p=7, horizon=3, gamma=-0.1),
-    ):
-        with pytest.raises(ValueError):
-            holt_winters_additive(None, **kwargs)
-
-
-def test_pattern_search_matches_bruteforce(spark):
-    """pattern_search == the direct z-norm sliding distance to the
-    query in Python, including zero-variance conventions and the
-    rounded-dist/smaller-t top-k tie rule."""
-    import random
-
-    from testlog_etl_spark.operators.timeseries import pattern_search
-
-    rng = random.Random(7)
-    n, m, k = 30, 5, 4
-    v = [rng.randint(0, 5) for _ in range(n)]
-    v[10:15] = [2, 2, 2, 2, 2]  # constant window -> sig=0 branch
-    qv = [1, 4, 0, 3, 2]
-
-    def st_(w):
-        mu = sum(w) / m
-        return mu, math.sqrt(max(sum(x * x for x in w) / m - mu * mu, 0.0))
-
-    qmu, qsig = st_(qv)
-    cands = []
-    for i in range(n - m + 1):
-        w = v[i : i + m]
-        mu, sig = st_(w)
-        if sig == 0 and qsig == 0:
-            d = 0.0
-        elif sig == 0 or qsig == 0:
-            d = math.sqrt(m)
-        else:
-            qt = sum(a * b for a, b in zip(w, qv))
-            corr = max(-1.0, min(1.0, (qt - m * mu * qmu) / (m * sig * qsig)))
-            d = math.sqrt(2 * m * (1 - corr))
-        cands.append((round(d, 6), i))
-    exp = sorted(cands)[:k]
-
-    sdf = spark.createDataFrame(
-        [("s", t, x) for t, x in enumerate(v)], "series string, t long, v long"
-    )
-    qdf = spark.createDataFrame(
-        list(enumerate(qv)), "qt long, qv long"
-    )
-    got = [
-        (r.dist, r.t, r.rank)
-        for r in pattern_search(
-            sdf, qdf, m=m, top_k=k, round_dp=6
-        ).orderBy("rank").collect()
-    ]
-    assert len(got) == k
-    for rank, ((ed, ei), (gd, gt, gr)) in enumerate(zip(exp, got), 1):
-        assert gr == rank
-        assert gt == ei, (rank, got, exp)
-        assert gd == pytest.approx(ed, abs=1e-9)
-
-    # no top_k -> every full window scored
-    full = pattern_search(sdf, qdf, m=m, round_dp=6).collect()
-    assert len(full) == n - m + 1
-
-
-def test_pattern_search_arg_guards():
-    from testlog_etl_spark.operators.timeseries import pattern_search
-
-    with pytest.raises(ValueError):
-        pattern_search(None, None, m=1)
-    with pytest.raises(ValueError):
-        pattern_search(None, None, m=5, top_k=0)
-
-
-def test_pattern_search_rejects_malformed_query(spark):
-    """The m-row dense-query contract is CHECKED: too-few rows,
-    too-many rows (which would otherwise mis-score tail windows via a
-    products-count coincidence), duplicate indexes, and offset ranges
-    all raise."""
-    from testlog_etl_spark.operators.timeseries import pattern_search
-
-    sdf = spark.createDataFrame(
-        [("s", t, t % 3) for t in range(12)], "series string, t long, v long"
-    )
-
-    def q(rows):
-        return spark.createDataFrame(rows, "qt long, qv long")
-
-    good = pattern_search(sdf, q([(0, 1), (1, 2), (2, 0)]), m=3).collect()
-    assert len(good) == 10
-    for rows in (
-        [(0, 1), (1, 2)],  # too few
-        [(0, 1), (1, 2), (2, 0), (3, 1)],  # too many
-        [(0, 1), (0, 2), (2, 0)],  # duplicate index
-        [(1, 1), (2, 2), (3, 0)],  # offset range
-    ):
-        with pytest.raises(ValueError, match="dense 0..m-1"):
-            pattern_search(sdf, q(rows), m=3)
-
-
-def test_matrix_profile_cross_engine_synthetic_differential(spark, duck):
-    """The cross-engine exactness claim on RANDOM data, not just the
-    fixed testdata: the operator and a generic DuckDB twin of its
-    construction must agree EXACTLY — rounded distance AND argmin
-    index (the tie rule) — over random multi-series integer inputs.
-    Fixed seed: any 6dp rounding-boundary divergence between the two
-    engines' double chains would surface here deterministically."""
-    import random
-
-    from testlog_etl_spark.operators.timeseries import matrix_profile
-
-    m, excl = 6, 3
-    rng = random.Random(123)
-    rows = []
-    for s in range(3):
-        n = rng.randint(25, 45)
-        vals = [rng.randint(0, 6) for _ in range(n)]
-        if s == 0:
-            vals[5:13] = [4] * 8  # planted flat stretch -> sig=0 paths
-        rows += [(f"s{s}", t, x) for t, x in enumerate(vals)]
-
-    sdf = spark.createDataFrame(rows, "series string, t long, v long")
-    got = sorted(
-        (r.series, r.t, r.mp_dist, r.mp_index)
-        for r in matrix_profile(sdf, m=m, excl=excl, round_dp=6).collect()
-    )
-
-    duck.execute("CREATE OR REPLACE TABLE mp_serie(series VARCHAR, t BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO mp_serie VALUES (?, ?, ?)", rows)
-    want = sorted(
-        map(
-            tuple,
-            duck.execute(f"""
-WITH stats0 AS (
-  SELECT series, t,
-         SUM(v) OVER w AS sm, SUM(v * v) OVER w AS sq, COUNT(*) OVER w AS c
-  FROM mp_serie
-  WINDOW w AS (PARTITION BY series ORDER BY t
-               ROWS BETWEEN CURRENT ROW AND {m - 1} FOLLOWING)
-),
-stats AS (
-  SELECT series, t,
-         CAST(sm AS DOUBLE) / {m}.0 AS mu,
-         sqrt(GREATEST(CAST(sq AS DOUBLE) / {m}.0
-              - (CAST(sm AS DOUBLE) / {m}.0) * (CAST(sm AS DOUBLE) / {m}.0),
-              0.0)) AS sig
-  FROM stats0 WHERE c = {m}
-),
-prods AS (
-  SELECT a.series, b.t - a.t AS d, a.t AS t, a.v * b.v AS p
-  FROM mp_serie a JOIN mp_serie b
-    ON a.series = b.series AND b.t - a.t > {excl}
-),
-qt0 AS (
-  SELECT series, d, t, SUM(p) OVER w AS qt, COUNT(*) OVER w AS c
-  FROM prods
-  WINDOW w AS (PARTITION BY series, d ORDER BY t
-               ROWS BETWEEN CURRENT ROW AND {m - 1} FOLLOWING)
-),
-edges AS (
-  SELECT q.series, q.t AS w, q.t + q.d AS o,
-         CASE WHEN si.sig = 0 AND sj.sig = 0 THEN 0.0
-              WHEN si.sig = 0 OR sj.sig = 0 THEN sqrt({m}.0)
-              ELSE sqrt(2.0 * {m}.0 * (1.0 - LEAST(1.0, GREATEST(-1.0,
-                   (CAST(q.qt AS DOUBLE) - {m}.0 * si.mu * sj.mu)
-                   / ({m}.0 * si.sig * sj.sig)))))
-         END AS dist
-  FROM (SELECT series, d, t, qt FROM qt0 WHERE c = {m}) q
-  JOIN stats si ON si.series = q.series AND si.t = q.t
-  JOIN stats sj ON sj.series = q.series AND sj.t = q.t + q.d
-),
-sym AS (
-  SELECT series, w, o, ROUND(dist, 6) AS dist FROM edges
-  UNION ALL
-  SELECT series, o AS w, w AS o, ROUND(dist, 6) AS dist FROM edges
-)
-SELECT series, CAST(w AS BIGINT) AS t, dist AS mp_dist,
-       CAST(o AS BIGINT) AS mp_index
-FROM sym
-QUALIFY ROW_NUMBER() OVER (PARTITION BY series, w ORDER BY dist, o) = 1
-""").fetchall(),
-        )
-    )
-    duck.execute("DROP TABLE mp_serie")
-    assert got == want
-
-
-def test_holt_winters_cross_engine_synthetic_bit_equality(spark, duck):
-    """The boldest claim pinned on RANDOM data: the Spark aggregate()
-    fold and the DuckDB recursive CTE execute the same operation order,
-    so forecast/level/trend match at FULL precision (exact tuple
-    equality, no rounding) over random integer series — any future
-    reordering of either side's expression tree fails this
-    deterministically."""
-    import random
-
-    from testlog_etl_spark.operators.timeseries import holt_winters_additive
-
-    p, hz, a, b, g = 5, 4, 0.3, 0.1, 0.2
-    al, be, ga = repr(a), repr(b), repr(g)
-    oma, omb, omg = repr(1.0 - a), repr(1.0 - b), repr(1.0 - g)
-    rng = random.Random(99)
-    rows = []
-    for s in range(3):
-        n = rng.randint(2 * p, 40)
-        rows += [(f"s{s}", t, rng.randint(0, 30)) for t in range(n)]
-    df = spark.createDataFrame(rows, "series string, t long, v long")
-    got = sorted(
-        (r.series, r.h, r.yhat, r.level, r.trend)
-        for r in holt_winters_additive(
-            df, p=p, horizon=hz, alpha=a, beta=b, gamma=g
-        ).collect()
-    )
-
-    duck.execute("CREATE OR REPLACE TABLE hw_serie(series VARCHAR, t BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO hw_serie VALUES (?, ?, ?)", rows)
-    want = sorted(
-        map(
-            tuple,
-            duck.execute(f"""
-WITH RECURSIVE arrs AS (
-  SELECT series, array_agg(CAST(v AS DOUBLE) ORDER BY t) AS vv
-  FROM hw_serie GROUP BY 1
-),
-init AS (
-  SELECT series, vv,
-         list_sum(vv[:{p}]) / {p}.0 AS l0,
-         (list_sum(vv[{p + 1}:{2 * p}]) / {p}.0 - list_sum(vv[:{p}]) / {p}.0)
-           / {p}.0 AS b0
-  FROM arrs WHERE len(vv) >= {2 * p}
-),
-hw AS (
-  SELECT series, vv, {p} AS t, l0 AS lv, b0 AS tr,
-         list_transform(vv[:{p}], x -> x - l0) AS ss
-  FROM init
-  UNION ALL
-  SELECT series, vv, t + 1, lnew,
-         {be} * (lnew - lv) + {omb} * tr,
-         ss[:(t % {p})]
-           || [{ga} * (vv[t + 1] - lnew) + {omg} * ss[(t % {p}) + 1]]
-           || ss[(t % {p}) + 2:]
-  FROM (
-    SELECT *, {al} * (vv[t + 1] - ss[(t % {p}) + 1]) + {oma} * (lv + tr) AS lnew
-    FROM hw WHERE t < len(vv)
-  )
-),
-fin AS (SELECT * FROM hw WHERE t = len(vv))
-SELECT series, CAST(hs.h AS INT) AS h,
-       lv + hs.h * tr + ss[((len(vv) - 1 + hs.h) % {p}) + 1] AS yhat,
-       lv AS level, tr AS trend
-FROM fin, (SELECT unnest(range(1, {hz + 1})) AS h) hs
-""").fetchall(),
-        )
-    )
-    duck.execute("DROP TABLE hw_serie")
-    assert got == want  # EXACT doubles, not approx
-
-
-def test_pattern_search_cross_engine_synthetic_differential(spark, duck):
-    """pattern_search vs a generic DuckDB twin on random integer data:
-    rounded distance, argmin rank order, and tie rule must agree
-    exactly (fixed seed; query drawn from one of the series so the
-    zero-distance identity window is present)."""
-    import random
-
-    from testlog_etl_spark.operators.timeseries import pattern_search
-
-    m, k = 5, 4
-    rng = random.Random(321)
-    rows = []
-    for s in range(3):
-        n = rng.randint(20, 40)
-        rows += [(f"s{s}", t, rng.randint(0, 6)) for t in range(n)]
-    qrows = [(i, v) for (_, t, v), i in zip(
-        [r for r in rows if r[0] == "s1"][3 : 3 + m], range(m)
-    )]
-    sdf = spark.createDataFrame(rows, "series string, t long, v long")
-    qdf = spark.createDataFrame(qrows, "qt long, qv long")
-    got = sorted(
-        (r.series, r.t, r.dist, r.rank)
-        for r in pattern_search(sdf, qdf, m=m, top_k=k, round_dp=6).collect()
-    )
-    assert ("s1", 3, 0.0, 1) in got  # identity window
-
-    duck.execute("CREATE OR REPLACE TABLE ps_serie(series VARCHAR, t BIGINT, v BIGINT)")
-    duck.executemany("INSERT INTO ps_serie VALUES (?, ?, ?)", rows)
-    duck.execute("CREATE OR REPLACE TABLE ps_q(k BIGINT, qv BIGINT)")
-    duck.executemany("INSERT INTO ps_q VALUES (?, ?)", qrows)
-    want = sorted(
-        map(
-            tuple,
-            duck.execute(f"""
-WITH qs AS (
-  SELECT CAST(SUM(qv) AS DOUBLE) / {m}.0 AS qmu,
-         sqrt(GREATEST(CAST(SUM(qv * qv) AS DOUBLE) / {m}.0
-              - (CAST(SUM(qv) AS DOUBLE) / {m}.0)
-                * (CAST(SUM(qv) AS DOUBLE) / {m}.0), 0.0)) AS qsig
-  FROM ps_q
-),
-stats0 AS (
-  SELECT series, t,
-         SUM(v) OVER w AS sm, SUM(v * v) OVER w AS sq, COUNT(*) OVER w AS c
-  FROM ps_serie
-  WINDOW w AS (PARTITION BY series ORDER BY t
-               ROWS BETWEEN CURRENT ROW AND {m - 1} FOLLOWING)
-),
-stats AS (
-  SELECT series, t,
-         CAST(sm AS DOUBLE) / {m}.0 AS mu,
-         sqrt(GREATEST(CAST(sq AS DOUBLE) / {m}.0
-              - (CAST(sm AS DOUBLE) / {m}.0) * (CAST(sm AS DOUBLE) / {m}.0),
-              0.0)) AS sig
-  FROM stats0 WHERE c = {m}
-),
-prods AS (
-  SELECT s.series, s.t - q.k AS i, SUM(s.v * q.qv) AS qt, COUNT(*) AS pc
-  FROM ps_serie s, ps_q q WHERE s.t - q.k >= 0
-  GROUP BY 1, 2
-),
-d AS (
-  SELECT p.series, p.i,
-         ROUND(CASE WHEN st.sig = 0 AND qs.qsig = 0 THEN 0.0
-                    WHEN st.sig = 0 OR qs.qsig = 0 THEN sqrt({m}.0)
-                    ELSE sqrt(2.0 * {m}.0 * (1.0 - LEAST(1.0, GREATEST(-1.0,
-                         (CAST(p.qt AS DOUBLE) - {m}.0 * st.mu * qs.qmu)
-                         / ({m}.0 * st.sig * qs.qsig)))))
-               END, 6) AS dist
-  FROM prods p
-  JOIN stats st ON st.series = p.series AND st.t = p.i
-  CROSS JOIN qs
-  WHERE p.pc = {m}
-)
-SELECT series, CAST(i AS BIGINT) AS t, dist,
-       CAST(ROW_NUMBER() OVER (PARTITION BY series ORDER BY dist, i)
-            AS INT) AS rank
-FROM d
-QUALIFY rank <= {k}
-""").fetchall(),
-        )
-    )
-    duck.execute("DROP TABLE ps_serie")
-    duck.execute("DROP TABLE ps_q")
-    assert got == want
-
-
-def test_matrix_profile_ab_matches_bruteforce(spark):
-    """matrix_profile_ab == the O(na*nb*m) direct cross-series minimum
-    in Python for every unordered pair — distance, BOTH aligned window
-    starts, and the (dist, t_a, t_b) tie rule — in full mode and under
-    the max_diag lag valve (model restricted to |j - i| <= max_diag)."""
-    import random
-
-    from testlog_etl_spark.operators.timeseries import matrix_profile_ab
-
-    rng = random.Random(11)
-    m = 5
-    series = {}
-    for s in range(3):
-        n = rng.randint(18, 30)
-        v = [rng.randint(0, 6) for _ in range(n)]
-        if s == 1:
-            v[4:10] = [3] * 6  # flat stretch -> sig=0 cross branches
-        series[f"s{s}"] = v
-
-    def st_(w):
-        mu = sum(w) / m
-        return mu, math.sqrt(max(sum(x * x for x in w) / m - mu * mu, 0.0))
-
-    def dist(wa, wb):
-        (mi, si), (mj, sj) = st_(wa), st_(wb)
-        if si == 0 and sj == 0:
-            return 0.0
-        if si == 0 or sj == 0:
-            return math.sqrt(m)
-        qt = sum(a * b for a, b in zip(wa, wb))
-        corr = max(-1.0, min(1.0, (qt - m * mi * mj) / (m * si * sj)))
-        return math.sqrt(2 * m * (1 - corr))
-
-    def model(md):
-        names = sorted(series)
-        out = {}
-        for x in range(len(names)):
-            for y in range(x + 1, len(names)):
-                a, b = names[x], names[y]
-                va, vb = series[a], series[b]
-                out[(a, b)] = min(
-                    (round(dist(va[i : i + m], vb[j : j + m]), 6), i, j)
-                    for i in range(len(va) - m + 1)
-                    for j in range(len(vb) - m + 1)
-                    if md is None or abs(j - i) <= md
-                )
-        return out
-
-    rows = [(s, t, x) for s, v in series.items() for t, x in enumerate(v)]
-    df = spark.createDataFrame(rows, "series string, t long, v long")
-    for md in (None, 7):
-        exp = model(md)
-        got = {
-            (r.series_a, r.series_b): (r.dist, r.t_a, r.t_b)
-            for r in matrix_profile_ab(df, m=m, max_diag=md, round_dp=6).collect()
-        }
-        assert set(got) == set(exp), md
-        for k, (d, i, j) in exp.items():
-            assert got[k][0] == pytest.approx(d, abs=1e-9), (md, k)
-            assert (got[k][1], got[k][2]) == (i, j), (md, k, got[k], (d, i, j))
-
-
-def test_average_hash_unit_pins():
-    """_average_hash: block boundaries, the strict-> tie rule, and the
-    under-64-byte None contract, against a direct Python replay."""
-    from testlog_etl_spark.operators.multimodal import _average_hash
-
-    assert _average_hash(b"x" * 63) is None  # too short
-    assert _average_hash(b"\x05" * 64) == "0" * 64  # all ties -> all 0 (strict >)
-    h = _average_hash(bytes(range(200)))
-    assert h == "0" * 32 + "1" * 32  # monotone ramp splits at the mean
-
-    payload = bytes((i * 37 + 11) % 256 for i in range(150))
-    n, bits = len(payload), 64
-    gm = sum(payload) / n
-    want = "".join(
-        "1"
-        if sum(payload[i * n // bits : (i + 1) * n // bits])
-        / len(payload[i * n // bits : (i + 1) * n // bits])
-        > gm
-        else "0"
-        for i in range(bits)
-    )
-    assert _average_hash(payload) == want

@@ -15,13 +15,38 @@ def test_entry_returns_rows(spark):
     assert "sum_qty" in df.columns
 
 
+def loaded_query_modules() -> set[str]:
+    """Query modules suite._load_all imports: core directly, the rest
+    through its module loop (read from the source with ast)."""
+    import ast
+    import inspect
+
+    from testlog_etl_spark import suite
+
+    load_all = ast.parse(inspect.getsource(suite._load_all))
+    listed = {
+        elt.value
+        for loop in ast.walk(load_all)
+        if isinstance(loop, ast.For)
+        for elt in loop.iter.elts
+    }
+    return listed | {"core"}
+
+
 def test_registry_consistency():
+    import pathlib
+
     import __spark_entry__ as e
+    from testlog_etl_spark import queries, suite
 
     qs = e.queries()
     oracles = e.oracle_sql()
     assert set(oracles) <= set(qs)
-    assert len(qs) >= 1
+    assert len(suite.REGISTRY) == 526
+    # every query module registers through the suite, so no module can
+    # sit staged outside the registry
+    modules = {p.stem for p in pathlib.Path(queries.__file__).parent.glob("*.py")}
+    assert sorted(modules - loaded_query_modules() - {"__init__"}) == []
 
 
 def test_events_read_without_session_level_nanos_conf(spark, sf_dir):

@@ -170,12 +170,12 @@ def test_record_breakers_tws_sandbox_gate(spark):
 
 @pytest.mark.slow
 def test_watermark_lag_audit_replay(spark):
-    """r11 prototype for the parked watermark-lag DQ op (NOTES.md): per
-    trigger, Spark's reported watermark must equal the deterministic
-    replay max(event ts over PRIOR batches) - delay (epoch-initial), so
-    the audit frame (batch, max_event_ts, watermark, lag) is exactly
-    oracle-able from (ingest_batch, ts) rows -- the r13 registration
-    shape. Pins the progress semantics the operator will rely on."""
+    """Per trigger, Spark's reported watermark must equal the
+    deterministic replay max(event ts over PRIOR batches) - delay
+    (epoch-initial), so a watermark-lag audit frame (batch,
+    max_event_ts, watermark, lag) is exactly oracle-able from
+    (ingest_batch, ts) rows. Pins the progress semantics such an audit
+    relies on."""
     import datetime as dt
 
     from pyspark.sql import functions as F

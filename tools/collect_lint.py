@@ -50,7 +50,6 @@ WHITELIST: dict[str, str] = {
     "operators/layout.py::rle_runs": "one summary row per partition (mapInPandas yields <=1 row each)",
     "operators/linalg.py::power_iteration_top_pc": "one row per embedding dimension d",
     "operators/similarity.py::kmeans_fit": "k-row centroid panels (init sample and per-iteration centroids)",
-    "operators/timeseries.py::pattern_search": "1-row aggregate guarding the m-row dense-query contract (count/distinct/min/max of an m-row frame)",
     "operators/timeseries.py::sweep_concurrency": "per-partition boundary totals: one row per range partition",
     "operators/timeseries.py::coalesce_intervals": "per-partition boundary totals: one row per range partition",
     "queries/streaming_queries.py::stream_hourly_distinct": "1-row global max(ts) horizon",

@@ -108,20 +108,6 @@ def main() -> None:
 
     qs["dedup_semantic_auto"] = _dedup_semantic_auto
 
-    # the staged-but-unregistered r13 pack (queries/r13_pack.py) shares
-    # the (spark, sf_dir) signature -- probe-able by name ahead of its
-    # registration, without touching the frozen registry
-    from testlog_etl_spark.queries.r13_pack import R13_PACK
-
-    for _n, (_fn, _oracle, _doc) in R13_PACK.items():
-        qs.setdefault(_n, _fn)
-
-    # same for the r14 pack (queries/r14_pack.py)
-    from testlog_etl_spark.queries.r14_pack import R14_PACK
-
-    for _n, (_fn, _oracle, _doc) in R14_PACK.items():
-        qs.setdefault(_n, _fn)
-
     tiers = [("sf0.001", "/root/testdata/sf0.001", 0.001), ("sf0.01", "/root/testdata/sf0.01", 0.01), ("sf0.1", BASE, 0.1)]
     if "--skip-synth" not in sys.argv:
         if "--reuse-synth" in sys.argv and os.path.isdir(SYNTH_DIR):
