@@ -596,9 +596,9 @@ def jaccard_pairs_prefix_filtered(
     18.5 -> 5.6 s at sf0.1; at scale it trades one cached (id, set)
     pass for two recomputed ones, the same persist the minhash
     signatures have always used. Long-lived sessions that call this
-    repeatedly should pass ``persist_handles`` and unpersist after
-    their action (the heavy_hitters_exact convention; bench.py's
-    between-query clearCache covers the bench path).
+    repeatedly should pass ``persist_handles`` and unpersist the
+    handle after their action (bench.py's between-query clearCache
+    covers the bench path).
     """
     from testlog_etl_spark.util import spread
 

@@ -9,12 +9,14 @@ that scales with the data (per-customer / per-part rollups are
 engines answer rank, percentile and running-aggregate questions by
 sorting on one node; ``global_scan`` is the Spark-first restatement,
 computed entirely in-plan -- no range shuffle, no Python worker, no
-join:
+join, and no Spark job while the frame is built:
 
-1. boundaries: ONE bounded driver job takes the ``64*nb`` rows with the
+1. boundaries: a scalar subquery takes the ``64*nb`` rows with the
    smallest ``xxhash64`` of the order tuple (a uniform row sample that
-   does not favour early partitions) and picks ``nb-1`` evenly spaced
-   boundary tuples per order, so boundaries follow row quantiles;
+   does not favour early partitions; ties broken by the prefix columns,
+   so the sample is the same on every execution) and picks ``nb-1``
+   evenly spaced distinct boundary tuples per order, so boundaries
+   follow row quantiles;
 2. bucket id: ``#{b < struct(prefix)}`` (``>`` for a descending
    prefix), where the prefix is the longest run of atomic leading order
    columns sharing the first column's direction. A count of boundaries
@@ -22,18 +24,23 @@ join:
    Spark's struct ordering places null, NaN and +-0 exactly as its sort
    does, so buckets are order-contiguous by construction: boundaries
    only shape skew, never results. A non-atomic leading column gives
-   one bucket (ranks stay exact);
-3. rollup: ONE explode+aggregate driver job computes every spec's
-   per-bucket count, sum and max (<= n_specs*nb rows), folded into
-   exclusive offsets and prefix-max carries as LITERAL arrays;
+   one bucket (ranks stay exact). The boundary array is projected as a
+   column, read by one ``CASE WHEN`` per boundary, and dropped before
+   the exchange;
+3. rollup: a second scalar subquery computes every spec's per-bucket
+   count, sum and max in one inline+aggregate (<= n_specs*nb rows)
+   and folds them, in bucket order, into exclusive offsets and
+   prefix-max carries (array functions over one row, no window);
 4. per row: offset[bucket] + row_number / running sum / running max
    over ``Window.partitionBy(bucket).orderBy(order)`` -- one hash
    exchange per distinct order (specs sharing an order share one
-   bucket column and one window, which CollapseWindow plans once).
+   bucket column and one window, which CollapseWindow plans once). The
+   rollup is projected after the last window, so no array rides an
+   exchange.
 
 The bucket count is ``min(max(2, num_buckets or defaultParallelism),
-256)``: it grows with the cluster but is capped, so the plan literals
-(<= 255 boundary structs per order) and the sample collect (<= 16384
+256)``: it grows with the cluster but is capped, so the subquery
+results (<= 255 boundary structs per order) and the sample (<= 16384
 rows) stay bounded on any cluster.
 
 FP note: the running sum associates as (bucket offset) + an
@@ -43,11 +50,10 @@ to a dyadic grid first (the 2^-20 snap used throughout queries/), which
 makes every fold order bit-identical. Max is a lattice join, so the
 running max has no such caveat.
 
-Lifetime note: the input is persisted so the two build jobs and the
-main pass compute the upstream once; ``persist_handles`` receives it so
-callers can ``unpersist()`` after their action. Boundaries and offsets
-are literals in the returned plan, so a recompute after an unpersist
-gives the same answer.
+Lifetime note: nothing is persisted. The two subqueries and the main
+pass each read the input plan; where it ends in an exchange (a
+rollup upstream), AQE reuses the shuffle output instead of recomputing
+it, and an input without one is computed by each of the three.
 """
 
 from __future__ import annotations
@@ -59,8 +65,6 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import AtomicType, BinaryType, StructType
-
-from testlog_etl_spark.util import const_array, persist_once
 
 MAX_BUCKETS = 256
 SAMPLE_PER_BUCKET = 64
@@ -100,14 +104,13 @@ def global_scan(
     specs: Sequence[ScanSpec],
     *,
     num_buckets: int | None = None,
-    persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """``df``'s columns plus every spec's outputs, computed by the
     bucketed in-plan scan (module docstring). All specs share the two
-    bounded build jobs, so batching specs over one frame costs no more
-    driver jobs than one spec. ``num_buckets`` defaults to the
-    cluster's defaultParallelism and is capped at ``MAX_BUCKETS``;
-    ``persist_handles`` receives the one persisted frame (the input).
+    subqueries, so batching specs over one frame plans no more of them
+    than one spec. ``num_buckets`` defaults to the cluster's
+    defaultParallelism and is capped at ``MAX_BUCKETS``. Building the
+    frame runs no Spark job.
     """
     specs = list(specs)
     for s in specs:
@@ -116,111 +119,122 @@ def global_scan(
         if (s.cum or s.max or s.total) and s.val is None:
             raise ValueError("cum, max and total need val")
     nb = min(max(2, num_buckets or df.sparkSession.sparkContext.defaultParallelism), MAX_BUCKETS)
-    src = persist_once(df)
-    if persist_handles is not None:
-        persist_handles.append(src)
 
     parsed = [_parse_order(df.schema, s.order) for s in specs]
     orders = list(dict.fromkeys(parsed))
     spec_order = [orders.index(o) for o in parsed]
     prefixes = [_prefix(df.schema, o) for o in orders]
+    # one Column per subquery, so every use shares one planned subquery
+    bnds = _boundaries(df, orders, prefixes, nb)
 
-    # bounded build job 1: ONE hash-ordered sample of every order's
-    # prefix columns, LIMIT 64*nb rows (a sparse or empty sample only
-    # merges buckets)
-    pcols = list(dict.fromkeys(c for p in prefixes for c, _ in p))
-    hcols = list(dict.fromkeys(c for o in orders for c, _ in o))
-    sample = (
-        src.select(F.xxhash64(*hcols).alias("__scan_h"), *pcols)
-        .orderBy("__scan_h")
-        .limit(SAMPLE_PER_BUCKET * nb)
-        .collect()
-        if pcols
-        else []
-    )
-    bnds = [_boundaries(sample, pcols, p, nb) for p in prefixes]
-    bkts = [_bucket(df.schema, p, b) for p, b in zip(prefixes, bnds)]
+    def with_buckets(frame: DataFrame, js: Sequence[int]) -> DataFrame:
+        # the boundary array is projected for the bucket ids and dropped
+        # again, so it never rides an exchange
+        if bnds is None or not any(prefixes[j] for j in js):
+            return frame.withColumns({f"_bkt{j}": F.lit(0) for j in js})
+        out = frame.select("*", bnds.alias("__scan_b"))
+        return out.select(*frame.columns, *[_bucket(prefixes[j], j, nb).alias(f"_bkt{j}") for j in js])
 
-    # bounded build job 2: every spec's per-bucket (count, sum, max) in
-    # one explode+aggregate pass (<= n_specs*nb rows to the driver)
     vals, maxv = [], []
     for s in specs:
         v = F.col(s.val).cast("double") if s.val else F.lit(0.0)
         vals.append(F.coalesce(v, F.lit(0.0)))
         # running max: NULL and NaN values mean "no value"
         maxv.append(F.when(~F.isnan(v), v) if s.max else F.lit(None).cast("double"))
-    packed = F.explode(
+
+    # subquery 2: every spec's per-bucket (count, sum, max) in one
+    # inline+aggregate, folded into per-bucket exclusive offsets
+    packed = F.inline(
         F.array(
             *[
                 F.struct(
                     F.lit(i).alias("m"),
-                    bkts[spec_order[i]].alias("b"),
+                    F.col(f"_bkt{spec_order[i]}").alias("b"),
                     vals[i].alias("v"),
                     maxv[i].alias("x"),
                 )
                 for i in range(len(specs))
             ]
         )
-    ).alias("_e")
-    rollup = (
-        src.select(packed)
-        .select("_e.*")
+    )
+    per_bucket = (
+        with_buckets(df, range(len(orders)))
+        .select(packed)
         .groupBy("m", "b")
-        .agg(F.count(F.lit(1)).alias("c"), F.sum("v").alias("s"), F.max("x").alias("x"))
-        .collect()
+        .agg(F.sum(F.lit(1)).alias("c"), F.sum("v").alias("s"), F.max("x").alias("x"))
+    )
+    # the per-bucket rows (<= n_specs*nb) fold in one task: coalesce(1)
+    # is narrow, so it saves the exchange a global aggregate would add
+    rollup = (
+        per_bucket.coalesce(1)
+        .agg(
+            *[
+                F.sort_array(
+                    F.collect_list(F.when(F.col("m") == i, F.struct("b", "c", "s", "x")))
+                ).alias(f"r{i}")
+                for i in range(len(specs))
+            ]
+        )
+        .select(F.struct(*[_offsets(f"r{i}", nb).alias(f"s{i}") for i in range(len(specs))]))
+        .scalar()
     )
 
-    out = src
-    out_names: list[str] = []
+    def at(i: int) -> Column:
+        # spec i's offsets for the row's bucket, read from the projected
+        # rollup
+        return F.col("__scan_r")[f"s{i}"]["o"][F.col(f"_bkt{spec_order[i]}")]
+
+    out = df
     added: set[int] = set()
     for i, s in enumerate(specs):
         j = spec_order[i]
-        bcol = f"_bkt{j}"
         if j not in added:
             added.add(j)
-            out = out.withColumn(bcol, bkts[j])
-        k = len(bnds[j]) + 1
-        roff, soff, carry = [0] * k, [0.0] * k, [math.nan] * k
-        n_acc, s_acc, m_acc = 0, 0.0, None
-        spans: list[tuple[int, int, int]] = []  # (bucket, first rank, last rank)
-        for r in sorted((r for r in rollup if r["m"] == i), key=lambda r: r["b"]):
-            b = r["b"]
-            roff[b], soff[b] = n_acc, s_acc
-            carry[b] = math.nan if m_acc is None else m_acc  # NaN: no earlier value
-            spans.append((b, n_acc + 1, n_acc + r["c"]))
-            n_acc += r["c"]
-            s_acc += r["s"] or 0.0
-            if r["x"] is not None and (m_acc is None or r["x"] > m_acc):
-                m_acc = r["x"]
+            out = with_buckets(out, [j])
         if s.rank_range is not None:
-            lo, hi = s.rank_range
-            keep = [b for b, first, last in spans if first <= hi and last >= lo]
             # only the covering buckets' rows enter the exchange (their
-            # offsets are global literals, so surviving ranks are exact)
-            out = out.filter(F.col(bcol).isin(keep) if keep else F.lit(False))
-        w = Window.partitionBy(bcol).orderBy(
+            # offsets are global, so surviving ranks are exact). The test
+            # sits in a generator, not a Filter: Catalyst would push a
+            # Filter below the projections and copy both subqueries into
+            # its condition, then optimize every copy again.
+            lo, hi = s.rank_range
+            e = at(i)
+            keep = F.when((e["r"] + 1 <= hi) & (e["r"] + e["c"] >= lo), F.array(F.lit(1)))
+            out = (
+                out.withColumn("__scan_r", rollup)
+                .select("*", F.explode_outer(keep).alias("__scan_k"))
+                .filter(F.col("__scan_k").isNotNull())
+                .drop("__scan_r", "__scan_k")
+            )
+        w = Window.partitionBy(f"_bkt{j}").orderBy(
             *[F.col(c).desc() if d else F.col(c).asc() for c, d in orders[j]]
         )
-        idx = F.col(bcol) + F.lit(1)  # element_at is 1-based; buckets start at 0
-        cols: dict[str, Column] = {}
+        run: dict[str, Column] = {}
         if s.rank:
-            rn = F.row_number().over(w)
-            cols[s.rank] = (F.element_at(const_array(roff), idx) + rn).cast("long")
+            run[f"__scan_rn{i}"] = F.row_number().over(w)
         if s.cum:
-            run = F.sum(vals[i]).over(w.rowsBetween(Window.unboundedPreceding, 0))
-            cols[s.cum] = F.element_at(const_array(soff), idx) + run
+            run[f"__scan_cum{i}"] = F.sum(vals[i]).over(w.rowsBetween(Window.unboundedPreceding, 0))
         if s.max:
             frame = w.rowsBetween(Window.unboundedPreceding, -1 if s.exclusive else 0)
-            c = F.element_at(const_array(carry), idx)
-            folded = F.greatest(F.when(~F.isnan(c), c), F.max(maxv[i]).over(frame))
+            run[f"__scan_max{i}"] = F.max(maxv[i]).over(frame)
+        out = out.withColumns(run)
+
+    # the rollup is projected once, after every window exchange
+    out = out.withColumn("__scan_r", rollup)
+    cols: dict[str, Column] = {}
+    for i, s in enumerate(specs):
+        if s.rank:
+            cols[s.rank] = (at(i)["r"] + F.col(f"__scan_rn{i}")).cast("long")
+        if s.cum:
+            cols[s.cum] = at(i)["s"] + F.col(f"__scan_cum{i}")
+        if s.max:
+            folded = F.greatest(at(i)["x"], F.col(f"__scan_max{i}"))
             cols[s.max] = F.when(F.abs(folded) != F.lit(math.inf), folded).cast("double")
         if s.n:
-            cols[s.n] = F.lit(n_acc).cast("long")
+            cols[s.n] = F.col("__scan_r")[f"s{i}"]["n"].cast("long")
         if s.total:
-            cols[s.total] = F.lit(s_acc).cast("double")
-        out = out.withColumns(cols)
-        out_names += cols
-    return out.select(*df.columns, *out_names)
+            cols[s.total] = F.col("__scan_r")[f"s{i}"]["t"].cast("double")
+    return out.select(*df.columns, *[c.alias(name) for name, c in cols.items()])
 
 
 def _parse_order(schema: StructType, order: Sequence[str]) -> tuple[tuple[str, bool], ...]:
@@ -249,39 +263,74 @@ def _prefix(schema: StructType, order: tuple[tuple[str, bool], ...]) -> list[tup
     return out
 
 
-def _sort_key(t: tuple) -> tuple:
-    # only PICKS evenly spaced boundaries (every comparison that places a
-    # row runs in-engine): nulls first, NaN after every other value
-    return tuple(
-        (0,) if v is None else (2,) if isinstance(v, float) and v != v else (1, v) for v in t
+def _boundaries(
+    df: DataFrame,
+    orders: list[tuple[tuple[str, bool], ...]],
+    prefixes: list[list[tuple[str, bool]]],
+    nb: int,
+) -> Column | None:
+    """Subquery 1: a struct whose ``o{j}`` field holds up to ``nb-1``
+    distinct boundary structs over order j's prefix, evenly spaced in
+    the sorted sample (so they follow row quantiles). The sample is the
+    ``64*nb`` rows with the smallest (hash, prefix columns): a total
+    order, so a re-executed subquery picks the same rows. None when no
+    order has a prefix."""
+    pcols = list(dict.fromkeys(c for p in prefixes for c, _ in p))
+    if not pcols:
+        return None
+    hcols = list(dict.fromkeys(c for o in orders for c, _ in o))
+    sample = df.orderBy(F.xxhash64(*hcols), *pcols).limit(SAMPLE_PER_BUCKET * nb)
+    live = [j for j, p in enumerate(prefixes) if p]
+    # Spark's struct order sorts the sample: nulls first, NaN last
+    sorted_ = sample.agg(
+        *[F.expr(f"sort_array(collect_list({_struct(prefixes[j])}))").alias(f"a{j}") for j in live]
     )
 
+    def picks(j: int) -> Column:
+        # tuples[i*len//nb] for i in 1..nb-1, deduplicated (an empty
+        # sample yields NULLs, which array_compact drops)
+        spaced = f"transform(sequence(1, {nb - 1}), i -> get(a{j}, int(i * size(a{j}) div {nb})))"
+        return F.expr(f"array_distinct(array_compact({spaced}))").alias(f"o{j}")
 
-def _boundaries(sample: list, pcols: list[str], prefix: list[tuple[str, bool]], nb: int) -> list[tuple]:
-    """Up to ``nb-1`` distinct boundary tuples over ``prefix``, evenly
-    spaced in the sorted sample multiset (so they follow row quantiles)."""
-    if not prefix or not sample:
-        return []
-    pos = [pcols.index(c) + 1 for c, _ in prefix]  # +1: skip the hash
-    tuples = sorted((tuple(r[i] for i in pos) for r in sample), key=_sort_key)
-    picked = {}
-    for i in range(1, nb):
-        t = tuples[i * len(tuples) // nb]
-        picked[_sort_key(t)] = t
-    return list(picked.values())
+    return sorted_.select(F.struct(*[picks(j) for j in live])).scalar()
 
 
-def _bucket(schema: StructType, prefix: list[tuple[str, bool]], bnds: list[tuple]) -> Column:
+def _bucket(prefix: list[tuple[str, bool]], j: int, nb: int) -> Column:
     """Bucket id = #boundaries below the row's prefix struct (above, for
-    a descending prefix): 0..len(bnds), monotone along the order."""
-    if not bnds:
+    a descending prefix): 0..len(bnds), monotone along the order. One
+    CASE term per possible boundary, read from the projected array
+    (a missing one is NULL and counts 0). Built as SQL text: one py4j
+    call instead of one per Column operation."""
+    if not prefix:
         return F.lit(0)
-    desc = prefix[0][1]
-    row = F.struct(*[F.col(c).alias(c) for c, _ in prefix])
-    n = F.lit(0)
-    for t in bnds:
-        b = F.struct(
-            *[F.lit(v).cast(schema[c].dataType).alias(c) for (c, _), v in zip(prefix, t)]
-        )
-        n = n + F.when((b > row) if desc else (b < row), 1).otherwise(0)
-    return n
+    op, row = (">" if prefix[0][1] else "<"), _struct(prefix)
+    terms = [f"CASE WHEN get(__scan_b.o{j}, {i}) {op} {row} THEN 1 ELSE 0 END" for i in range(nb - 1)]
+    return F.expr(" + ".join(terms))
+
+
+def _struct(prefix: list[tuple[str, bool]]) -> str:
+    """SQL for the row's prefix struct (positional field names)."""
+    fields = [f"'f{k}', `{c.replace('`', '``')}`" for k, (c, _) in enumerate(prefix)]
+    return f"named_struct({', '.join(fields)})"
+
+
+def _offsets(r: str, nb: int) -> Column:
+    """Fold one spec's per-bucket ``(b, c, s, x)`` rows (column ``r``,
+    sorted by bucket) into ``o``: per bucket id the exclusive rank
+    offset ``r``, sum offset ``s``, max carry ``x`` (NULL: no earlier
+    value) and the bucket's own count ``c``; plus the global count
+    ``n`` and sum ``t``. One sequential fold in bucket order, as a
+    scan would sum. SQL text, like ``_bucket``."""
+    zero = "named_struct('b', k, 'c', 0L, 's', 0D, 'x', CAST(NULL AS DOUBLE))"
+    dense = f"transform(sequence(0, {nb - 1}), k -> coalesce(get(filter({r}, e -> e.b = k), 0), {zero}))"
+    entry = "named_struct('r', a.n, 's', a.t, 'x', a.m, 'c', e.c)"
+    start = (
+        "named_struct('o', CAST(array() AS ARRAY<STRUCT<r: BIGINT, s: DOUBLE, x: DOUBLE, c: BIGINT>>), "
+        "'n', 0L, 't', 0D, 'm', CAST(NULL AS DOUBLE))"
+    )
+    step = (
+        f"(a, e) -> named_struct('o', concat(a.o, array({entry})), 'n', a.n + e.c, 't', a.t + e.s, "
+        "'m', CASE WHEN e.x IS NOT NULL AND (a.m IS NULL OR e.x > a.m) THEN e.x ELSE a.m END)"
+    )
+    return F.expr(f"aggregate({dense}, {start}, {step})")
+

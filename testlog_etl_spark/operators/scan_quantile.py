@@ -20,11 +20,12 @@ is now a theorem instead):
 2. one global cumulative count over (key asc, value asc)
    (``operators/scan.py::global_scan`` -- bucket-keyed, no per-group
    concentration anywhere);
-3. a SECOND, group-rollup-sized ``global_scan`` over the per-group
-   totals in the SAME key order, whose exclusive prefix IS each group's
-   rank offset -- both scans sort with Spark's asc-nulls-first (NaN-
-   last) order, so the offsets index the value order exactly, for any
-   key type and any key-domain cardinality;
+3. per-group rank offsets and sizes from a group-rollup aggregate of
+   that scan: a group's rows are contiguous in the scan order, so its
+   exclusive offset is its smallest (cum − count). The scan sorts with
+   Spark's asc-nulls-first (NaN-last) order, so the offsets index the
+   value order exactly, for any key type and any key-domain
+   cardinality;
 4. per-(group, quantile) selection rows derived column-wise from the
    offset frame (``explode`` of a literal array of ``(q_i, q_v)``
    structs carrying explicit quantile indices — the floor/coefficient
@@ -50,9 +51,8 @@ NULL values are ignored (``percentile`` semantics); a group with only
 NULLs yields NO row (vs percentile's NULL row) — callers that need the
 NULL row should left-join this result back to the key rollup.
 
-Lifetime: the small final frame is persisted and counted, after which
-the two scans' persisted inputs are eagerly unpersisted, so long
-sessions do not accumulate cached rollups until ContextCleaner GC.
+Lifetime: nothing is persisted and building the frame runs no Spark
+job (the scan's boundaries and offsets are scalar subqueries).
 
 Reference parity note: the reference's row-at-a-time engine sorts each
 group in memory for its percentile aggregate (SURVEY.md §2.3 A7); this
@@ -68,7 +68,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from testlog_etl_spark.operators.scan import ScanSpec, global_scan
-from testlog_etl_spark.util import persist_once
 
 
 def _expr_key(vcol: Column) -> str:
@@ -95,7 +94,6 @@ def attach_group_quantiles(
     key_names: Sequence[str],
     specs: Sequence[tuple[str, Column, float]],
     num_parts: int = 32,
-    persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Left-join rank-selection quantiles onto ``base`` (one row per
     group, its key columns already named ``key_names``). ``src`` is the
@@ -103,12 +101,8 @@ def attach_group_quantiles(
     ``specs`` are ``(out_name, value column, q)``. Empty ``specs``
     returns ``base`` unchanged.
 
-    EAGER like the underlying ``group_quantiles_exact``: constructing
-    the returned DataFrame runs the two scans immediately and leaves one
-    small (group-rollup-sized) frame persisted. Pass ``persist_handles`` to receive that
-    cached frame and ``unpersist()`` it after your action; without it
-    the cache lives until session end (bounded: one rollup-sized frame
-    per call).
+    Lazy like the underlying ``group_quantiles_exact``: building the
+    returned DataFrame runs no Spark job and persists nothing.
 
     ALL specs share ONE scan (r10): the distinct value expressions are
     melted into ``(group key, expr id, value)`` rows and a single
@@ -164,7 +158,6 @@ def attach_group_quantiles(
         qs_union,
         qouts,
         num_parts=num_parts,
-        persist_handles=persist_handles,
     )
 
     # fold (group, expr id) rows back to one row per group, one output
@@ -191,7 +184,6 @@ def group_quantiles_exact(
     qs: Sequence[float],
     outs: Sequence[str],
     num_parts: int = 32,
-    persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """One row per group with one DOUBLE column per requested quantile
     (``outs`` names them), each bit-identical to
@@ -203,8 +195,8 @@ def group_quantiles_exact(
 
     ``key`` may be one column name or a sequence (composite group key).
     NULL group keys are first-class (Spark's asc nulls-first order in
-    both scans; null-safe selection join), and NaN float keys are fine
-    too — both scans use the same engine ordering, so the r09
+    the scan; null-safe selection join), and NaN float keys are fine
+    too — the offsets come from the same engine ordering, so the r09
     driver-walk restriction ("float keys must not contain NaN") is
     gone along with the walk.
     """
@@ -215,28 +207,20 @@ def group_quantiles_exact(
         df.filter(F.col(val).isNotNull())
         .select(*[F.col(k) for k in keys], F.col(val).cast("double").alias(val))
         .groupBy(*keys, val)
-        .agg(F.count(F.lit(1)).cast("double").alias("_cnt"))
+        .agg(F.sum(F.lit(1.0)).alias("_cnt"))
     )
-    handles: list[DataFrame] = []
     ranked = global_scan(
         pv,
         [ScanSpec((*keys, val), val="_cnt", cum="_gcum")],
         num_buckets=num_parts,
-        persist_handles=handles,
     )
-    # Per-group totals read the PERSISTED rollup the scan just built
-    # (handles[0]) instead of recomputing pv from the source — at scale
-    # the source scan dominates and must run exactly once. A second,
-    # group-rollup-sized scan in the SAME key order turns the totals
-    # into exclusive rank offsets (_off = inclusive cum − own count):
-    # the distributed form of the r09 driver walk. Counts are
+    # Each group's rows are contiguous in the scan order, so its
+    # exclusive rank offset is the smallest (_gcum − _cnt) over its rows
+    # and its size the sum of _cnt: one group-rollup aggregate, the
+    # distributed form of the r09 driver walk. Counts are
     # integer-valued doubles, so every fold order is exact.
-    gt = handles[0].groupBy(*keys).agg(F.sum("_cnt").alias("_n"))
-    offs = global_scan(
-        gt,
-        [ScanSpec(tuple(keys), val="_n", cum="_gn")],
-        num_buckets=num_parts,
-        persist_handles=handles,
+    offs = ranked.groupBy(*keys).agg(
+        F.min(F.col("_gcum") - F.col("_cnt")).alias("_off"), F.sum("_cnt").alias("_n")
     )
     # per-(group, quantile) selection rows, column-wise: position
     # p = q·(n−1); covering ranks _lo = ⌊p⌋+1 and _lo+1; engine-exact
@@ -254,8 +238,8 @@ def group_quantiles_exact(
     seldf = (
         offs.select(
             *keys,
-            (F.col("_gn") - F.col("_n")).alias("_off"),
-            F.col("_n"),
+            "_off",
+            "_n",
             F.explode(qlit).alias("__q"),
         )
         .select(
@@ -306,14 +290,4 @@ def group_quantiles_exact(
             .otherwise(F.coalesce(vhi, vlo) * chi + vlo * clo)
             .alias(out)
         )
-    result = per_key.select(*cols)
-    # eager: persist the (group-rollup-sized) result, run its one
-    # action, then free the two scans' persisted inputs immediately --
-    # the caller reads the cached result
-    result = persist_once(result)
-    result.count()
-    for h in handles:
-        h.unpersist()
-    if persist_handles is not None:
-        persist_handles.append(result)
-    return result
+    return per_key.select(*cols)

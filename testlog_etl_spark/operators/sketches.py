@@ -173,9 +173,7 @@ def histogram_quantile(
     return hit.select(F.col(group_col), est.alias("q_est"))
 
 
-def misra_gries_candidates(
-    df: DataFrame, key_col: str, k: int = 200, emit_totals: bool = False
-) -> DataFrame:
+def misra_gries_candidates(df: DataFrame, key_col: str, k: int = 200) -> DataFrame:
     """Per-partition Misra-Gries summaries of ``key_col`` frequency:
     at most ``k`` candidate rows (item, est) per partition, emitted by
     an Arrow-batched bounded-memory fold.
@@ -197,13 +195,10 @@ def misra_gries_candidates(
     this viable where an exact groupBy's shuffle would carry the whole
     vocabulary. Shuffle cost of the summary: <= k rows per partition.
 
-    ``emit_totals=True`` additionally yields one NULL-item row per
-    partition carrying the partition's non-null row count in ``est``
-    (r12, guide 1.2 "don't compute things twice": callers that need
-    the global ``n`` alongside the candidates — the heavy-hitter
-    threshold — previously paid a SEPARATE full ``count()`` pass over
-    the same input; summing the sentinel rows gets it from this pass
-    for free).
+    Each partition also yields one NULL-item row carrying its non-null
+    row count in ``est``: summing those rows gives the global ``n`` of
+    the heavy-hitter threshold from this pass, with no separate count
+    over the same input.
     """
     from collections.abc import Iterator
 
@@ -231,69 +226,51 @@ def misra_gries_candidates(
             yield pd.DataFrame(
                 {"item": counters.index, "est": counters.to_numpy("int64")}
             )
-        if emit_totals:
-            yield pd.DataFrame({"item": [None], "est": [total]})
+        yield pd.DataFrame({"item": [None], "est": [total]})
 
     return df.select(F.col(key_col).cast("string").alias(key_col)).mapInPandas(
         fold, out_schema
     )
 
 
-def heavy_hitters_exact(
-    df: DataFrame,
-    key_col: str,
-    k: int = 200,
-    n: int | None = None,
-    return_n: bool = False,
-    persist_handles: list[DataFrame] | None = None,
-) -> DataFrame:
+def heavy_hitters_exact(df: DataFrame, key_col: str, k: int = 200) -> DataFrame:
     """EXACT frequencies of every item with count > n/k, found without
     ever shuffling the full key distribution: MG candidate generation
     (recall-complete, <= k rows/partition) then one verification scan
     that counts ONLY candidate keys (broadcast semi-filter prunes the
-    aggregate's shuffle to candidate rows). Output: (item, cnt) -- the
-    candidate set's false positives are removed by the exact filter,
-    so the result is identical to the full GROUP BY ... HAVING twin.
+    aggregate's shuffle to candidate rows). Output: (item, cnt, n),
+    where ``n`` is the total non-null row count -- the candidate set's
+    false positives are removed by the exact filter, so the result is
+    identical to the full GROUP BY ... HAVING twin.
 
-    ``n`` (total non-null row count): pass it when the caller already
-    has it. With ``n=None`` (r12) the count rides the MG pass itself as
-    per-partition sentinel rows (``emit_totals``) and is summed from
-    the PERSISTED <= (k+1)*parts-row summary — before r12 the fallback
-    (and the registered query) spent one EXTRA full pass on
-    ``keyed.count()``; the input is now scanned exactly twice (MG +
-    verification), the floor for exact MG. ``return_n`` additionally
-    returns the resolved n for callers that fold it into derived
-    columns (the heavy-hitter ``share``).
+    One scalar subquery folds the MG summary into the candidate set and
+    ``n`` (the sum of the per-partition NULL-item count rows), so the
+    input is scanned exactly twice (MG + verification), the floor for
+    exact MG, and building the frame runs no Spark job.
     """
-    if n is None:
-        from testlog_etl_spark.util import persist_once
-
-        summ = persist_once(misra_gries_candidates(df, key_col, k, emit_totals=True))
-        # the persisted <= (k+1)*parts-row summary backs BOTH the n
-        # total and the lazy candidate frame, so it cannot be
-        # unpersisted here (the caller's action still reads it).
-        # Callers running many calls in one long session should pass
-        # ``persist_handles`` and unpersist after their action (r13,
-        # ADVICE r12; same contract as operators/scan.py); bench.py's
-        # between-query clearCache covers the bench path.
-        if persist_handles is not None:
-            persist_handles.append(summ)
-        n = int(
-            summ.where(F.col("item").isNull()).agg(F.sum("est")).first()[0] or 0
+    summ = (
+        misra_gries_candidates(df, key_col, k)
+        .agg(
+            F.collect_set("item").alias("items"),
+            F.coalesce(F.sum(F.when(F.col("item").isNull(), F.col("est"))), F.lit(0)).alias("n"),
         )
-        cands = summ.where(F.col("item").isNotNull()).select("item").distinct()
-    else:
-        cands = misra_gries_candidates(df, key_col, k).select("item").distinct()
+        .select(F.struct("items", "n"))
+        .scalar()
+    )
+    # explode_outer: a plain explode makes Catalyst infer a non-empty
+    # filter that copies the subquery (optimized once per copy); the NULL
+    # row it leaves for an empty set matches nothing in the semi join
+    cands = df.sparkSession.range(1).select(F.explode_outer(summ["items"]).alias("item"))
     keyed = df.select(F.col(key_col).cast("string").alias("item")).where(
         F.col("item").isNotNull()
     )
-    exact = (
+    return (
         keyed.join(F.broadcast(cands), "item", "left_semi")
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .where(F.col("cnt") * k > F.lit(n))
+        .select("item", "cnt", summ["n"].alias("n"))
+        .where(F.col("cnt") * k > F.col("n"))
     )
-    return (exact, n) if return_n else exact
 
 
 def bitmap_words(df: DataFrame, bucket_cols: list[str], id_col: str) -> DataFrame:

@@ -956,8 +956,8 @@ def agg_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows into one task and re-sorts per page; the in-plan bucketed "
     "scan (operators/scan.py::global_scan) assigns a GLOBAL "
     "rank in one bucket-keyed shuffle (sampled struct boundaries "
-    "-> order-contiguous buckets -> literal offsets + per-bucket "
-    "row_number; two bounded build jobs, no range shuffle, no Python "
+    "-> order-contiguous buckets -> subquery offsets + per-bucket "
+    "row_number; two bounded scalar subqueries, no range shuffle, no Python "
     "boundary), so any page is a filter on the rank column and deep "
     "pages cost the same as page one. Ordering folds integral cents "
     "(ROUND(rev,4)*1e4) so rank order cannot drift between engines at "
@@ -987,8 +987,9 @@ def topk_global_paging(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank_range (r13): the page only consumes ranks 101-150, so only
     # the covering buckets' rows enter the rank exchange -- a deep page
     # shuffles ~|page buckets|/nb of the rollup instead of all of it.
-    # Surviving ranks are exact (offsets are global literals), so the
-    # BETWEEN filter below is unchanged.
+    # Surviving ranks are exact (each bucket's offset counts every
+    # earlier bucket's rows, pruned or not), so the BETWEEN filter
+    # below is unchanged.
     k = global_scan(
         ri, [ScanSpec(("rev_i desc", "l_partkey"), rank="i", rank_range=(101, 150))]
     )
@@ -1066,11 +1067,11 @@ def agg_heavyhitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # n rides the MG summary pass (r12): the corpus is tokenized exactly
     # twice (MG + verification) instead of three times
-    hh, n = heavy_hitters_exact(terms, "term", k=500, return_n=True)
+    hh = heavy_hitters_exact(terms, "term", k=500)
     return hh.select(
         "item",
         "cnt",
-        F.round(F.col("cnt") / F.lit(n), 6).alias("share"),
+        F.round(F.col("cnt") / F.col("n"), 6).alias("share"),
     ).orderBy(F.desc("cnt"), "item")
 
 
@@ -1957,16 +1958,13 @@ def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cx = orders.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.sum("o_totalprice").alias("x")
     )
-    handles: list = []
-    r = global_scan(
-        cx, [ScanSpec(("x", "cust"), rank="i", n="n")], persist_handles=handles
-    )
+    r = global_scan(cx, [ScanSpec(("x", "cust"), rank="i", n="n")])
     d = r.groupBy(F.expr("((i - 1) * 10) div n").cast("int").alias("decile")).agg(
         F.count(F.lit(1)).alias("n_customers"), F.sum("x").alias("rev")
     )
     t = d.agg(F.sum("rev").alias("tot"))
     wc = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
-    out = (
+    return (
         d.crossJoin(F.broadcast(t))
         .select(
             "decile",
@@ -1977,10 +1975,6 @@ def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("decile")
     )
-    out = out.localCheckpoint(eager=True)
-    for h in handles:
-        h.unpersist()
-    return out
 
 
 @register(
@@ -2610,8 +2604,8 @@ def agg_binned_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "The quintile needs a GLOBAL rank over a grain that scales with "
     "the data, so the three metrics ride ONE operators/scan.py::"
     "global_scan call (one bucket-keyed shuffle per metric; boundaries "
-    "and offsets from two bounded build jobs shared by all three, "
-    "fully in-plan) -- never an "
+    "and offsets from two bounded scalar subqueries shared by all "
+    "three, fully in-plan) -- never an "
     "unpartitioned ntile window over the customer grain (the "
     "window_lint rule). "
     "The score is computed EXPLICITLY from (rank, n) with integer "

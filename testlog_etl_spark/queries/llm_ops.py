@@ -3820,22 +3820,18 @@ ORDER BY shard
 )
 def corpus_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from testlog_etl_spark.operators.scan import ScanSpec, global_scan
-    from testlog_etl_spark.util import persist_once
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     d = docs.select(
         "doc_id", F.size(textstats.tokens(F.col("text"))).alias("n_tok")
     )
-    handles: list = []
-    r = global_scan(
-        d, [ScanSpec(("n_tok desc", "doc_id"), rank="i")], persist_handles=handles
-    )
+    r = global_scan(d, [ScanSpec(("n_tok desc", "doc_id"), rank="i")])
     s = r.groupBy(((F.col("i") - 1) % 16).alias("shard")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").alias("shard_tokens"),
     )
     t = s.agg(F.sum("shard_tokens").cast("double").alias("tot"))
-    out = (
+    return (
         s.crossJoin(F.broadcast(t))
         .select(
             "shard",
@@ -3845,11 +3841,6 @@ def corpus_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("shard")
     )
-    out = persist_once(out)
-    out.count()
-    for h in handles:
-        h.unpersist()
-    return out
 
 
 def _feature_hashing_oracle() -> str:

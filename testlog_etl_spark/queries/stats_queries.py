@@ -293,27 +293,15 @@ def stats_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from testlog_etl_spark.operators.scan import ScanSpec, global_scan
     from testlog_etl_spark.operators.scan_quantile import group_quantiles_exact
 
-    # `handles` exists to READ the first scan's persisted input
-    # (handles[0], below) without re-scanning the source. The caches
-    # live until session end: the returned frame is lazy and reads
-    # them. Bounded leak: two rollup-sized frames per call. Both scans
-    # compare the string key in-engine (sampled struct boundaries).
-    handles: list = []
-    ranked = global_scan(
-        sc, [ScanSpec(("source", "s", "doc_id"), rank="_gr")], persist_handles=handles
-    )
-    # per-source rank offsets via a second, source-rollup-sized scan in
-    # the SAME key order (the distributed form of the r09 driver walk —
-    # same rewrite as operators/scan_quantile.py; both scans use Spark's
-    # asc ordering, so the offsets index the global rank order exactly,
-    # with no collect and no Python-vs-UTF8 sort divergence)
-    totals = handles[0].groupBy("source").agg(F.count(F.lit(1)).cast("double").alias("_nd"))
-    offs = global_scan(
-        totals, [ScanSpec(("source",), val="_nd", cum="_cum")], persist_handles=handles
-    ).select(
-        "source",
-        (F.col("_cum") - F.col("_nd")).cast("long").alias("_off"),
-        F.col("_nd").cast("long").alias("_n"),
+    # The scan compares the string key in-engine (sampled struct
+    # boundaries); nothing is persisted and building runs no job.
+    ranked = global_scan(sc, [ScanSpec(("source", "s", "doc_id"), rank="_gr")])
+    # per-source rank offsets: a source's rows are contiguous in the
+    # scan order, so its offset is its smallest global rank - 1 (the
+    # distributed form of the r09 driver walk; Spark's own ordering, so
+    # no collect and no Python-vs-UTF8 sort divergence)
+    offs = ranked.groupBy("source").agg(
+        (F.min("_gr") - 1).alias("_off"), F.count(F.lit(1)).alias("_n")
     )
     p = ranked.join(offs, "source").select(
         "source",

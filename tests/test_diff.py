@@ -396,23 +396,29 @@ def test_global_scan_caps_bucket_count(spark):
     assert all(0 < n <= MAX_BUCKETS - 1 for n in n_bnds), n_bnds
 
 
+def _build_jobs(spark, group, build):
+    """Spark jobs launched while ``build()`` runs (it only builds a
+    DataFrame; executing it is the caller's business)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_global_scan_batching_adds_no_build_jobs(spark):
-    """Three specs over one frame launch no more build-time jobs than
-    one spec: boundaries and rollups ride one job each per call."""
+    """Building a scan runs no Spark job, for one spec or three over
+    one frame: boundaries and rollups are scalar subqueries of the
+    plan."""
     from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
-    sc = spark.sparkContext
     rows = [(i, i % 7, float((i * 13) % 29), float(i % 5)) for i in range(400)]
 
     def build_jobs(specs, group):
-        # a fresh frame per call, so neither call finds the other's cache
         df = spark.createDataFrame(rows, "id long, a long, b double, c double")
-        sc.setJobGroup(group, "global_scan build")
-        try:
-            global_scan(df, specs, num_buckets=4)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return _build_jobs(spark, group, lambda: global_scan(df, specs, num_buckets=4))
 
     one = build_jobs([ScanSpec(("a desc", "id"), rank="r1", n="n")], "scan-jobs-1")
     three = build_jobs(
@@ -423,7 +429,39 @@ def test_global_scan_batching_adds_no_build_jobs(spark):
         ],
         "scan-jobs-3",
     )
-    assert 0 < three <= one, (one, three)
+    assert (one, three) == (0, 0)
+
+
+def test_scan_consumers_build_no_jobs(spark):
+    """The registered scan, quantile and heavy-hitter consumers, and a
+    run_jx groupby-percentile query, build their DataFrames without
+    running a Spark job."""
+    from testlog_etl_spark import suite
+    from testlog_etl_spark.query import run_jx
+    from testlog_etl_spark.tables import TABLE_NAMES, load_tables
+    from tests.conftest import SF_SMALL
+
+    tables = load_tables(spark, SF_SMALL, TABLE_NAMES)  # schema jobs happen here
+    qs = suite.queries()
+    names = (
+        "orders_rfm_segments",
+        "topk_global_paging",
+        "agg_heavyhitters_mg",
+        "agg_lorenz_deciles",
+        "corpus_balanced_shards",
+        "stats_quantile_normalize",
+    )
+    got = {n: _build_jobs(spark, f"build-{n}", lambda n=n: qs[n](spark, SF_SMALL)) for n in names}
+    jx = {
+        "from": "orders",
+        "groupby": ["o_orderstatus"],
+        "select": [
+            {"name": "med", "value": "o_totalprice", "aggregate": "median"},
+            {"name": "p90", "value": "o_totalprice", "aggregate": "percentile", "percentile": 0.9},
+        ],
+    }
+    got["run_jx"] = _build_jobs(spark, "build-run_jx", lambda: run_jx(spark, jx, tables))
+    assert got == dict.fromkeys(got, 0), got
 
 
 def test_global_rank_inplan_rank_range_prunes_exactly(spark):
@@ -438,13 +476,14 @@ def test_global_rank_inplan_rank_range_prunes_exactly(spark):
     rows = [(i, float((i * 37) % 50)) for i in range(1000)]
     df = spark.createDataFrame(rows, "id long, v double")
     for order in (("v", "id"), ("v desc", "id")):
-        full = global_scan(df, [ScanSpec(order, rank="i")], num_buckets=8)
-        want = {r["id"]: r["i"] for r in full.collect() if 101 <= r["i"] <= 150}
-        paged = global_scan(df, [ScanSpec(order, rank="i", rank_range=(101, 150))], num_buckets=8)
-        got = {r["id"]: r["i"] for r in paged.filter(F.col("i").between(101, 150)).collect()}
-        assert got == want, order
-        # pruning must actually drop non-covering buckets' rows
-        assert paged.count() < 1000
+        full = {r["id"]: r["i"] for r in global_scan(df, [ScanSpec(order, rank="i")], num_buckets=8).collect()}
+        for lo, hi in ((1, 50), (101, 150), (951, 1000)):
+            want = {k: i for k, i in full.items() if lo <= i <= hi}
+            paged = global_scan(df, [ScanSpec(order, rank="i", rank_range=(lo, hi))], num_buckets=8)
+            got = {r["id"]: r["i"] for r in paged.filter(F.col("i").between(lo, hi)).collect()}
+            assert got == want, (order, lo, hi)
+            # pruning must actually drop non-covering buckets' rows
+            assert paged.count() < 1000
     # page beyond the data -> empty, not an error
     empty = global_scan(
         df, [ScanSpec(("v", "id"), rank="i", rank_range=(5000, 5100))], num_buckets=8
@@ -477,38 +516,75 @@ def test_global_rank_cumsum_inplan_matches_range_scan(spark):
     _check_scan(arr, ("a", "id"), 5)
 
 
+def _physical_nodes(node, in_subquery=False):
+    """(node, in_subquery) for every node of a physical plan, descending
+    into adaptive plans and subquery plans."""
+    yield node, in_subquery
+    kids = node.children()
+    if node.nodeName() == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    else:
+        kids = [kids.apply(i) for i in range(kids.size())]
+    for k in kids:
+        yield from _physical_nodes(k, in_subquery)
+    subs = node.subqueries()
+    for i in range(subs.size()):
+        yield from _physical_nodes(subs.apply(i), True)
+
+
 def test_global_rank_inplan_no_python_single_exchange(spark):
-    """Plan pins: no Python eval node anywhere, and the ranked output
-    adds exactly ONE exchange over the (cached) input."""
+    """Plan pins: no Python eval node anywhere, the subqueries
+    included; the main pass adds exactly ONE exchange over the input
+    (the subqueries' bounded exchanges are counted apart); and no array
+    column the input lacks rides that exchange."""
     from testlog_etl_spark.operators.scan import ScanSpec, global_scan
 
     df = spark.createDataFrame(
-        [(i, float(i % 9)) for i in range(500)], "id long, v double"
+        [(i, float(i % 9), [i]) for i in range(500)], "id long, v double, a array<long>"
     )
     out = global_scan(df, [ScanSpec(("v", "id"), rank="i")], num_buckets=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "MapInArrow" not in plan and "FlatMapGroupsInPandas" not in plan
-    assert plan.count("Exchange") == 1, plan
+    nodes = list(_physical_nodes(out._jdf.queryExecution().executedPlan()))
+    names = [n.nodeName() for n, _ in nodes]
+    assert any(sub for _, sub in nodes), names  # the build work is in the plan
+    python = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas", "FlatMapGroupsInPandas")
+    assert not [n for n in names if n in python], names
+    main = [n for n, sub in nodes if not sub and "Exchange" in n.nodeName()]
+    assert len(main) == 1, names
+    out_attrs = main[0].child().output()
+    arrays = {
+        out_attrs.apply(i).name()
+        for i in range(out_attrs.size())
+        if "array<" in out_attrs.apply(i).dataType().catalogString()
+    }
+    assert arrays <= {"a"}, arrays
 
 
-def test_global_rank_cumsum_persist_handles(spark):
+def test_scan_family_persists_nothing_and_recomputes_identically(spark):
+    """global_scan, group_quantiles_exact and heavy_hitters_exact are
+    lazy plans: building and executing each leaves the persisted-RDD
+    set unchanged, and a second execution returns the same rows."""
     from testlog_etl_spark.operators.scan import ScanSpec, global_scan
+    from testlog_etl_spark.operators.scan_quantile import group_quantiles_exact
+    from testlog_etl_spark.operators.sketches import heavy_hitters_exact
 
-    df = spark.createDataFrame([(i, float(i)) for i in range(10)], "id bigint, v double")
-    handles = []
-    out = global_scan(
-        df, [ScanSpec(("id",), val="v", cum="cum")], persist_handles=handles
-    )
-    assert out.count() == 10
-    [h] = handles
-    assert h.storageLevel.useMemory  # persisted while the plan is live
-    h.unpersist(blocking=True)
-    assert not h.storageLevel.useMemory
-    # boundaries and offsets are plan literals: a recompute agrees
-    assert [r["cum"] for r in out.orderBy("id").collect()] == [
-        float(sum(range(i + 1))) for i in range(10)
-    ]
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    rows = [(i, float(i % 13), f"k{i % 7}", f"t{min(i % 17, 3)}") for i in range(300)]
+    df = spark.createDataFrame(rows, "id bigint, v double, g string, t string")
+    builds = {
+        "scan": lambda: global_scan(
+            df, [ScanSpec(("v", "id"), rank="i", val="v", cum="cum", n="n")], num_buckets=4
+        ),
+        "quantiles": lambda: group_quantiles_exact(df, "g", "v", [0.5, 0.9], ["p50", "p90"]),
+        "heavy": lambda: heavy_hitters_exact(df, "t", k=5),
+    }
+    for name, build in builds.items():
+        before = persisted()
+        out = build()
+        first = sorted(map(tuple, out.collect()))
+        assert persisted() == before, name
+        assert first and sorted(map(tuple, out.collect())) == first, name
 
 
 def _running_max_replay(rows, exclusive):

@@ -741,6 +741,36 @@ def test_heavy_hitters_verify_is_candidate_pruned(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
+def test_heavy_hitters_reads_documents_twice(spark):
+    """One execution of agg_heavyhitters_mg scans documents exactly
+    twice, MG once and verification once: n rides the MG summary
+    subquery instead of a third pass. Counted from the scan nodes'
+    output rows in the executed plan (reused subqueries and exchanges
+    are not re-executed, so they are skipped)."""
+    from testlog_etl_spark.tables import load_tables
+
+    df = _q("agg_heavyhitters_mg")(spark, SF_SMALL)
+    df.collect()
+
+    def scanned(node):
+        name = node.nodeName()
+        if name in ("ReusedSubquery", "ReusedExchange"):
+            return 0
+        if name == "AdaptiveSparkPlan":
+            kids = [node.executedPlan()]
+        elif "QueryStage" in name:
+            kids = [node.plan()]
+        else:
+            kids = [node.children().apply(i) for i in range(node.children().size())]
+        subs = node.subqueries()
+        kids += [subs.apply(i) for i in range(subs.size())]
+        own = node.metrics().apply("numOutputRows").value() if name.startswith("Scan parquet") else 0
+        return own + sum(scanned(k) for k in kids)
+
+    n_docs = load_tables(spark, SF_SMALL, ("documents",))["documents"].count()
+    assert scanned(df._jdf.queryExecution().executedPlan()) == 2 * n_docs
+
+
 def test_erasure_cascade_counts_use_broadcast_semi(spark):
     """Both cascade levels are broadcast semi joins against the tiny
     erasure keyset -- the fact tables must not shuffle."""

@@ -38,12 +38,6 @@ WHITELIST: dict[str, str] = {
     "query.py::format_list": "caller-facing output format (see format_table)",
     "query.py::format_cube": "cube cells bounded by edge-domain cardinality product",
     "__main__.py::_show": "CLI presentation of an already-limited frame",
-    "operators/scan.py::global_scan": (
-        "boundary sample LIMIT-capped at 64*nb rows + per-bucket "
-        "(count,sum,max) rollup <= n_specs*nb rows, nb capped at "
-        "MAX_BUCKETS=256: bounded by the operator's bucket constant, "
-        "never the data"
-    ),
     "operators/packing.py::with_stream_offsets": "per-partition token totals: one row per range partition",
     "operators/edges.py::_resolve_others": "distinct edge parts capped by limit(e.limit or DEFAULT_EDGE_LIMIT)",
     "operators/bloom.py::build_bloom_bits": "fixed-size bitmap: one row per 64-bit word, m_words total",
