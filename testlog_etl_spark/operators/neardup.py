@@ -564,7 +564,6 @@ def jaccard_pairs_prefix_filtered(
     id_col: str,
     sh_col: str,
     threshold: float,
-    persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """All pairs with exact set-Jaccard >= threshold, WITHOUT the O(n^2)
     crossjoin: PPJoin-style prefix filtering (Xiao et al., WWW'08 --
@@ -595,16 +594,12 @@ def jaccard_pairs_prefix_filtered(
     sides) -- serially when the local scan is one file. Measured
     18.5 -> 5.6 s at sf0.1; at scale it trades one cached (id, set)
     pass for two recomputed ones, the same persist the minhash
-    signatures have always used. Long-lived sessions that call this
-    repeatedly should pass ``persist_handles`` and unpersist the
-    handle after their action (bench.py's between-query clearCache
-    covers the bench path).
+    signatures have always used. The cache lives until the session's
+    clearCache().
     """
     from testlog_etl_spark.util import spread
 
     d = persist_once(spread(d.select(F.col(id_col), F.col(sh_col))))
-    if persist_handles is not None:
-        persist_handles.append(d)
     tok = d.select(F.col(id_col).alias("_id"), F.explode(sh_col).alias("_s"))
     # doc frequency as a window count sharing the token exchange (r12,
     # guide 2.4): the previous groupBy rollup + join-back shuffled the

@@ -222,9 +222,9 @@ def weighted_exact_k(
     differences; ties after snapping break by id. Non-positive weights
     are excluded (they have no sampling mass).
 
-    Scale: ranking is delegated to operators/topk.py::grouped_topk --
-    Arrow-local prune then k-bounded merge, so no group ever sorts in
-    one task and the exchange is k-bounded. The classic reservoir
+    Scale: ranking is delegated to operators/topk.py::grouped_topk,
+    whose WindowGroupLimit keeps <= k rows per group before the
+    exchange, so the exchange is k-bounded. The classic reservoir
     formulation is sequential; this is its shuffle-disciplined batch
     equivalent.
     """

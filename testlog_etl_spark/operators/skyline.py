@@ -3,8 +3,7 @@ the rows not dominated in a (minimize x, maximize y) trade-off -- the
 "best price for at least this quality" readout every catalog/offer
 analysis wants and SQL can only state as an O(n^2) NOT EXISTS.
 
-Spark-first restatement: LOCAL-PRUNE THEN MERGE, the same shape as
-``operators/topk.py``'s grouped top-k. Dominance is closed under
+Spark-first restatement: LOCAL-PRUNE THEN MERGE. Dominance is closed under
 subsets -- a row dominated inside one partition is dominated globally,
 and a globally-undominated row is undominated in every subset that
 contains it -- so each partition can drop its locally-dominated rows

@@ -528,12 +528,10 @@ def mv_incremental_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "topk_per_group_agg",
-    doc="grouped top-k WITHOUT a ranking window (operators/topk.py): "
-    "Arrow-local batch prune (<=k per group per batch, zero shuffle) "
-    "then a k-bounded sort_array/slice merge -- the exchange carries "
-    "<= k x partitions rows per group where the window form moves and "
-    "sorts whole groups in single tasks. Top-3 orders by totalprice "
-    "per priority.",
+    doc="grouped top-k (operators/topk.py): row_number() <= k, which "
+    "Catalyst plans as a WindowGroupLimit before and after the group "
+    "exchange, so the exchange carries <= k x partitions rows per "
+    "group. Top-3 orders by totalprice per priority.",
     bench=True,
     oracle="""
 SELECT o_orderpriority, rank, o_orderkey, o_totalprice

@@ -233,9 +233,8 @@ ORDER BY id_a, id_b
     oracle=_JACCARD_ORACLE,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the operator persists its (id, shingles) input and this query keeps
-    # no handle: the cache lives until the session clears it (bench.py
-    # clears between queries)
+    # the operator persists its (id, shingles) projection; the cache lives
+    # until the session's clearCache() (bench.py clears between queries)
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     d = docs.select("doc_id", neardup.word_shingles(F.col("text")).alias("sh"))
     pairs = neardup.jaccard_pairs_prefix_filtered(d, "doc_id", "sh", 0.5)
@@ -2647,7 +2646,7 @@ def dedup_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(A-ExpJ restated: key = snapped ln(u)/weight from the id's md5, "
     "top-k by key -- operators/sampling.py::weighted_exact_k). "
     "Inclusion odds scale with doc length (n_chars); sticky per id, "
-    "no RNG; ranking rides the k-bounded grouped_topk merge.",
+    "no RNG; ranking rides grouped_topk's k-bounded WindowGroupLimit.",
     oracle="""
 SELECT source, rank, doc_id
 FROM (
@@ -4062,6 +4061,8 @@ ORDER BY th.threshold
 """,
 )
 def corpus_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the operator persists its (id, shingles) projection; the cache lives
+    # until the session's clearCache() (bench.py clears between queries)
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     d = docs.select("doc_id", neardup.word_shingles(F.col("text")).alias("sh"))
     pairs = neardup.jaccard_pairs_prefix_filtered(d, "doc_id", "sh", 0.5).select(

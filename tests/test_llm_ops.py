@@ -1032,26 +1032,46 @@ def test_countmin_merge_equals_union_and_overestimates(spark):
     assert all(r["est_n"] >= r["count"] for r in joined)  # never undercounts
 
 
-def test_grouped_topk_matches_window_form(spark):
-    from pyspark.sql import Window
+def _topk_replay(rows, k, descending):
+    """Pure-Python grouped top-k under the grouped_topk contract: NaN
+    and null order values rank last (NaN comes out as null), ties break
+    by id ascending, a null group key is its own group."""
+    groups = {}
+    for g, i, v in rows:
+        v = None if v is None or math.isnan(v) else v
+        groups.setdefault(g, []).append((i, v))
+    out = set()
+    for g, members in groups.items():
+        sign = -1.0 if descending else 1.0
+        members.sort(key=lambda r: (r[1] is None, 0.0 if r[1] is None else sign * r[1], r[0]))
+        out |= {(g, n + 1, i, repr(v)) for n, (i, v) in enumerate(members[:k])}
+    return out
+
+
+def test_grouped_topk_matches_python_replay(spark):
+    import random
 
     from testlog_etl_spark.operators.topk import grouped_topk
 
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 7).alias("g"),
-        F.col("id").alias("i"),
-        ((F.col("id") * 37) % 1000).cast("double").alias("v"),
-    ).repartition(13)  # many partitions -> local prune actually exercised
-    got = {
-        (r["g"], r["rank"]): r["i"]
-        for r in grouped_topk(df, ["g"], "v", "i", k=4).collect()
-    }
-    w = Window.partitionBy("g").orderBy(F.col("v").desc(), F.col("i"))
-    want = {
-        (r["g"], r["rn"]): r["i"]
-        for r in df.withColumn("rn", F.row_number().over(w)).filter("rn <= 4").collect()
-    }
-    assert got == want
+    rnd = random.Random(20261019)
+    special = [None, float("nan"), 0.0, -0.0, float("inf"), float("-inf"), 1.5, 1.5]
+    ids = list(range(3000))
+    rnd.shuffle(ids)
+    rows = [
+        (
+            rnd.choice([None, "a", "b", "c", "d", "e"]),
+            i,
+            rnd.choice(special) if rnd.random() < 0.3 else float(rnd.randint(-20, 20)),
+        )
+        for i in ids
+    ]
+    df = spark.createDataFrame(rows, "g string, i bigint, v double").repartition(7)
+    for k in (1, 3, 10):
+        for descending in (True, False):
+            out = grouped_topk(df, ["g"], "v", "i", k=k, descending=descending)
+            assert out.dtypes == [("g", "string"), ("rank", "int"), ("i", "bigint"), ("v", "double")]
+            got = {(r["g"], r["rank"], r["i"], repr(r["v"])) for r in out.collect()}
+            assert got == _topk_replay(rows, k, descending), (k, descending)
 
 
 def test_grouped_topk_null_group_and_null_values(spark):

@@ -807,6 +807,26 @@ def test_skyline_no_join_no_global_sort(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_grouped_topk_window_group_limit_below_exchange(spark):
+    """grouped_topk is the row_number() <= k window: Catalyst's
+    WindowGroupLimit keeps <= k rows per group before the group Exchange
+    (Partial) and again after it (Final), so the exchange is k-bounded,
+    no group sorts whole in one task, and no Python node runs."""
+    from testlog_etl_spark.planlint import unpartitioned_windows
+
+    for name in ("topk_per_group_agg", "sample_weighted_exact_k"):
+        df = _q(name)(spark, SF_SMALL)
+        plan = plan_of(df, "simple")
+        lines = plan.splitlines()
+        partial = [i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln and ln.endswith("Partial")]
+        assert partial, name
+        assert all("Exchange hashpartitioning" in lines[i - 1] for i in partial), name
+        assert any("WindowGroupLimit" in ln and ln.endswith("Final") for ln in lines), name
+        for node in ("MapInArrow", "BatchEvalPython", "ArrowEvalPython"):
+            assert node not in plan, (name, node)
+        assert unpartitioned_windows(df) == [], name
+
+
 def test_prefix_filter_join_has_no_cartesian(spark):
     # the whole point of the PPJoin restatement: candidate generation is
     # an EQUI-join on the token, never the O(n^2) crossjoin of the

@@ -29,7 +29,7 @@ SHOWCASE = [
     ("sessionize_batch", "per-user window chain over one exchange; session ids via running sum"),
     ("graph_pagerank", "per-round broadcast rank join + (node, double) sum shuffle"),
     ("mv_incremental_maintain", "MV merge: union of partials re-aggregated on the key"),
-    ("topk_per_group_agg", "grouped top-k: Arrow-local prune feeding a k-bounded slice/sort_array merge -- no ranking window, no whole-group sort"),
+    ("topk_per_group_agg", "grouped top-k: row_number() <= k with WindowGroupLimit Partial before the group exchange -- no whole-group sort, no Python"),
     ("dedup_hamming_prefix", "pigeonhole chunk equi-join candidates (exact); positionwise codegen verify after pair dedup"),
     ("snapshot_diff_orders", "CDC diff: ONE full-outer key exchange; null-safe compares in codegen"),
     ("q2_min_cost_supplier", "offer table reused for candidates AND per-part min; dims broadcast; TakeOrdered winner cut"),
