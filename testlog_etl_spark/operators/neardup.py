@@ -1,4 +1,5 @@
-"""Near-duplicate detection: MinHash+LSH, SimHash, n-gram Jaccard.
+"""Near-duplicate detection: MinHash+LSH, SimHash, n-gram Jaccard and
+containment.
 
 Scale design (the whole point of these over exact O(n^2) comparison):
 
@@ -16,6 +17,10 @@ Scale design (the whole point of these over exact O(n^2) comparison):
   distance d are found by pigeonhole blocking: split the signature into
   d+1 chunks -- any pair within d shares at least one exact chunk, which
   is again an equi-join, then verify with popcount.
+- Exact n-gram Jaccard and asymmetric containment share one lossless
+  candidate step, PPJoin prefix filtering (``_prefix_candidates``):
+  rarest-first token prefixes equi-joined against the full postings,
+  then an exact verify; neither runs a pair scan.
 """
 
 from __future__ import annotations
@@ -559,43 +564,43 @@ def editdist1_pairs(
     return cand.filter(F.levenshtein("key_a", "key_b") <= 1)
 
 
-def jaccard_pairs_prefix_filtered(
-    d: DataFrame,
-    id_col: str,
-    sh_col: str,
-    threshold: float,
-) -> DataFrame:
-    """All pairs with exact set-Jaccard >= threshold, WITHOUT the O(n^2)
-    crossjoin: PPJoin-style prefix filtering (Xiao et al., WWW'08 --
-    public algorithm, restated on DataFrames).
+def _prefix_candidates(
+    d: DataFrame, id_col: str, sh_col: str, threshold: float
+) -> tuple[DataFrame, DataFrame]:
+    """The one set-similarity candidate step: PPJoin-style prefix
+    filtering (Xiao et al., WWW'08 -- public algorithm, restated on
+    DataFrames). Returns the persisted ``(id_col, sh_col)`` projection
+    and ORDERED candidate rows ``(_id_p, _id_f)`` -- prefix-side id,
+    full-posting-side id, ``_id_p != _id_f``, not deduped.
 
-    Lossless-candidate argument (order-free variant): if J(x,y) >= t
-    then |x n y| >= t*|x| (since |x u y| >= |x|). Keep from each doc a
-    PREFIX of p = |x| - ceil(t*|x|) + 1 tokens; if prefix(x) shares no
-    token with y, the intersection fits in the other |x| - p =
-    ceil(t*|x|) - 1 < t*|x| tokens -- contradiction. So joining every
-    doc's prefix against the FULL posting list catches every qualifying
-    pair at least once, for ANY token order. Ordering tokens
-    rarest-first (global doc-frequency asc, token asc) is purely a
-    candidate-volume optimization: prefixes then hold the rarest
-    tokens, whose postings are shortest.
+    Lossless-candidate argument (order-free variant): every pair the
+    callers keep has |x n y| >= t*|x| for its prefix side x. Containment
+    C(x in y) = |x n y| / |x| >= t says exactly that, and J(x,y) >= t
+    implies it (since |x u y| >= |x|). Keep from each doc a PREFIX of
+    p = |x| - ceil(t*|x|) + 1 tokens; if prefix(x) shares no token with
+    y, the intersection fits in the other |x| - p = ceil(t*|x|) - 1 <
+    t*|x| tokens -- contradiction. So joining every doc's prefix against
+    the FULL posting list emits every qualifying (x, y) at least once,
+    for ANY token order. Ordering tokens rarest-first (global
+    doc-frequency asc, token asc) is purely a candidate-volume
+    optimization: prefixes then hold the rarest tokens, whose postings
+    are shortest.
 
-    Scale shape vs the brute-force id_a < id_b crossjoin (kept in
-    tests as this operator's oracle twin): shuffles are all LINEAR in token volume --
-    df count, sort-regroup per doc, prefix><postings equi-join keyed by
-    token -- and the only super-linear term is the candidate verify,
-    which is bounded by true-ish pairs instead of n^2/2. Skewed (stop-
-    word-like) tokens land in postings but rarely in prefixes, so the
-    join's build side per key stays proportional to RARE-token df.
+    Scale shape vs the brute-force pair scans (kept in tests as the
+    oracle twins): shuffles are all LINEAR in token volume -- df count,
+    sort-regroup per doc, prefix><postings equi-join keyed by token --
+    and the only super-linear term is the candidate verify, which is
+    bounded by true-ish pairs instead of n^2. Skewed (stop-word-like)
+    tokens land in postings but rarely in prefixes, so the join's build
+    side per key stays proportional to RARE-token df.
 
     The input projection is spread + persisted ONCE up front (r13):
-    `d` is typically scan+shingling, which this operator's plan
-    otherwise re-evaluates three times (token explode + both verify
-    sides) -- serially when the local scan is one file. Measured
-    18.5 -> 5.6 s at sf0.1; at scale it trades one cached (id, set)
-    pass for two recomputed ones, the same persist the minhash
-    signatures have always used. The cache lives until the session's
-    clearCache().
+    `d` is typically scan+shingling, which the plan otherwise
+    re-evaluates three times (token explode + both verify sides) --
+    serially when the local scan is one file. Measured 18.5 -> 5.6 s at
+    sf0.1; at scale it trades one cached (id, set) pass for two
+    recomputed ones, the same persist the minhash signatures have always
+    used. The cache lives until the session's clearCache().
     """
     from testlog_etl_spark.util import spread
 
@@ -605,10 +610,8 @@ def jaccard_pairs_prefix_filtered(
     # guide 2.4): the previous groupBy rollup + join-back shuffled the
     # token table twice to attach a per-token count it can carry out of
     # one partitionBy("_s") exchange
-    from pyspark.sql import Window as _W
-
     arr = (
-        tok.withColumn("_df", F.count(F.lit(1)).over(_W.partitionBy("_s")))
+        tok.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("_s")))
         .groupBy("_id")
         .agg(F.array_sort(F.collect_list(F.struct("_df", "_s"))).alias("_arr"))
     )
@@ -618,15 +621,24 @@ def jaccard_pairs_prefix_filtered(
         F.col("_id").alias("_id_p"),
         F.explode(F.slice("_arr", F.lit(1), p)).alias("_st"),
     ).select("_id_p", F.col("_st._s").alias("_s"))
-    cand = (
-        pref.join(tok.select(F.col("_id").alias("_id_f"), "_s"), "_s")
-        .filter(F.col("_id_p") != F.col("_id_f"))
-        .select(
-            F.least("_id_p", "_id_f").alias("id_a"),
-            F.greatest("_id_p", "_id_f").alias("id_b"),
-        )
-        .distinct()
-    )
+    cand = pref.join(tok.select(F.col("_id").alias("_id_f"), "_s"), "_s")
+    return d, cand.filter(F.col("_id_p") != F.col("_id_f"))
+
+
+def jaccard_pairs_prefix_filtered(
+    d: DataFrame,
+    id_col: str,
+    sh_col: str,
+    threshold: float,
+) -> DataFrame:
+    """All pairs ``(id_a < id_b)`` with exact set-Jaccard >= threshold,
+    WITHOUT the O(n^2) crossjoin: ``_prefix_candidates`` (see there for
+    why it is lossless) symmetrized, deduped once, verified exactly."""
+    d, cand = _prefix_candidates(d, id_col, sh_col, threshold)
+    cand = cand.select(
+        F.least("_id_p", "_id_f").alias("id_a"),
+        F.greatest("_id_p", "_id_f").alias("id_b"),
+    ).distinct()
     a = d.select(F.col(id_col).alias("id_a"), F.col(sh_col).alias("sh_a"))
     b = d.select(F.col(id_col).alias("id_b"), F.col(sh_col).alias("sh_b"))
     return (
@@ -635,4 +647,28 @@ def jaccard_pairs_prefix_filtered(
         .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
+    )
+
+
+def containment_pairs_prefix_filtered(
+    d: DataFrame,
+    id_col: str,
+    sh_col: str,
+    threshold: float,
+) -> DataFrame:
+    """All ORDERED pairs ``(id_a != id_b)`` with exact containment
+    C(A in B) = |A n B| / |A| >= threshold, WITHOUT the O(n^2) pair
+    scan: ``_prefix_candidates`` (see there for why it is lossless) with
+    the prefix side as A, deduped once, verified exactly."""
+    d, cand = _prefix_candidates(d, id_col, sh_col, threshold)
+    cand = cand.select(F.col("_id_p").alias("id_a"), F.col("_id_f").alias("id_b")).distinct()
+    a = d.select(F.col(id_col).alias("id_a"), F.col(sh_col).alias("sh_a"))
+    b = d.select(F.col(id_col).alias("id_b"), F.col(sh_col).alias("sh_b"))
+    c = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double") / F.size("sh_a")
+    return (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("containment", c)
+        .filter(F.col("containment") >= threshold)
+        .select("id_a", "id_b", "containment")
     )

@@ -153,9 +153,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "symmetric Jaccard structurally misses (the union term drowns the "
     "small side). One row per (contained, container) ordered pair at "
     "C >= 0.8 with |A| >= 3 shingles (degenerate tiny docs excluded on "
-    "both engines). An O(n^2) ordered pair scan (size-gated): no "
-    "lossless candidate path exists for this contract (C >= 0.8, no df "
-    "cap); dedup_containment_postings is the postings-join tier with a "
+    "both engines). Candidates come from the lossless PPJoin prefix "
+    "filter (operators/neardup.py::containment_pairs_prefix_filtered, "
+    "the candidate step dedup_ngram_jaccard uses), not a pair scan; "
+    "dedup_containment_postings is the postings-join tier with a "
     "df <= 64 boilerplate cap.",
     oracle=f"""
 WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
@@ -169,35 +170,19 @@ ORDER BY contained_id, container_id
 """,
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from testlog_etl_spark.util import spread
-
+    # the operator persists its (id, shingles) projection; the cache lives
+    # until the session's clearCache() (bench.py clears between queries)
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    d = spread(docs.select("doc_id", neardup.word_shingles(F.col("text")).alias("sh")))
-    a = d.filter(F.size("sh") >= 3).select(
-        F.col("doc_id").alias("contained_id"), F.col("sh").alias("sh_a"), F.size("sh").alias("_sa")
-    )
-    b = d.select(F.col("doc_id").alias("container_id"), F.col("sh").alias("sh_b"), F.size("sh").alias("_sb"))
-    c = (
-        F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-        / F.size("sh_a")
-    )
-    # r13 size gate (provably lossless, exact integer arithmetic):
-    # C = |A∩B|/|A| <= |B|/|A|, so C >= 0.8 requires 5|B| >= 4|A| --
-    # prunes the intersect for the ~38% of ordered pairs the bound
-    # excludes (|B|=0 pairs had C=0 and were filtered either way).
-    # when(gate, ...) and not a bare AND for the same canonicalization
-    # reason as dedup_embedding_cosine: the cheap tests must structurally
-    # guard the intersect. Still the full O(n^2) ordered pair scan the
-    # oracle states.
-    gate = (F.col("contained_id") != F.col("container_id")) & (
-        F.col("_sb") * 5 >= F.col("_sa") * 4
-    )
-    return (
-        a.join(b, F.when(gate, c >= 0.8).otherwise(F.lit(False)))
-        .withColumn("containment", c)
-        .select("contained_id", "container_id", F.round("containment", R).alias("containment"))
-        .orderBy("contained_id", "container_id")
-    )
+    d = docs.select("doc_id", neardup.word_shingles(F.col("text")).alias("sh"))
+    # filtering the container side too is exact: C >= 0.8 > 2/3 with
+    # |A| >= 3 forces |A∩B| >= 3, so |B| >= 3
+    d = d.filter(F.size("sh") >= 3)
+    pairs = neardup.containment_pairs_prefix_filtered(d, "doc_id", "sh", 0.8)
+    return pairs.select(
+        F.col("id_a").alias("contained_id"),
+        F.col("id_b").alias("container_id"),
+        F.round("containment", R).alias("containment"),
+    ).orderBy("contained_id", "container_id")
 
 
 _JACCARD_ORACLE = f"""
@@ -1486,8 +1471,6 @@ FROM sampled GROUP BY source ORDER BY source
 """,
 )
 def corpus_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from testlog_etl_spark.operators.filtering import filter_verdict
     from testlog_etl_spark.operators.sampling import hash_bucket
     from testlog_etl_spark.util import spread
@@ -2337,8 +2320,6 @@ GROUP BY source ORDER BY source
     "as an 8-byte anti-join probe.",
 )
 def corpus_build_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from testlog_etl_spark.operators.filtering import linear_quality_score
     from testlog_etl_spark.util import spread
 
@@ -2568,8 +2549,6 @@ ORDER BY shard, pos
 """,
 )
 def corpus_manifest_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     with_tok = docs.withColumn("n_tok", F.size(F.split("text", " ")).cast("long"))
     shuffled = sampling.epoch_shuffle(with_tok, "doc_id", n_shards=4, epoch=1)
@@ -2881,8 +2860,6 @@ FROM t
     oracle=_score_auc_oracle(),
 )
 def eval_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from testlog_etl_spark.operators import filtering
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"].filter(
@@ -3117,8 +3094,6 @@ FROM s
 """,
 )
 def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     tc = (
         docs.select(F.explode(textstats.tokens(F.lower(F.col("text")))).alias("tok"))
@@ -3331,8 +3306,6 @@ ORDER BY tier
 """,
 )
 def dedup_tier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     f = docs.select(
         "doc_id",
@@ -4278,8 +4251,6 @@ ORDER BY q_id, rank
     oracle=None,  # generated below
 )
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     codes_parts = []
     qd_parts = []
@@ -4324,12 +4295,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from testlog_etl_spark.operators.topk import grouped_topk
 
     top = grouped_topk(pairs, ["q_id"], "adc", "c_id", 5, descending=False)
-    w = Window.partitionBy("q_id").orderBy("adc", "c_id")
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select("q_id", "c_id", "adc", "rank")
-        .orderBy("q_id", "rank")
-    )
+    return top.select("q_id", "c_id", "adc", "rank").orderBy("q_id", "rank")
 
 
 _LLM_REG["sim_pq_adc_topk"].oracle = _pq_adc_oracle()
@@ -4728,8 +4694,6 @@ FROM r ORDER BY source
 """,
 )
 def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     g = float(1 << 20)
     s = docs.groupBy("source").agg(
@@ -5427,8 +5391,6 @@ def sim_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    from pyspark.sql import Window
-
     wr = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     rer = (
         rer_scored.withColumn("rn", F.row_number().over(wr))
@@ -5558,8 +5520,6 @@ LIMIT 15
 """,
 )
 def text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     tok = docs.select(
         "doc_id",
@@ -6278,8 +6238,8 @@ def text_self_similarity_diversity(spark: SparkSession, sf_dir: str) -> DataFram
     "dedup_containment_postings",
     doc="ASYMMETRIC near-dup tier: shingle containment C(A,B) = "
     "|S(A) n S(B)| / |S(A)| -- catches a short doc quoted or pasted "
-    "inside a longer one -- the SCALE path for the brute-force "
-    "dedup_containment tier above (same semantics, different plan): "
+    "inside a longer one -- the df <= 64-capped tier beside the exact "
+    "prefix-filter dedup_containment tier (C >= 0.8, no cap): "
     "distinct (doc, shingle) postings equi-join on the shingle -- "
     "candidate volume proportional to true co-occurrence, never "
     "all-pairs; shingles with document frequency > 64 are dropped "
@@ -6331,10 +6291,8 @@ def dedup_containment_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join-back shuffled the posting table twice to attach a per-key
     # count one partitionBy exchange can carry; identical kept set
     # (count per shingle == the rollup's count).
-    from pyspark.sql import Window as _W
-
     p = (
-        posting.withColumn("_df", F.count(F.lit(1)).over(_W.partitionBy("shingle")))
+        posting.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
         .filter(F.col("_df") <= 64)
         .drop("_df")
     )

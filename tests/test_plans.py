@@ -811,10 +811,11 @@ def test_grouped_topk_window_group_limit_below_exchange(spark):
     """grouped_topk is the row_number() <= k window: Catalyst's
     WindowGroupLimit keeps <= k rows per group before the group Exchange
     (Partial) and again after it (Final), so the exchange is k-bounded,
-    no group sorts whole in one task, and no Python node runs."""
+    no group sorts whole in one task, no Python node runs, and no
+    consumer numbers the kept rows a second time."""
     from testlog_etl_spark.planlint import unpartitioned_windows
 
-    for name in ("topk_per_group_agg", "sample_weighted_exact_k"):
+    for name in ("topk_per_group_agg", "sample_weighted_exact_k", "sim_pq_adc_topk"):
         df = _q(name)(spark, SF_SMALL)
         plan = plan_of(df, "simple")
         lines = plan.splitlines()
@@ -824,6 +825,7 @@ def test_grouped_topk_window_group_limit_below_exchange(spark):
         assert any("WindowGroupLimit" in ln and ln.endswith("Final") for ln in lines), name
         for node in ("MapInArrow", "BatchEvalPython", "ArrowEvalPython"):
             assert node not in plan, (name, node)
+        assert plan.count("Window [row_number()") == 1, name
         assert unpartitioned_windows(df) == [], name
 
 
@@ -831,7 +833,7 @@ def test_prefix_filter_join_has_no_cartesian(spark):
     # the whole point of the PPJoin restatement: candidate generation is
     # an EQUI-join on the token, never the O(n^2) crossjoin of the
     # brute-force oracle twin
-    for name in ("dedup_jaccard_prefixfilter", "dedup_ngram_jaccard"):
+    for name in ("dedup_jaccard_prefixfilter", "dedup_ngram_jaccard", "dedup_containment"):
         plan = plan_of(_q(name)(spark, SF_SMALL)).lower()
         assert "cartesianproduct" not in plan, name
         assert "broadcastnestedloop" not in plan, name

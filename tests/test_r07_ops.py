@@ -341,11 +341,20 @@ def test_bfs_levels_respects_iteration_cap(spark):
     assert lv == {1: 0, 2: 1, 3: 2, 4: 3}  # nodes 5.. beyond the cap excluded
 
 
-# ------------------------------------------- prefix-filtered Jaccard join
+# --------------------------- prefix-filtered Jaccard and containment joins
+
+
+def _shingles(text):
+    w = text.split()
+    return sorted({" ".join(w[i : i + 3]) for i in range(len(w) - 2)})
 
 
 def test_prefix_filter_matches_bruteforce_pairs(spark):
+    """Both prefix-filter operators against their brute-force pair-scan
+    twins: the unordered id_a < id_b Jaccard scan and the ordered
+    id_a != id_b containment scan, on sets of every size relation."""
     from testlog_etl_spark.operators.neardup import (
+        containment_pairs_prefix_filtered,
         jaccard,
         jaccard_pairs_prefix_filtered,
     )
@@ -359,22 +368,55 @@ def test_prefix_filter_matches_bruteforce_pairs(spark):
         (6, []),                          # empty set: never qualifies
         (7, ["q"]),
         (8, ["q"]),                       # J(7,8)=1.0 singleton sets
+        (9, _shingles("a b c d e f g h i j")),
+        (10, _shingles("a b c d e f g h i j")),   # identical to 9
+        (11, _shingles("a b c d e f")),           # prefix of 9: C(11 in 9)=1
+        (12, _shingles("a b c")),                 # tiny: one shingle
+        (13, _shingles("z z")),                   # < 3 tokens: empty set
+        (14, _shingles("a b c d e f g h i j k l m n o p q r s t")),  # double of 9
     ]
     d = spark.createDataFrame(rows, "doc_id long, sh array<string>").repartition(3)
+
+    def sides(da, db):
+        a = da.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
+        b = db.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
+        return a, b
+
     for t in (0.5, 0.9):
         got = {
             (r["id_a"], r["id_b"]): round(r["jaccard"], 6)
             for r in jaccard_pairs_prefix_filtered(d, "doc_id", "sh", t).collect()
         }
-        a = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-        b = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
+        a, b = sides(d, d)
         brute = (
             a.join(b, F.col("id_a") < F.col("id_b"))
             .withColumn("j", jaccard(F.col("sh_a"), F.col("sh_b")))
             .filter(F.col("j") >= t)
         )
         want = {(r["id_a"], r["id_b"]): round(r["j"], 6) for r in brute.collect()}
-        assert got == want, f"threshold {t}"
+        assert got == want and want, f"jaccard threshold {t}"
+
+    def contained(da, db, t):
+        a, b = sides(da.filter(F.size("sh") > 0), db)  # C(empty in B) is undefined
+        c = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size("sh_a")
+        brute = a.join(b, F.col("id_a") != F.col("id_b")).withColumn("c", c).filter(F.col("c") >= t)
+        return {(r["id_a"], r["id_b"]): r["c"] for r in brute.collect()}
+
+    # dedup_containment's pre-filter: |A| >= 3 on both sides
+    big = d.filter(F.size("sh") >= 3)
+    for t in (0.5, 0.8, 0.9):
+        for pre in (False, True):
+            src = big if pre else d
+            got = {
+                (r["id_a"], r["id_b"]): r["containment"]
+                for r in containment_pairs_prefix_filtered(src, "doc_id", "sh", t).collect()
+            }
+            assert got == contained(src, src, t) and got, f"containment threshold {t}, pre={pre}"
+            if pre and t > 2 / 3:
+                # the query's contract filters only the contained side;
+                # above 2/3, |A| >= 3 forces |B| >= 3, so the container
+                # side's filter drops nothing
+                assert got == contained(big, d, t), f"containment threshold {t}"
 
 
 # ------------------------------------------------------ largest remainder
